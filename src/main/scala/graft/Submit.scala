@@ -14,11 +14,12 @@ import graft.run.Pipeline
   * {{{
   * spark-submit --class graft.Submit cattlespark_2.13-0.1.0.jar \
   *   --pages    <parquet dir of (url, warc_ts, html, text, lang)> \
-  *   --out      <output dir: triples/ lineage/ edges/ metrics/ nq/> \
+  *   --out      <output dir or URI: triples/ edges/ lineage/ metrics/ serialized> \
   *   --descriptor <CSVW-style JSON mapping file> \
   *   [--gazetteer <file of "surface,entity_id" lines>] \
   *   [--buckets 256] [--run-id run-0] [--anchor-field country] \
   *   [--link-threshold 0.9] [--format nquads] [--gzip] \
+  *   [--trust-text true]        # false: text from html where text is NULL
   *   [--checkpoint-dir <dir>]   # enables RELIABLE lineage cuts
   *
   * # lifecycle delete (M3): remove the store this descriptor built
@@ -38,10 +39,9 @@ import graft.run.Pipeline
   * builder sets no master when one is provided); running the SAME jar
   * at N and 4N executors is the scaling protocol BENCH.md measures
   * with local[N]/local[4N] in this sandbox. The run is bucket-level
-  * resumable: re-submitting after ANY failure (including a kill
-  * between the triples append and the lineage commit —
-  * TripleEmitter.writeStage scaladoc) converges to the identical
-  * triple set. Prints the run metrics as one JSON line.
+  * resumable: re-submitting after ANY failure (lineage commits after
+  * every data table — TripleEmitter.writeStage scaladoc) converges to
+  * the identical triple set. Prints the run metrics as one JSON line.
   */
 object Submit {
 

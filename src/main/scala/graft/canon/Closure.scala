@@ -60,45 +60,16 @@ import graft.util.Cut
   */
 object Closure {
 
-  private def guard(maxIters: Int): Nothing = throw new IllegalStateException(
-    s"transitive closure did not converge within $maxIters rounds — " +
-      "graph deeper than expected; raise maxIters deliberately")
-
   def ancestors(edges: DataFrame, maxIters: Int = 30): DataFrame = {
     val e = Cut.cut(edges.select(col("child"), col("parent")))
-    var frontier = Cut.cut(
-      e.select(col("child"), col("parent").as("ancestor"), lit(1L).as("dist"))
-        .distinct()) // multi-edges collapse to one dist-1 pair
-    val rounds = scala.collection.mutable.ArrayBuffer(frontier)
-    def paths = rounds.reduce(_ unionByName _)
-    var done = false
-    while (!done) {
-      def hop(f: DataFrame) = f.alias("f")
+    val seed = e.select(col("child"), col("parent").as("ancestor"), lit(1L).as("dist"))
+      .distinct() // multi-edges collapse to one dist-1 pair
+    semiNaive(seed, Seq("child", "ancestor"), maxIters) { f =>
+      f.alias("f")
         .join(e.alias("e"), col("f.ancestor") === col("e.child"))
         .select(col("f.child"), col("e.parent").as("ancestor"),
           (col("f.dist") + 1).as("dist"))
-      val s1 = hop(frontier)
-      val s2 = hop(s1)
-      // anti-join first, then min-dist: the anti-join's
-      // (child, ancestor) clustering already covers the grouping, so
-      // the aggregate adds no exchange
-      val fresh = Cut.cut(
-        s1.unionByName(s2)
-          .join(paths, Seq("child", "ancestor"), "left_anti")
-          .groupBy(col("child"), col("ancestor"))
-          .agg(min(col("dist")).as("dist")))
-      // one driver probe per round on the materialized frame:
-      // convergence (NULL max) and the depth guard together
-      val maxd = fresh.agg(max(col("dist"))).first()
-      if (maxd.isNullAt(0)) {
-        done = true
-      } else {
-        if (maxd.getLong(0) > maxIters) guard(maxIters)
-        rounds += fresh
-        frontier = fresh
-      }
     }
-    paths // union of the materialized per-round RDDs
   }
 
   /** Seeded variant: the nodes that REACH `target` through 1+ hops,
@@ -111,28 +82,45 @@ object Closure {
     */
   def reaching(edges: DataFrame, target: String, maxIters: Int = 30): DataFrame = {
     val e = Cut.cut(edges.select(col("child"), col("parent")))
-    var frontier = Cut.cut(
-      e.filter(col("parent") === lit(target))
-        .select(col("child"), lit(1L).as("dist")).distinct())
+    val seed = e.filter(col("parent") === lit(target))
+      .select(col("child"), lit(1L).as("dist")).distinct()
+    semiNaive(seed, Seq("child"), maxIters) { f =>
+      f.withColumnRenamed("child", "mid").alias("f")
+        .join(e.alias("e"), col("e.parent") === col("f.mid"))
+        .select(col("e.child"), (col("f.dist") + 1).as("dist"))
+    }
+  }
+
+  /** The double-hop semi-naive loop (class doc) both closures run:
+    * `seed` is the dist-1 frontier, `key` the columns naming a reached
+    * pair or node, `hop` extends a frontier by one edge. Returns the
+    * union of the materialized per-round frames.
+    */
+  private def semiNaive(seed: DataFrame, key: Seq[String], maxIters: Int)(
+      hop: DataFrame => DataFrame): DataFrame = {
+    var frontier = Cut.cut(seed)
     val rounds = scala.collection.mutable.ArrayBuffer(frontier)
     def seen = rounds.reduce(_ unionByName _)
     var done = false
     while (!done) {
-      def hop(f: DataFrame) = f.withColumnRenamed("child", "mid").alias("f")
-        .join(e.alias("e"), col("e.parent") === col("f.mid"))
-        .select(col("e.child"), (col("f.dist") + 1).as("dist"))
       val s1 = hop(frontier)
       val s2 = hop(s1)
+      // anti-join first, then min-dist: the anti-join's key clustering
+      // already covers the grouping, so the aggregate adds no exchange
       val fresh = Cut.cut(
         s1.unionByName(s2)
-          .join(seen, Seq("child"), "left_anti")
-          .groupBy(col("child"))
+          .join(seen, key, "left_anti")
+          .groupBy(key.map(col): _*)
           .agg(min(col("dist")).as("dist")))
+      // one driver probe per round on the materialized frame:
+      // convergence (NULL max) and the depth guard together
       val maxd = fresh.agg(max(col("dist"))).first()
       if (maxd.isNullAt(0)) {
         done = true
       } else {
-        if (maxd.getLong(0) > maxIters) guard(maxIters)
+        if (maxd.getLong(0) > maxIters) throw new IllegalStateException(
+          s"transitive closure did not converge within $maxIters rounds — " +
+            "graph deeper than expected; raise maxIters deliberately")
         rounds += fresh
         frontier = fresh
       }

@@ -382,20 +382,22 @@ object Serializer {
       // (src/cattle.py:44-63) don't contain it, and neither does
       // formatTable — accepting it here while formats/extensions/
       // formatFor reject it left a half-removed alias (ADVICE round 2)
-      case "xml" | "rdfxml" => writeDriverDoc(toRdfXml(triples), path, gzip)
-      case "trix" => writeDriverDoc(toTrix(triples), path, gzip)
-      case "json-ld" => writeDriverDoc(toJsonLd(triples), path, gzip)
+      case "xml" | "rdfxml" => writeDriverDoc(triples.sparkSession, toRdfXml(triples), path, gzip)
+      case "trix" => writeDriverDoc(triples.sparkSession, toTrix(triples), path, gzip)
+      case "json-ld" => writeDriverDoc(triples.sparkSession, toJsonLd(triples), path, gzip)
       case other =>
         throw new IllegalArgumentException(
           s"unsupported format '$other' (supported: ${formats.keys.toSeq.sorted.mkString(", ")})")
     }
 
-  private def writeDriverDoc(doc: String, path: String, gzip: Boolean): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    if (gzip) {
-      val out = new java.util.zip.GZIPOutputStream(java.nio.file.Files.newOutputStream(p))
-      try out.write(doc.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
-    } else java.nio.file.Files.write(p, doc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  /** Writes through the Hadoop FileSystem `path` resolves to, so a
+    * `file:`/`hdfs:` URI lands where it names, as the distributed sinks do.
+    */
+  private def writeDriverDoc(spark: SparkSession, doc: String, path: String,
+      gzip: Boolean): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val raw = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    val out = if (gzip) new java.util.zip.GZIPOutputStream(raw) else raw
+    try out.write(doc.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
   }
 }

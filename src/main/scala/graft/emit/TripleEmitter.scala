@@ -1,5 +1,6 @@
 package graft.emit
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,15 +67,15 @@ object TripleEmitter {
     * Lineage is the completion signal AND the resume index (replaces
     * the reference's delete-the-inputs signal, src/cattle_process.py:18-29).
     *
-    * Crash-safety contract (orphaned-partition semantics): lineage
-    * commits strictly AFTER the triples append, so a run killed
-    * in between leaves ORPHANED triple rows with no lineage row. The
-    * bucket is then not in [[doneBuckets]], re-runs on resume, and
-    * appends a second copy — tolerated by design, because stage B's
-    * content-identity dedup collapses exact duplicates: the final
-    * triple set converges to the single-shot result (proven by the
-    * mid-write crash spec). The inverse order would be the unsafe one:
-    * a lineage row without its triples silently loses a bucket.
+    * Crash-safety contract: lineage commits LAST. A run appends every
+    * other data table for its buckets (the same-as edges) before this
+    * call, which appends the triples and then commits lineage. A run
+    * killed before the commit leaves ORPHANED rows with no lineage row:
+    * the bucket is not in [[doneBuckets]], re-runs on resume and appends
+    * a second copy — harmless, because stage B's content dedup collapses
+    * duplicate triples and duplicate edges leave the components as they
+    * were (the crash specs). Any other order is unsafe: a lineage row
+    * without its triples or edges silently loses them.
     */
   def writeStage(
       spark: SparkSession,
@@ -100,12 +101,29 @@ object TripleEmitter {
     * and silently empty the remaining work; a literal `isin` filter is
     * also partition-prunable at the scan, which an anti-join is not.
     */
-  def doneBuckets(spark: SparkSession, outDir: String, ruleSetHash: String): Set[Int] = {
-    val p = new java.io.File(s"$outDir/lineage")
-    if (!p.exists()) Set.empty
+  def doneBuckets(spark: SparkSession, outDir: String, ruleSetHash: String): Set[Int] =
+    if (!exists(spark, s"$outDir/lineage")) Set.empty
     else spark.read.parquet(s"$outDir/lineage")
       .filter(col("status") === "ok" && col("rule_set_hash") === ruleSetHash)
       .select("bucket").distinct()
       .collect().map(_.getInt(0)).toSet
+
+  /** Every materialized same-as edge (`src, dst`), empty when the store
+    * has none. The schema is explicit: a gazetteer-less run writes an
+    * edge-free `edges/` (just `_SUCCESS`), where schema inference throws.
+    */
+  def readEdges(spark: SparkSession, outDir: String): DataFrame =
+    if (exists(spark, s"$outDir/edges"))
+      spark.read.schema("src STRING, dst STRING, bucket INT")
+        .parquet(s"$outDir/edges").select("src", "dst")
+    else spark.emptyDataFrame.select(lit("").as("src"), lit("").as("dst")).limit(0)
+
+  /** Store existence check through the Hadoop FileSystem that `path`
+    * resolves to, so plain paths and `file:`/`hdfs:` URIs answer alike
+    * (`java.io.File` reads every URI as absent).
+    */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 }

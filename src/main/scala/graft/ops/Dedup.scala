@@ -42,11 +42,6 @@ object Dedup {
     docs.groupBy(md5(col("text")).as("fp"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("group_size"))
 
-  /** Normalized-exact dedup (case/punct-insensitive fingerprint). */
-  def normalizedExact(docs: DataFrame): DataFrame =
-    docs.groupBy(TextOps.fingerprint(col("text")).as("fp"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("group_size"))
-
   // ---------- shingling ----------
 
   /** Distinct word n-gram shingles of a text column. */

@@ -173,31 +173,22 @@ object Pipeline {
       cfg: Config): (DataFrame, RunMetrics) = {
     import spark.implicits._
     val t0 = System.nanoTime()
-    val outDir = cfg.outDir.getOrElse(sys.error("runResumable requires outDir"))
-    val hash = TableSpec.ruleSetHash(cfg.descriptorJson)
-    val skipped = TripleEmitter.doneBuckets(spark, outDir, hash).size
-    val out = runResumable(spark, pages, cfg)
-    val outCount = out.count()
-    val lineage = spark.read.parquet(s"$outDir/lineage")
-      .filter(col("rule_set_hash") === lit(hash))
+    val r = resume(spark, pages, cfg)
+    val outCount = r.out.count()
+    val lineage = spark.read.parquet(s"${r.outDir}/lineage")
+      .filter(col("rule_set_hash") === lit(r.hash))
       .agg(countDistinct(col("bucket")), sum(col("triples")), sum(col("subjects")))
       .first()
-    val edgesDir = new java.io.File(s"$outDir/edges")
-    val nEdges =
-      if (edgesDir.exists())
-        spark.read.schema("src STRING, dst STRING, bucket INT")
-          .parquet(s"$outDir/edges").count()
-      else 0L
-    val m = RunMetrics(cfg.runId, hash,
-      buckets_done = lineage.getLong(0) - skipped,
-      buckets_skipped = skipped.toLong,
+    val m = RunMetrics(cfg.runId, r.hash,
+      buckets_done = lineage.getLong(0) - r.skipped,
+      buckets_skipped = r.skipped.toLong,
       triples_materialized = lineage.getLong(1),
       subjects = lineage.getLong(2),
-      edges = nEdges,
+      edges = r.edges.count(),
       triples_out = outCount,
       wall_ms = (System.nanoTime() - t0) / 1000000L)
-    Seq(m).toDS().write.mode(SaveMode.Append).parquet(s"$outDir/metrics")
-    (out, m)
+    Seq(m).toDS().write.mode(SaveMode.Append).parquet(s"${r.outDir}/metrics")
+    (r.out, m)
   }
 
   /** Lifecycle delete (M3 — the reference removes a conversion's whole
@@ -219,21 +210,20 @@ object Pipeline {
     val storeDirs = Seq("triples", "edges", "lineage", "metrics", "serialized")
     val root = new Path(outDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lineagePath = new Path(root, "lineage")
     val removed =
-      if (!fs.exists(lineagePath)) {
+      if (!TripleEmitter.exists(spark, s"$outDir/lineage")) {
         // no lineage table = ownership UNVERIFIABLE. Data with no
         // lineage (mid-write crash leftovers, or a mistyped --out
         // pointing at a foreign directory) must not be deleted on an
         // unverified claim (code-review round 4); only a fully empty
         // store is the idempotent 0-row no-op.
-        val dataDirs = storeDirs.filter(d => fs.exists(new Path(root, d)))
+        val dataDirs = storeDirs.filter(d => TripleEmitter.exists(spark, s"$outDir/$d"))
         require(force || dataDirs.isEmpty,
           s"store $outDir has data (${dataDirs.mkString(",")}) but no lineage " +
             "table — ownership unverifiable, refusing to delete (force=true overrides)")
         0L
       } else {
-        val lineage = spark.read.parquet(lineagePath.toString)
+        val lineage = spark.read.parquet(s"$outDir/lineage")
         val hashes = lineage.select("rule_set_hash").distinct()
           .collect().map(_.getString(0)).toSet
         require(force || hashes.subsetOf(Set(ruleSetHash)),
@@ -250,7 +240,17 @@ object Pipeline {
     * recomputes the global canonical triple set from everything
     * materialized. Returns the final deduped triples.
     */
-  def runResumable(spark: SparkSession, pages: Dataset[Page], cfg: Config): DataFrame = {
+  def runResumable(spark: SparkSession, pages: Dataset[Page], cfg: Config): DataFrame =
+    resume(spark, pages, cfg).out
+
+  /** One resumable run: the store it ran against, the final triples,
+    * how many buckets the lineage snapshot let it skip, and the edge
+    * store stage B canonicalized over.
+    */
+  private final case class Resumed(outDir: String, hash: String, out: DataFrame,
+      skipped: Int, edges: DataFrame)
+
+  private def resume(spark: SparkSession, pages: Dataset[Page], cfg: Config): Resumed = {
     val outDir = cfg.outDir.getOrElse(sys.error("runResumable requires outDir"))
     val hash = TableSpec.ruleSetHash(cfg.descriptorJson)
     val done = TripleEmitter.doneBuckets(spark, outDir, hash) // eager snapshot
@@ -263,20 +263,15 @@ object Pipeline {
 
     if (!todo.isEmpty) {
       val (triples, edges) = stageA(spark, todo, cfg)
-      TripleEmitter.writeStage(spark, triples, outDir, hash, cfg.runId)
+      // edges land before writeStage commits lineage (its scaladoc)
       edges.write.mode(SaveMode.Append).partitionBy("bucket").parquet(s"$outDir/edges")
+      TripleEmitter.writeStage(spark, triples, outDir, hash, cfg.runId)
     }
 
     val allTriples = spark.read.parquet(s"$outDir/triples").drop("bucket")
-    val edgesDir = new java.io.File(s"$outDir/edges")
-    // explicit schema: a gazetteer-less run writes an edge-free store
-    // (just _SUCCESS), where schema INFERENCE throws — found driving
-    // Submit without --gazetteer
-    val allEdges =
-      if (edgesDir.exists())
-        spark.read.schema("src STRING, dst STRING, bucket INT")
-          .parquet(s"$outDir/edges").select("src", "dst")
-      else spark.emptyDataFrame.select(lit("").as("src"), lit("").as("dst")).limit(0)
-    stageB(spark, allTriples, allEdges, cfg.maxCcIterations, cfg.broadcastCanonLimit)
+    val allEdges = TripleEmitter.readEdges(spark, outDir)
+    Resumed(outDir, hash,
+      stageB(spark, allTriples, allEdges, cfg.maxCcIterations, cfg.broadcastCanonLimit),
+      done.size, allEdges)
   }
 }

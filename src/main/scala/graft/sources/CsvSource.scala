@@ -42,12 +42,6 @@ object CsvSource {
       .option("inferSchema", false) // lexical-form discipline: strings in
       .csv(path)
 
-  /** TSV = CSV with a tab dialect (the reference renames the file and
-    * converts identically).
-    */
-  def readTsv(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
-    read(spark, path, Dialect(delimiter = "\t"), header)
-
   /** 1-based `{_row}` column for CSV parity fixtures. Small-scale only
     * by design: the unpartitioned window is the honest cost of global
     * physical-position identity, which the web pipeline forbids.

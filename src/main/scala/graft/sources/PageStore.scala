@@ -1,19 +1,19 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.emit.TripleEmitter
 import graft.model.Page
 
-/** Thin table facade over the page/triple stores (SURVEY.md §7.0:
+/** Thin table facade over the parquet page store (SURVEY.md §7.0:
   * "Iceberg is represented by a TripleStore/PageStore facade over
-  * partitioned Parquet — identical read/write surface; swap to
-  * format("iceberg") is a one-liner when the runtime has the jar").
+  * partitioned Parquet — identical read/write surface").
   *
-  * The layout rules are the scale-relevant part and survive the swap:
-  *  - pages partition by `bucket = pmod(xxhash64(url), nBuckets)` —
-  *    content-derived, never positional, so writes are deterministic
-  *    under any parallelism and resume keys are stable;
+  * The layout rules are the scale-relevant part:
+  *  - pages partition by the run's own [[TripleEmitter.bucketOf]] over
+  *    `url` — content-derived, never positional, so writes are
+  *    deterministic under any parallelism and resume keys are stable;
   *  - the BINARY `html` column lives in its own parquet column so any
   *    reader that doesn't select it never deserializes it (input_hint:
   *    html dominates page size — PlanAuditSpec pins this);
@@ -22,22 +22,15 @@ import graft.model.Page
   */
 object PageStore {
 
-  /** Swap point: "parquet" locally; "iceberg" when the catalog+jar
-    * exist. Nothing else in the engine changes.
-    */
-  val format: String = sys.env.getOrElse("SPARK_GRAFT_TABLE_FORMAT", "parquet")
-
-  def bucketCol(n: Int) = pmod(xxhash64(col("url")), lit(n)).cast("int").as("bucket")
-
   def write(pages: Dataset[Page], path: String, nBuckets: Int = 64,
       mode: SaveMode = SaveMode.Overwrite): Unit =
     pages.toDF()
-      .withColumn("bucket", bucketCol(nBuckets))
-      .write.mode(mode).partitionBy("bucket").format(format).save(path)
+      .withColumn("bucket", TripleEmitter.bucketOf(col("url"), nBuckets))
+      .write.mode(mode).partitionBy("bucket").parquet(path)
 
   def read(spark: SparkSession, path: String): Dataset[Page] = {
     import spark.implicits._
-    spark.read.format(format).load(path)
+    spark.read.parquet(path)
       .select("url", "warc_ts", "html", "text", "lang").as[Page]
   }
 
@@ -46,7 +39,7 @@ object PageStore {
     */
   def readBuckets(spark: SparkSession, path: String, buckets: Seq[Int]): Dataset[Page] = {
     import spark.implicits._
-    spark.read.format(format).load(path)
+    spark.read.parquet(path)
       .filter(col("bucket").isin(buckets: _*))
       .select("url", "warc_ts", "html", "text", "lang").as[Page]
   }

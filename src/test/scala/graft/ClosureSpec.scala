@@ -35,6 +35,18 @@ class ClosureSpec extends AnyFunSuite {
     Closure.ancestors(edges.toDF("child", "parent").repartition(5), maxIters)
       .as[(String, String, Long)].collect().toSet
 
+  /** `reaching` against the same model: backward to `target`, and
+    * forward from `source` over the swapped edges.
+    */
+  def checkSeeded(edges: Seq[(String, String)], target: String, source: String): Unit = {
+    val m = model(edges)
+    def reach(es: Seq[(String, String)], seed: String) =
+      Closure.reaching(es.toDF("child", "parent").repartition(5), seed)
+        .as[(String, Long)].collect().toSet
+    assert(reach(edges, target) == m.collect { case (c, `target`, d) => (c, d) })
+    assert(reach(edges.map(_.swap), source) == m.collect { case (`source`, a, d) => (a, d) })
+  }
+
   test("closure: chain + shortcut — min dist wins over the long path; matches scalar BFS") {
     // a->b->c->d->root, plus a->root shortcut (dist 1 beats 4)
     val edges = Seq("a" -> "b", "b" -> "c", "c" -> "d", "d" -> "root", "a" -> "root")
@@ -42,6 +54,7 @@ class ClosureSpec extends AnyFunSuite {
     assert(got == model(edges))
     assert(got.contains(("a", "root", 1L)))
     assert(got.contains(("b", "root", 3L)))
+    checkSeeded(edges, target = "root", source = "a")
   }
 
   test("closure: diamond DAG — both paths found once, at the shared min dist") {
@@ -50,6 +63,7 @@ class ClosureSpec extends AnyFunSuite {
     assert(got == model(edges))
     assert(got.count { case (c, a, _) => c == "x" && a == "t" } == 1)
     assert(got.contains(("x", "t", 2L)) && got.contains(("x", "z", 3L)))
+    checkSeeded(edges, target = "t", source = "x")
   }
 
   test("closure: cycle terminates with every reachable pair, incl. self at cycle length") {
@@ -57,6 +71,7 @@ class ClosureSpec extends AnyFunSuite {
     val got = run(edges)
     assert(got == model(edges))
     assert(got.contains(("p", "p", 3L)))
+    checkSeeded(edges, target = "p", source = "p")
   }
 
   test("closure: maxIters guard throws instead of silently truncating") {
@@ -64,5 +79,8 @@ class ClosureSpec extends AnyFunSuite {
     val ex = intercept[IllegalStateException] { run(chain, maxIters = 3) }
     assert(ex.getMessage.contains("converge"))
     assert(run(chain, maxIters = 8) == model(chain)) // depth 8 exactly fits
+    intercept[IllegalStateException] {
+      Closure.reaching(chain.toDF("child", "parent"), "c8", maxIters = 3)
+    }
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.emit.TripleEmitter
 import graft.fixtures.Fixtures
 import graft.run.{Descriptors, Pipeline}
 
@@ -85,8 +86,10 @@ class PipelineSpec extends AnyFunSuite {
 
     // simulate a run killed BETWEEN the triples append and the lineage
     // commit inside TripleEmitter.writeStage (triples for two buckets
-    // on disk; no lineage row, no edges — the exact partial state that
-    // write order produces)
+    // on disk; no lineage row). The run appends edges before
+    // writeStage, so a real kill here also leaves those buckets' edges;
+    // they orphan and re-append like the triples, and CC ignores the
+    // duplicates — this spec leaves them out
     val crashed = pages.toDF()
       .filter(pmod(xxhash64(col("url")), lit(8)) < 2).as[graft.model.Page]
     val (triples, _) = Pipeline.stageA(spark, crashed, c)
@@ -110,6 +113,39 @@ class PipelineSpec extends AnyFunSuite {
     // a further run sees every bucket committed and changes nothing
     val again = toSet(Pipeline.runResumable(spark, pages, c.copy(runId = "r2")))
     assert(again == oneShot)
+  }
+
+  test("edge append fails mid-run: no lineage for its buckets, resume equals one-shot") {
+    val dir = Files.createTempDirectory("graft-edgekill").toString
+    val pages = Fixtures.pages(spark, 60, 5)
+    val c = cfg(Some(dir))
+    val oneShot = toSet(Pipeline.run(spark, pages, c))
+    val killed = pages.toDF()
+      .filter(TripleEmitter.bucketOf(col("url"), 8) < 2).as[graft.model.Page]
+    assert(Pipeline.stageA(spark, killed, c)._2.count() >= 1,
+      "the killed buckets must yield same-as edges, or losing them shows nothing")
+
+    // a plain file where edges/ belongs makes the edge append throw,
+    // leaving the store as a kill at that append would; lineage must
+    // not have committed these buckets by then
+    val blocker = java.nio.file.Paths.get(s"$dir/edges")
+    Files.writeString(blocker, "")
+    intercept[Exception](Pipeline.runResumable(spark, killed, c))
+    Files.delete(blocker)
+
+    val resumed = toSet(Pipeline.runResumable(spark, pages, c.copy(runId = "r1")))
+    assert(resumed == oneShot)
+  }
+
+  test("file: URI store: resumable run equals one-shot, a re-run skips every bucket") {
+    val dir = Files.createTempDirectory("graft-uri").toString
+    val pages = Fixtures.pages(spark, 40, 4)
+    val c = cfg(Some(s"file:$dir"))
+    val (out1, m1) = Pipeline.runResumableWithMetrics(spark, pages, c)
+    assert(toSet(out1) == toSet(Pipeline.run(spark, pages, c)))
+    val (_, m2) = Pipeline.runResumableWithMetrics(spark, pages, c.copy(runId = "r2"))
+    assert(m2.buckets_skipped == m1.buckets_done && m2.buckets_done == 0)
+    assert(m1.edges > 0 && m2.edges == m1.edges, "same-as edges read back from the URI store")
   }
 
   test("M2 metrics: counters persisted, resume reflected in skip counts") {

@@ -171,6 +171,13 @@ class SourcesAndSinksSpec extends AnyFunSuite {
     assert("\"@value\": \"12\"".r.findAllIn(jsonld).length == 1)
   }
 
+  test("K2: driver-side documents write through Hadoop FileSystem (file: URI path)") {
+    val base = Files.createTempDirectory("serjsonld").toString
+    Serializer.write(sampleTriples(), s"file:$base/out/g.jsonld", "json-ld")
+    assert(Files.readString(java.nio.file.Paths.get(s"$base/out/g.jsonld")) ==
+      Serializer.toJsonLd(sampleTriples()))
+  }
+
   test("K3/K4: gzip sink + content negotiation table") {
     val base = Files.createTempDirectory("sergz").toString
     Serializer.write(sampleTriples(), s"$base/nq", "nquads", gzip = true)
