@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{SparkSession, functions => F}
 
+import graft.emit.TripleEmitter.readString
 import graft.model.Page
 import graft.run.Pipeline
 
@@ -93,8 +92,7 @@ object Submit {
 
     val gazetteer: Seq[(String, String)] = o.get("gazetteer") match {
       case Some(f) =>
-        scala.jdk.CollectionConverters.ListHasAsScala(
-          Files.readAllLines(Paths.get(f))).asScala.toSeq
+        readString(spark, f).linesIterator.toSeq
           .map(_.trim).filter(_.nonEmpty)
           .map { line =>
             val i = line.indexOf(',')
@@ -107,8 +105,7 @@ object Submit {
     // lifecycle delete (M3): --delete --out <dir> --descriptor <json>
     // removes the store the descriptor's rule-set hash owns and exits
     if (o.contains("delete")) {
-      val hash = graft.spec.TableSpec.ruleSetHash(
-        Files.readString(Paths.get(req("descriptor"))))
+      val hash = graft.spec.TableSpec.ruleSetHash(readString(spark, req("descriptor")))
       val removed = Pipeline.delete(spark, req("out"), hash,
         force = o.contains("force"))
       println(s"""{"deleted":"${req("out")}","rule_set_hash":"$hash","lineage_rows":$removed}""")
@@ -138,7 +135,7 @@ object Submit {
     }
 
     val cfg = Pipeline.Config(
-      descriptorJson = Files.readString(Paths.get(req("descriptor"))),
+      descriptorJson = readString(spark, req("descriptor")),
       gazetteer = gazetteer,
       outDir = Some(req("out")),
       nBuckets = o.getOrElse("buckets", "256").toInt,

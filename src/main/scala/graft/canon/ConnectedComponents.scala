@@ -29,12 +29,20 @@ import org.apache.spark.sql.functions._
 object ConnectedComponents {
 
   /** Edge-count threshold below which CC runs as driver-side
-    * union-find — the graph analogue of a broadcast join: when the
-    * DISTINCT same-as edge set (not the page corpus!) fits on the
-    * driver, the iterative shuffle loop's per-round scheduling cost
-    * dwarfs the actual work. Real web same-as graphs are sparse
-    * relative to the corpus; above the threshold the distributed loop
-    * takes over.
+    * union-find — a broadcast join in the graph sense, and literally
+    * one: when the DISTINCT same-as edge set (not the page corpus!)
+    * fits on the driver, the iterative shuffle loop's per-round
+    * scheduling cost dwarfs the actual work, so the edges are
+    * collected, labelled by [[localCC]], and the labels go back out in
+    * ONE `SparkContext.broadcast`. The returned frame is
+    * `spark.range(n)` reading row `i` from it, so its plan has the same
+    * size for 100 edges or 2M (a `LocalRelation` of the labels would be
+    * carried through every downstream analysis, optimizer pass and AQE
+    * re-plan, row by row on the driver). The broadcast is owned by the
+    * result, like [[graft.util.Cut]]'s blocks: the frame's plan holds
+    * it, and the ContextCleaner drops it once the frame is unreachable.
+    * Real web same-as graphs are sparse relative to the corpus; above
+    * the threshold the distributed loop takes over.
     */
   val localEdgeThreshold: Long = 2000000L
 
@@ -80,6 +88,13 @@ object ConnectedComponents {
   /** [[run]] plus the distributed round count actually executed (0 for
     * the driver union-find path) — the observable the skew-stress spec
     * pins to the O(log diameter) bound.
+    *
+    * The distributed loop never returns unconverged labels: convergence
+    * is detected by one extra round that changes nothing, so a graph
+    * whose labels settle in round k needs `maxIter >= k + 1`, and a loop
+    * that reaches `maxIter` without that quiet round throws an
+    * `IllegalStateException` (as [[Closure]] does) instead of handing
+    * back a component split over several "canonical" URIs.
     */
   def runCounted(spark: SparkSession, edges: DataFrame, maxIter: Int = 25,
       localThreshold: Long = localEdgeThreshold): (DataFrame, Int) = {
@@ -93,8 +108,11 @@ object ConnectedComponents {
       .distinct())
 
     if (e0.count() <= localThreshold) {
-      val pairs = e0.as[(String, String)].collect()
-      return (localCC(pairs.iterator).toSeq.toDF("node", "comp"), 0)
+      val labels = localCC(e0.as[(String, String)].collect().iterator).toArray
+      val b = spark.sparkContext.broadcast(labels)
+      val cc = spark.range(labels.length)
+        .mapPartitions { ids => val a = b.value; ids.map(i => a(i.toInt)) }
+      return (cc.toDF("node", "comp"), 0)
     }
 
     val sym = cut(e0
@@ -139,6 +157,8 @@ object ConnectedComponents {
       comp = jumped
       iter += 1
     }
+    if (!done) throw new IllegalStateException(
+      s"connected components not converged after $iter rounds (maxIter = $maxIter)")
     (comp, iter)
   }
 

@@ -392,11 +392,16 @@ object Serializer {
 
   /** Writes through the Hadoop FileSystem `path` resolves to, so a
     * `file:`/`hdfs:` URI lands where it names, as the distributed sinks do.
+    * Whatever is at `path` is deleted first, matching their
+    * `SaveMode.Overwrite`: an earlier distributed format leaves a
+    * directory there, which `create` cannot overwrite.
     */
   private def writeDriverDoc(spark: SparkSession, doc: String, path: String,
       gzip: Boolean): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val raw = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(p, true)
+    val raw = fs.create(p, true)
     val out = if (gzip) new java.util.zip.GZIPOutputStream(raw) else raw
     try out.write(doc.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
   }

@@ -126,4 +126,14 @@ object TripleEmitter {
     val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  /** A whole small file as UTF-8 text, read through the same Hadoop
+    * FileSystem as [[exists]] (`Submit`'s descriptor and gazetteer).
+    */
+  def readString(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
 }

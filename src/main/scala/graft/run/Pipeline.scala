@@ -121,8 +121,9 @@ object Pipeline {
     val cc = ConnectedComponents.run(spark, edges.select("src", "dst"), maxCcIterations)
     val cmap = ConnectedComponents.canonicalMap(cc) // (uri, canonical)
 
-    // cmap derives from CC output that is already checkpointed (or
-    // driver-local), so this count is one cheap job, not a recompute
+    // cmap derives from CC output that is already checkpointed, or on
+    // the driver path reads the label broadcast through a plan of fixed
+    // size, so this count is one cheap job, not a recompute
     val hintOn = cmap.count() <= broadcastCanonLimit
     def hint(df: DataFrame): DataFrame = if (hintOn) broadcast(df) else df
 

@@ -142,4 +142,43 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       assert(r1 == r2, s"threshold=$thr")
     }
   }
+
+  test("driver path: plan size does not grow with the graph (labels leave in one broadcast)") {
+    // serialized bytes, not the plan string: a LocalRelation prints only
+    // its output columns, however many rows it carries
+    def analyzedSize(n: Int): Int = {
+      val chain = (0 until n).map(i => (f"n$i%06d", f"n${i + 1}%06d")).toDF("src", "dst")
+      val plan = ConnectedComponents.run(spark, chain).queryExecution.analyzed
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      try out.writeObject(plan) finally out.close()
+      bytes.size()
+    }
+    val small = analyzedSize(100)
+    val big = analyzedSize(20000)
+    assert(big <= small, s"analyzed plan grew with the graph: $small -> $big bytes")
+  }
+
+  test("driver path: two actions across a GC return identical rows (the frame keeps its broadcast)") {
+    val edges = (0 until 500).map(i => (f"g$i%04d", f"g${(i * 7) % 500}%04d"))
+    val cc = ConnectedComponents.run(spark, edges.toDF("src", "dst"))
+    val first = cc.collect().toSeq
+    System.gc()
+    Thread.sleep(200) // let the ContextCleaner act on whatever the GC released
+    val second = cc.collect().toSeq
+    assert(first == second)
+    assert(first.map(r => r.getString(0) -> r.getString(1)).toMap == oracle(edges))
+  }
+
+  test("distributed loop throws at maxIter instead of returning unconverged labels") {
+    // a path with random labels needs far more than 2 rounds (min-label
+    // propagation plus pointer jumping only shortcuts monotone chains)
+    val order = new scala.util.Random(11).shuffle((0 until 64).map(i => f"r$i%02d"))
+    val path = order.zip(order.tail).toDF("src", "dst")
+    val e = intercept[IllegalStateException] {
+      ConnectedComponents.run(spark, path, maxIter = 2, localThreshold = 0)
+    }
+    assert(e.getMessage.contains("after 2 rounds") && e.getMessage.contains("maxIter = 2"),
+      e.getMessage)
+  }
 }

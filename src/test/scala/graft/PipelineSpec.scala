@@ -189,6 +189,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.read.text(s"$base/out/serialized").count() == want)
   }
 
+  test("spark-submit surface: --descriptor and --gazetteer accept file: URIs (run and --delete)") {
+    val base = Files.createTempDirectory("graft-submit-uri").toString
+    Fixtures.pages(spark, 40, 4).toDF().write.parquet(s"$base/pages")
+    Files.writeString(java.nio.file.Paths.get(s"$base/desc.json"), Descriptors.imfJson)
+    Files.writeString(java.nio.file.Paths.get(s"$base/gaz.csv"),
+      Fixtures.gazetteer.map { case (s, e) => s"$s,$e" }.mkString("\r\n"))
+    Submit.main(Array(
+      "--pages", s"$base/pages", "--out", s"$base/out",
+      "--descriptor", s"file:$base/desc.json", "--gazetteer", s"file:$base/gaz.csv",
+      "--buckets", "8"))
+    // the gazetteer was read: without it no entity is linked and the
+    // canonicalized golden set (mentions rewritten to minted URIs) differs
+    val got = spark.read.text(s"$base/out/serialized").as[String].collect().toSet
+    assert(got.size == TestOracle.expectedAll(40).size)
+    assert(got.exists(_.contains("<http://schema.org/mentions> <http://graft.local/imf/country/")))
+
+    Submit.main(Array("--delete", "--out", s"$base/out", "--descriptor", s"file:$base/desc.json"))
+    assert(!new java.io.File(s"$base/out/triples").exists())
+    assert(!new java.io.File(s"$base/out/lineage").exists())
+  }
+
   test("spark-submit surface: --pack-shards lands the shard store; resubmit is a no-op") {
     val base = Files.createTempDirectory("graft-packcli").toString
     (0L until 300L).map(i => (i, ("tok " * (1 + (i % 40).toInt)).trim))

@@ -178,6 +178,16 @@ class SourcesAndSinksSpec extends AnyFunSuite {
       Serializer.toJsonLd(sampleTriples()))
   }
 
+  test("K2: a driver-side document overwrites an earlier distributed output at the same path") {
+    val base = Files.createTempDirectory("seroverwrite").toString
+    val out = s"$base/serialized"
+    Serializer.write(sampleTriples(), out, "nquads")
+    assert(new java.io.File(out).isDirectory)
+    Serializer.write(sampleTriples(), out, "json-ld")
+    assert(new java.io.File(out).isFile, "json-ld must replace the N-Quads directory")
+    assert(Files.readString(java.nio.file.Paths.get(out)) == Serializer.toJsonLd(sampleTriples()))
+  }
+
   test("K3/K4: gzip sink + content negotiation table") {
     val base = Files.createTempDirectory("sergz").toString
     Serializer.write(sampleTriples(), s"$base/nq", "nquads", gzip = true)
