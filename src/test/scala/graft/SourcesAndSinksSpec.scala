@@ -123,6 +123,194 @@ class SourcesAndSinksSpec extends AnyFunSuite {
     assert(trig.contains("<http://g/g2> {"))
   }
 
+  /** [[sampleTriples]] plus adversarial rows: a literal holding
+    * backslash, quote, newline and tab; a region-subtagged language
+    * tag; a typed literal; IRI objects in and out of the prefix
+    * namespace; one triple repeated in a second graph (the triple
+    * formats keep it once, the quad formats twice).
+    */
+  def goldenTriples() = sampleTriples().union(Seq(
+    ("http://g/s3", "http://g/p3", "literal", "a\\b\"c\nd\te", null: String, null: String, "http://g/g1"),
+    ("http://g/s3", "http://g/p4", "literal", "bonjour", null: String, "fr-BE", "http://g/g2"),
+    ("http://g/s3", "http://g/p5", "literal", "2024-01-31",
+      "http://www.w3.org/2001/XMLSchema#date", null: String, "http://g/g2"),
+    ("http://g/s3", "http://g/p2", "iri", "http://other/o2", null: String, null: String, "http://g/g2"),
+    ("http://g/s1", "http://g/p2", "iri", "http://g/o1", null: String, null: String, "http://g/g2")
+  ).toDF("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang", "g"))
+
+  test("K2: golden bytes of every format (distributed parts as sorted lines, documents whole)") {
+    val base = Files.createTempDirectory("sergolden").toString
+    val pfx = Map("g" -> "http://g/", "xsd" -> "http://www.w3.org/2001/XMLSchema#")
+    val ttl = Seq(
+      "    <http://g/p1> \"12\"^^<http://www.w3.org/2001/XMLSchema#integer> .",
+      "    <http://g/p1> \"va\\\"l1\"@en ;",
+      "    <http://g/p2> <http://g/o1> .",
+      "    <http://g/p2> <http://other/o2> ;",
+      "    <http://g/p3> \"a\\\\b\\\"c\\nd\\te\" ;",
+      "    <http://g/p4> \"bonjour\"@fr-BE ;",
+      "    <http://g/p5> \"2024-01-31\"^^<http://www.w3.org/2001/XMLSchema#date> .",
+      "<http://g/s1>",
+      "<http://g/s2>",
+      "<http://g/s3>")
+    val lines: Map[String, Seq[String]] = Map(
+      "nquads" -> Seq(
+        "<http://g/s1> <http://g/p1> \"va\\\"l1\"@en <http://g/g1> .",
+        "<http://g/s1> <http://g/p2> <http://g/o1> <http://g/g1> .",
+        "<http://g/s1> <http://g/p2> <http://g/o1> <http://g/g2> .",
+        "<http://g/s2> <http://g/p1> \"12\"^^<http://www.w3.org/2001/XMLSchema#integer> <http://g/g2> .",
+        "<http://g/s3> <http://g/p2> <http://other/o2> <http://g/g2> .",
+        "<http://g/s3> <http://g/p3> \"a\\\\b\\\"c\\nd\\te\" <http://g/g1> .",
+        "<http://g/s3> <http://g/p4> \"bonjour\"@fr-BE <http://g/g2> .",
+        "<http://g/s3> <http://g/p5> \"2024-01-31\"^^<http://www.w3.org/2001/XMLSchema#date> <http://g/g2> ."),
+      "nt" -> Seq(
+        "<http://g/s1> <http://g/p1> \"va\\\"l1\"@en .",
+        "<http://g/s1> <http://g/p2> <http://g/o1> .",
+        "<http://g/s2> <http://g/p1> \"12\"^^<http://www.w3.org/2001/XMLSchema#integer> .",
+        "<http://g/s3> <http://g/p2> <http://other/o2> .",
+        "<http://g/s3> <http://g/p3> \"a\\\\b\\\"c\\nd\\te\" .",
+        "<http://g/s3> <http://g/p4> \"bonjour\"@fr-BE .",
+        "<http://g/s3> <http://g/p5> \"2024-01-31\"^^<http://www.w3.org/2001/XMLSchema#date> ."),
+      "turtle" -> ttl,
+      "n3" -> ttl,
+      "trig" -> Seq(
+        "  <http://g/s1> <http://g/p1> \"va\\\"l1\"@en .",
+        "  <http://g/s1> <http://g/p2> <http://g/o1> .",
+        "  <http://g/s1> <http://g/p2> <http://g/o1> .",
+        "  <http://g/s2> <http://g/p1> \"12\"^^<http://www.w3.org/2001/XMLSchema#integer> .",
+        "  <http://g/s3> <http://g/p2> <http://other/o2> .",
+        "  <http://g/s3> <http://g/p3> \"a\\\\b\\\"c\\nd\\te\" .",
+        "  <http://g/s3> <http://g/p4> \"bonjour\"@fr-BE .",
+        "  <http://g/s3> <http://g/p5> \"2024-01-31\"^^<http://www.w3.org/2001/XMLSchema#date> .",
+        "<http://g/g1> {",
+        "<http://g/g2> {",
+        "}",
+        "}"))
+    for ((f, want) <- lines) {
+      Serializer.write(goldenTriples(), s"$base/$f", f)
+      assert(readText(s"$base/$f").sorted == want, f)
+    }
+    Serializer.writeTurtle(goldenTriples(), s"$base/ttlp", prefixes = pfx)
+    assert(readText(s"$base/ttlp").sorted == Seq(
+      "    g:p1 \"12\"^^xsd:integer .",
+      "    g:p1 \"va\\\"l1\"@en ;",
+      "    g:p2 <http://other/o2> ;",
+      "    g:p2 g:o1 .",
+      "    g:p3 \"a\\\\b\\\"c\\nd\\te\" ;",
+      "    g:p4 \"bonjour\"@fr-BE ;",
+      "    g:p5 \"2024-01-31\"^^xsd:date .",
+      "@prefix g: <http://g/> .",
+      "@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .",
+      "g:s1",
+      "g:s2",
+      "g:s3"))
+    Serializer.writeTrig(goldenTriples(), s"$base/trigp", prefixes = pfx)
+    assert(readText(s"$base/trigp").sorted == Seq(
+      "  g:s1 g:p1 \"va\\\"l1\"@en .",
+      "  g:s1 g:p2 g:o1 .",
+      "  g:s1 g:p2 g:o1 .",
+      "  g:s2 g:p1 \"12\"^^xsd:integer .",
+      "  g:s3 g:p2 <http://other/o2> .",
+      "  g:s3 g:p3 \"a\\\\b\\\"c\\nd\\te\" .",
+      "  g:s3 g:p4 \"bonjour\"@fr-BE .",
+      "  g:s3 g:p5 \"2024-01-31\"^^xsd:date .",
+      "@prefix g: <http://g/> .",
+      "@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .",
+      "g:g1 {",
+      "g:g2 {",
+      "}",
+      "}"))
+
+    val docs: Map[String, Seq[String]] = Map(
+      "rdfxml" -> Seq(
+        "<?xml version=\"1.0\" encoding=\"UTF-8\"?>",
+        "<rdf:RDF xmlns:rdf=\"http://www.w3.org/1999/02/22-rdf-syntax-ns#\">",
+        "  <rdf:Description rdf:about=\"http://g/s1\">",
+        "    <p1 xmlns=\"http://g/\" xml:lang=\"en\">va&quot;l1</p1>",
+        "  </rdf:Description>",
+        "  <rdf:Description rdf:about=\"http://g/s1\">",
+        "    <p2 xmlns=\"http://g/\" rdf:resource=\"http://g/o1\"/>",
+        "  </rdf:Description>",
+        "  <rdf:Description rdf:about=\"http://g/s2\">",
+        "    <p1 xmlns=\"http://g/\" rdf:datatype=\"http://www.w3.org/2001/XMLSchema#integer\">12</p1>",
+        "  </rdf:Description>",
+        "  <rdf:Description rdf:about=\"http://g/s3\">",
+        "    <p3 xmlns=\"http://g/\">a\\b&quot;c",
+        "d\te</p3>",
+        "  </rdf:Description>",
+        "  <rdf:Description rdf:about=\"http://g/s3\">",
+        "    <p4 xmlns=\"http://g/\" xml:lang=\"fr-BE\">bonjour</p4>",
+        "  </rdf:Description>",
+        "  <rdf:Description rdf:about=\"http://g/s3\">",
+        "    <p5 xmlns=\"http://g/\" rdf:datatype=\"http://www.w3.org/2001/XMLSchema#date\">2024-01-31</p5>",
+        "  </rdf:Description>",
+        "  <rdf:Description rdf:about=\"http://g/s3\">",
+        "    <p2 xmlns=\"http://g/\" rdf:resource=\"http://other/o2\"/>",
+        "  </rdf:Description>",
+        "  <rdf:Description rdf:about=\"http://g/s1\">",
+        "    <p2 xmlns=\"http://g/\" rdf:resource=\"http://g/o1\"/>",
+        "  </rdf:Description>",
+        "</rdf:RDF>",
+        ""),
+      "trix" -> Seq(
+        "<?xml version=\"1.0\" encoding=\"UTF-8\"?>",
+        "<TriX xmlns=\"http://www.w3.org/2004/03/trix/trix-1/\">",
+        "  <graph>",
+        "    <uri>http://g/g1</uri>",
+        "    <triple>",
+        "      <uri>http://g/s1</uri>",
+        "      <uri>http://g/p1</uri>",
+        "      <plainLiteral xml:lang=\"en\">va&quot;l1</plainLiteral>",
+        "    </triple>",
+        "    <triple>",
+        "      <uri>http://g/s1</uri>",
+        "      <uri>http://g/p2</uri>",
+        "      <uri>http://g/o1</uri>",
+        "    </triple>",
+        "    <triple>",
+        "      <uri>http://g/s3</uri>",
+        "      <uri>http://g/p3</uri>",
+        "      <plainLiteral>a\\b&quot;c",
+        "d\te</plainLiteral>",
+        "    </triple>",
+        "  </graph>",
+        "  <graph>",
+        "    <uri>http://g/g2</uri>",
+        "    <triple>",
+        "      <uri>http://g/s2</uri>",
+        "      <uri>http://g/p1</uri>",
+        "      <typedLiteral datatype=\"http://www.w3.org/2001/XMLSchema#integer\">12</typedLiteral>",
+        "    </triple>",
+        "    <triple>",
+        "      <uri>http://g/s3</uri>",
+        "      <uri>http://g/p4</uri>",
+        "      <plainLiteral xml:lang=\"fr-BE\">bonjour</plainLiteral>",
+        "    </triple>",
+        "    <triple>",
+        "      <uri>http://g/s3</uri>",
+        "      <uri>http://g/p5</uri>",
+        "      <typedLiteral datatype=\"http://www.w3.org/2001/XMLSchema#date\">2024-01-31</typedLiteral>",
+        "    </triple>",
+        "    <triple>",
+        "      <uri>http://g/s3</uri>",
+        "      <uri>http://g/p2</uri>",
+        "      <uri>http://other/o2</uri>",
+        "    </triple>",
+        "    <triple>",
+        "      <uri>http://g/s1</uri>",
+        "      <uri>http://g/p2</uri>",
+        "      <uri>http://g/o1</uri>",
+        "    </triple>",
+        "  </graph>",
+        "</TriX>",
+        ""),
+      "json-ld" -> Seq(
+        "[{\"@id\": \"http://g/g1\", \"@graph\": [{\"@id\": \"http://g/s1\", \"http://g/p1\": [{\"@value\": \"va\\\"l1\", \"@language\": \"en\"}], \"http://g/p2\": [{\"@id\": \"http://g/o1\"}]}, {\"@id\": \"http://g/s3\", \"http://g/p3\": [{\"@value\": \"a\\\\b\\\"c\\nd\\te\"}]}]}, {\"@id\": \"http://g/g2\", \"@graph\": [{\"@id\": \"http://g/s1\", \"http://g/p2\": [{\"@id\": \"http://g/o1\"}]}, {\"@id\": \"http://g/s2\", \"http://g/p1\": [{\"@value\": \"12\", \"@type\": \"http://www.w3.org/2001/XMLSchema#integer\"}]}, {\"@id\": \"http://g/s3\", \"http://g/p2\": [{\"@id\": \"http://other/o2\"}], \"http://g/p4\": [{\"@value\": \"bonjour\", \"@language\": \"fr-BE\"}], \"http://g/p5\": [{\"@value\": \"2024-01-31\", \"@type\": \"http://www.w3.org/2001/XMLSchema#date\"}]}]}]"))
+    for ((f, want) <- docs + ("xml" -> docs("rdfxml"))) {
+      Serializer.write(goldenTriples(), s"$base/doc.$f", f)
+      assert(Files.readString(java.nio.file.Paths.get(s"$base/doc.$f")) == want.mkString("\n"), f)
+    }
+  }
+
   test("K2: turtle/trig @prefix compaction — directives per part, safe PN_LOCAL fallback") {
     val base = Files.createTempDirectory("serp").toString
     val pfx = Map("g" -> "http://g/", "xsd" -> "http://www.w3.org/2001/XMLSchema#")
