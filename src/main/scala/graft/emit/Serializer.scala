@@ -1,11 +1,12 @@
 package graft.emit
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** RDF re-serialization (reference K2/K4: 9 output serializations with
   * extension + MIME tables at src/cattle.py:45-63, format picker in
-  * src/templates/download_page.html; negotiation at :312-328).
+  * src/templates/download_page.html; negotiation at :312-328). The one
+  * module that renders RDF terms; [[TripleEmitter]] owns the parquet store.
   *
   * Scale split (SURVEY.md §2.1 K2):
   *  - line-oriented formats (nquads, ntriples) are DISTRIBUTED text
@@ -56,25 +57,60 @@ object Serializer {
   def formatFor(accept: String): Option[String] =
     formatTable.collectFirst { case (f, _, mime) if mime == accept => f }
 
-  // ---------- term rendering (driver+executor scala; mirrors nqLine) ----------
+  // ---------- term rendering: Column trees for line sinks, Scala on executors ----------
 
-  def escape(s: String): String =
+  /** N-Triples string escaping (grammar: ECHAR). Literal `replace`
+    * chain — backslash FIRST. Codegen'd; no regex, no UDF.
+    */
+  def nqEscape(c: Column): Column =
+    replace(
+      replace(
+        replace(
+          replace(
+            replace(c, lit("\\"), lit("\\\\")),
+            lit("\""), lit("\\\"")),
+          lit("\n"), lit("\\n")),
+        lit("\r"), lit("\\r")),
+      lit("\t"), lit("\\t"))
+
+  /** [[nqEscape]] for the grouped writers' executor-side Scala. */
+  private def escape(s: String): String =
     s.replace("\\", "\\\\").replace("\"", "\\\"")
       .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
 
-  def renderObject(kind: String, lex: String, dt: String, lang: String): String =
-    if (kind == "iri") s"<$lex>"
+  /** `<s> <p> object` followed by `tail`, the object term rendered as
+    * `<iri>` or a quoted escaped literal with `@lang` or `^^<datatype>`.
+    */
+  private def statement(tail: Column*): Column = {
+    val obj = when(col("o_kind") === "iri", concat(lit("<"), col("o_lex"), lit(">")))
+      .otherwise(
+        concat(
+          lit("\""), nqEscape(col("o_lex")), lit("\""),
+          when(col("o_lang").isNotNull, concat(lit("@"), col("o_lang")))
+            .otherwise(
+              when(col("o_datatype").isNotNull,
+                concat(lit("^^<"), col("o_datatype"), lit(">")))
+                .otherwise(lit("")))))
+    concat(Seq(lit("<"), col("s"), lit("> <"), col("p"), lit("> "), obj) ++ tail: _*)
+  }
+
+  /** One N-Quads line from the flat triple columns. */
+  def nqLine: Column = statement(lit(" <"), col("g"), lit("> ."))
+
+  /** The object term of a triple row on executors, compacted through
+    * `prefixes` as in [[compactTerm]]; with no prefixes it is the term
+    * [[nqLine]] renders.
+    */
+  private def objectTerm(r: Row, prefixes: Seq[(String, String)]): String =
+    if (r.getAs[String]("o_kind") == "iri") compactTerm(r.getAs[String]("o_lex"), prefixes)
     else {
+      val (lang, dt) = (r.getAs[String]("o_lang"), r.getAs[String]("o_datatype"))
       val tag =
         if (lang != null) s"@$lang"
-        else if (dt != null) s"^^<$dt>"
+        else if (dt != null) s"^^${compactTerm(dt, prefixes)}"
         else ""
-      "\"" + escape(lex) + "\"" + tag
+      "\"" + escape(r.getAs[String]("o_lex")) + "\"" + tag
     }
-
-  private def obj(r: Row): String =
-    renderObject(r.getAs[String]("o_kind"), r.getAs[String]("o_lex"),
-      r.getAs[String]("o_datatype"), r.getAs[String]("o_lang"))
 
   // ---------- prefix compaction (turtle / trig / n3) ----------
 
@@ -101,17 +137,6 @@ object Serializer {
         s"$p:${iri.substring(ns.length)}"
     }.getOrElse(s"<$iri>")
 
-  private def objCompact(r: Row, pfx: Seq[(String, String)]): String =
-    if (r.getAs[String]("o_kind") == "iri") compactTerm(r.getAs[String]("o_lex"), pfx)
-    else {
-      val tag =
-        if (r.getAs[String]("o_lang") != null) s"@${r.getAs[String]("o_lang")}"
-        else if (r.getAs[String]("o_datatype") != null)
-          s"^^${compactTerm(r.getAs[String]("o_datatype"), pfx)}"
-        else ""
-      "\"" + escape(r.getAs[String]("o_lex")) + "\"" + tag
-    }
-
   /** Longest-namespace-first directive order (deterministic compaction
     * when namespaces nest) + the `@prefix` header block.
     */
@@ -123,101 +148,93 @@ object Serializer {
 
   // ---------- distributed sinks ----------
 
-  /** N-Triples: drop the graph, distinct, distributed text write. */
-  def writeNt(triples: DataFrame, path: String, gzip: Boolean = false): Unit = {
-    val line = concat(
-      lit("<"), col("s"), lit("> <"), col("p"), lit("> "),
-      when(col("o_kind") === "iri", concat(lit("<"), col("o_lex"), lit(">")))
-        .otherwise(concat(
-          lit("\""), TripleEmitter.nqEscape(col("o_lex")), lit("\""),
-          when(col("o_lang").isNotNull, concat(lit("@"), col("o_lang")))
-            .otherwise(when(col("o_datatype").isNotNull,
-              concat(lit("^^<"), col("o_datatype"), lit(">"))).otherwise(lit(""))))),
-      lit(" ."))
-    val w = triples.dropDuplicates("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang")
-      .select(line.as("value")).write.mode(SaveMode.Overwrite)
+  private val tripleCols = Seq("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang")
+
+  /** The one text sink: one string per row, overwriting, optionally
+    * gzip (reference K3, src/cattle.py:313-319).
+    */
+  private def writeText(lines: Dataset[_], path: String, gzip: Boolean): Unit = {
+    val w = lines.toDF("value").write.mode(SaveMode.Overwrite)
     (if (gzip) w.option("compression", "gzip") else w).text(path)
   }
 
-  /** Turtle (and N3, a superset): subject-grouped blocks. Range
-    * partition on subject so each subject's triples land in ONE
-    * partition; sort within; stream-group in a mapPartitions. No
-    * driver materialization at any scale.
+  /** Distributed N-Quads sink over already-deduplicated quads. */
+  def writeNq(triples: DataFrame, path: String, gzip: Boolean = false): Unit =
+    writeText(triples.select(nqLine.as("value")), path, gzip)
+
+  /** N-Triples: drop the graph, distinct, distributed text write. */
+  def writeNt(triples: DataFrame, path: String, gzip: Boolean = false): Unit =
+    writeText(triples.dropDuplicates(tripleCols).select(statement(lit(" .")).as("value")),
+      path, gzip)
+
+  /** Grouped-block writer behind turtle and TriG. Range-partition on
+    * `keys` so each group lands in ONE partition, sort within
+    * partitions, and stream one `block` per run of equal `keys.head`
+    * values in a mapPartitions. No driver materialization at any scale.
     *
-    * `prefixes` (prefix → namespace) enables `@prefix` compaction:
-    * every non-empty partition leads with the directive block —
-    * Turtle allows re-declaration, so part files still concatenate
-    * into one valid document AND each part stays self-contained.
-    * Terms the registered namespaces don't cover (or whose local part
-    * isn't a safe PN_LOCAL) stay full IRIs.
+    * With `prefixes` (prefix → namespace) every non-empty partition
+    * leads with the `@prefix` block — Turtle and TriG allow
+    * re-declaration, so part files still concatenate into one valid
+    * document AND each part stays self-contained.
     */
-  def writeTurtle(triples: DataFrame, path: String, gzip: Boolean = false,
-      prefixes: Map[String, String] = Map.empty): Unit = {
-    val spark = triples.sparkSession
+  private def groupedBlocks(rows: DataFrame, keys: Seq[String], prefixes: Map[String, String])(
+      block: (String, Iterator[Row], Seq[(String, String)]) => String): Dataset[String] = {
+    val spark = rows.sparkSession
     import spark.implicits._
     val pfx = prefixSeq(prefixes)
-    val sorted = triples
-      .dropDuplicates("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang")
-      .select("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang")
-      .repartitionByRange(col("s"))
-      .sortWithinPartitions("s", "p", "o_lex")
-    val blocks = sorted.mapPartitions { it =>
-      val in = it.buffered
-      val header =
-        if (pfx.nonEmpty && in.hasNext) Iterator(prefixHeader(pfx)) else Iterator.empty
-      header ++ new Iterator[String] {
-        def hasNext: Boolean = in.hasNext
-        def next(): String = {
-          val s = in.head.getAs[String]("s")
-          val sb = new StringBuilder(compactTerm(s, pfx))
-          var first = true
-          while (in.hasNext && in.head.getAs[String]("s") == s) {
-            val r = in.next()
-            sb.append(if (first) "\n    " else " ;\n    ")
-            sb.append(s"${compactTerm(r.getAs[String]("p"), pfx)} ${objCompact(r, pfx)}")
-            first = false
+    val key = keys.head
+    rows.repartitionByRange(keys.map(col): _*)
+      .sortWithinPartitions((keys :+ "p" :+ "o_lex").map(col): _*)
+      .mapPartitions { it =>
+        val in = it.buffered
+        val header =
+          if (pfx.nonEmpty && in.hasNext) Iterator(prefixHeader(pfx)) else Iterator.empty
+        header ++ new Iterator[String] {
+          def hasNext: Boolean = in.hasNext
+          def next(): String = {
+            val k = in.head.getAs[String](key)
+            block(k, new Iterator[Row] {
+              def hasNext: Boolean = in.hasNext && in.head.getAs[String](key) == k
+              def next(): Row = in.next()
+            }, pfx)
           }
-          sb.append(" .").toString()
         }
       }
-    }
-    val w = blocks.toDF("value").write.mode(SaveMode.Overwrite)
-    (if (gzip) w.option("compression", "gzip") else w).text(path)
   }
+
+  /** Turtle (and N3, a superset) subject blocks over the distinct
+    * triples: `subject` then `predicate object` lines joined by ` ;`.
+    * Terms the registered `prefixes` don't cover (or whose local part
+    * isn't a safe PN_LOCAL) stay full IRIs; with none, every term is.
+    */
+  def turtleBlocks(triples: DataFrame, prefixes: Map[String, String]): Dataset[String] =
+    groupedBlocks(triples.dropDuplicates(tripleCols).select(tripleCols.map(col): _*),
+      Seq("s"), prefixes) { (s, stmts, pfx) =>
+      compactTerm(s, pfx) + stmts.map { r =>
+        s"\n    ${compactTerm(r.getAs[String]("p"), pfx)} ${objectTerm(r, pfx)}"
+      }.mkString(" ;") + " ."
+    }
+
+  /** Turtle (and N3): [[turtleBlocks]] as a text sink; Turtle permits
+    * repeated subjects across blocks, so part files concatenate.
+    */
+  def writeTurtle(triples: DataFrame, path: String, gzip: Boolean = false,
+      prefixes: Map[String, String] = Map.empty): Unit =
+    writeText(turtleBlocks(triples, prefixes), path, gzip)
 
   /** TriG: graph-grouped, subject-sorted blocks; part files
     * concatenate (TriG allows a graph label to recur). `prefixes` as
-    * in [[writeTurtle]] (TriG shares Turtle's directive syntax).
+    * in [[turtleBlocks]] (TriG shares Turtle's directive syntax).
     */
   def writeTrig(triples: DataFrame, path: String, gzip: Boolean = false,
-      prefixes: Map[String, String] = Map.empty): Unit = {
-    val spark = triples.sparkSession
-    import spark.implicits._
-    val pfx = prefixSeq(prefixes)
-    val sorted = TripleEmitter.dedup(triples)
-      .repartitionByRange(col("g"), col("s"))
-      .sortWithinPartitions("g", "s", "p", "o_lex")
-    val blocks = sorted.mapPartitions { it =>
-      val in = it.buffered
-      val header =
-        if (pfx.nonEmpty && in.hasNext) Iterator(prefixHeader(pfx)) else Iterator.empty
-      header ++ new Iterator[String] {
-        def hasNext: Boolean = in.hasNext
-        def next(): String = {
-          val g = in.head.getAs[String]("g")
-          val sb = new StringBuilder(s"${compactTerm(g, pfx)} {\n")
-          while (in.hasNext && in.head.getAs[String]("g") == g) {
-            val r = in.next()
-            sb.append(s"  ${compactTerm(r.getAs[String]("s"), pfx)} " +
-              s"${compactTerm(r.getAs[String]("p"), pfx)} ${objCompact(r, pfx)} .\n")
-          }
-          sb.append("}").toString()
-        }
-      }
-    }
-    val w = blocks.toDF("value").write.mode(SaveMode.Overwrite)
-    (if (gzip) w.option("compression", "gzip") else w).text(path)
-  }
+      prefixes: Map[String, String] = Map.empty): Unit =
+    writeText(groupedBlocks(TripleEmitter.dedup(triples), Seq("g", "s"), prefixes) {
+      (g, stmts, pfx) =>
+        s"${compactTerm(g, pfx)} {\n" + stmts.map { r =>
+          s"  ${compactTerm(r.getAs[String]("s"), pfx)} " +
+            s"${compactTerm(r.getAs[String]("p"), pfx)} ${objectTerm(r, pfx)} .\n"
+        }.mkString + "}"
+    }, path, gzip)
 
   // ---------- driver-side document formats (export-sized) ----------
 
@@ -235,9 +252,24 @@ object Serializer {
     rows
   }
 
-  private def xmlEscape(s: String): String =
+  /** XML 1.0 `Char` production. */
+  private def isXmlChar(c: Int): Boolean =
+    c == 0x9 || c == 0xA || c == 0xD || (c >= 0x20 && c <= 0xD7FF) ||
+      (c >= 0xE000 && c <= 0xFFFD) || c >= 0x10000
+
+  /** Text and attribute escaping for the XML documents. `\r` becomes
+    * `&#13;`, which a parser's line-end normalization leaves alone; a
+    * character XML 1.0 cannot carry at all FAILS LOUDLY, as an
+    * unsplittable predicate does in [[toRdfXml]].
+    */
+  private def xmlEscape(s: String): String = {
+    val bad = s.codePoints.filter(c => !isXmlChar(c)).findFirst
+    if (bad.isPresent)
+      throw new IllegalArgumentException(f"U+${bad.getAsInt}%04X is not an XML 1.0 " +
+        "character; serialize as nquads/turtle instead")
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-      .replace("\"", "&quot;")
+      .replace("\"", "&quot;").replace("\r", "&#13;")
+  }
 
   /** Is `s` a legal XML NCName (the part of a QName after the colon)?
     * Conservative ASCII subset: letter/underscore start, then
@@ -292,7 +324,7 @@ object Serializer {
         val dt = Option(r.getAs[String]("o_datatype"))
           .map(d => s""" rdf:datatype="${xmlEscape(d)}"""").getOrElse("")
         val lang = Option(r.getAs[String]("o_lang"))
-          .map(l => s""" xml:lang="$l"""").getOrElse("")
+          .map(l => s""" xml:lang="${xmlEscape(l)}"""").getOrElse("")
         sb.append(s"""    <$local xmlns="${xmlEscape(ns)}"$dt$lang>${xmlEscape(r.getAs[String]("o_lex"))}</$local>""")
       }
       sb.append("\n  </rdf:Description>\n")
@@ -318,7 +350,7 @@ object Serializer {
           val lex = xmlEscape(r.getAs[String]("o_lex"))
           (Option(r.getAs[String]("o_lang")), Option(r.getAs[String]("o_datatype"))) match {
             case (Some(l), _) =>
-              sb.append(s"""      <plainLiteral xml:lang="$l">$lex</plainLiteral>""").append('\n')
+              sb.append(s"""      <plainLiteral xml:lang="${xmlEscape(l)}">$lex</plainLiteral>""").append('\n')
             case (None, Some(d)) =>
               sb.append(s"""      <typedLiteral datatype="${xmlEscape(d)}">$lex</typedLiteral>""").append('\n')
             case _ =>
@@ -374,7 +406,7 @@ object Serializer {
     */
   def write(triples: DataFrame, path: String, format: String, gzip: Boolean = false): Unit =
     format match {
-      case "nquads" => TripleEmitter.writeNq(TripleEmitter.dedup(triples), path, gzip)
+      case "nquads" => writeNq(TripleEmitter.dedup(triples), path, gzip)
       case "nt" => writeNt(triples, path, gzip)
       case "turtle" | "n3" => writeTurtle(triples, path, gzip)
       case "trig" => writeTrig(triples, path, gzip)

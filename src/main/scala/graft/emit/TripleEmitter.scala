@@ -4,59 +4,16 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Triple-side sinks: N-Quads formatting (the reference's native
-  * output — reference: src/cattle.py:301 locates `*.csv.nq`, parsed
-  * named-graph-aware at :308-309), content dedup, and the partitioned
-  * parquet materialize with per-partition lineage rows (north rule).
-  *
-  * All string work is built-in `Column` trees (codegen'd); the NQ sink
-  * is a distributed text write, never a driver collect (the
-  * reference's export path loads the whole graph in one process,
-  * src/cattle.py:307-311 — the scalability cliff we avoid).
+/** The parquet triple store: content dedup, the bucket function, the
+  * bucket-partitioned materialize with per-partition lineage rows
+  * (north rule), the resume index and the store's filesystem checks.
+  * RDF text syntax lives in [[Serializer]].
   */
 object TripleEmitter {
-
-  /** N-Triples string escaping (grammar: ECHAR). Literal `replace`
-    * chain — backslash FIRST. Codegen'd; no regex, no UDF.
-    */
-  def nqEscape(c: Column): Column =
-    replace(
-      replace(
-        replace(
-          replace(
-            replace(c, lit("\\"), lit("\\\\")),
-            lit("\""), lit("\\\"")),
-          lit("\n"), lit("\\n")),
-        lit("\r"), lit("\\r")),
-      lit("\t"), lit("\\t"))
-
-  /** One N-Quads line from the flat triple columns. */
-  def nqLine: Column = {
-    val obj = when(col("o_kind") === "iri", concat(lit("<"), col("o_lex"), lit(">")))
-      .otherwise(
-        concat(
-          lit("\""), nqEscape(col("o_lex")), lit("\""),
-          when(col("o_lang").isNotNull, concat(lit("@"), col("o_lang")))
-            .otherwise(
-              when(col("o_datatype").isNotNull,
-                concat(lit("^^<"), col("o_datatype"), lit(">")))
-                .otherwise(lit("")))))
-    concat(
-      lit("<"), col("s"), lit("> <"), col("p"), lit("> "),
-      obj, lit(" <"), col("g"), lit("> ."))
-  }
 
   /** Content-identity dedup over the full quad (SURVEY.md §2.1 D1). */
   def dedup(triples: DataFrame): DataFrame =
     triples.dropDuplicates("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang", "g")
-
-  /** Distributed N-Quads sink (optionally gzip — reference K3,
-    * src/cattle.py:313-319).
-    */
-  def writeNq(triples: DataFrame, path: String, gzip: Boolean = false): Unit = {
-    val w = triples.select(nqLine.as("value")).write.mode(SaveMode.Overwrite)
-    (if (gzip) w.option("compression", "gzip") else w).text(path)
-  }
 
   /** Deterministic page/triple bucket — identity from content (url),
     * NEVER from physical row position (SURVEY.md §4.3).

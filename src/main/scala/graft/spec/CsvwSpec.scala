@@ -100,6 +100,9 @@ object TableSpec {
   private def optStr(n: JsonNode, f: String): Option[String] =
     Option(n.get(f)).filter(!_.isNull).map(_.asText)
 
+  /** N-Quads/Turtle `LANGTAG` without its `@`. */
+  private val langTag = "[a-zA-Z]+(-[a-zA-Z0-9]+)*"
+
   /** Parse a JSON-LD-ish descriptor document. Open vocabulary: unknown
     * keys are ignored rather than rejected (the reference preserves
     * arbitrary extra keys, ruminator.js:358-360).
@@ -129,8 +132,13 @@ object TableSpec {
         case Some(d)               => (Some(d.asText), None)
         case None                  => (None, None)
       }
+      val name = optStr(c, "name").getOrElse("")
+      val lang = optStr(c, "lang")
+      // pasted after `@` and into xml:lang="…" by every serializer
+      lang.foreach(l => require(l.matches(langTag),
+        s"column '$name': lang '$l' is not a language tag ($langTag)"))
       ColumnSpec(
-        name = optStr(c, "name").getOrElse(""),
+        name = name,
         virtual = Option(c.get("virtual")).exists(_.asBoolean(false)),
         aboutUrl = optStr(c, "aboutUrl"),
         propertyUrl = optStr(c, "propertyUrl"),
@@ -138,7 +146,7 @@ object TableSpec {
         csvwValue = optStr(c, "csvw:value").orElse(optStr(c, "value")),
         datatype = dtBase,
         datatypeFormat = dtFormat,
-        lang = optStr(c, "lang"),
+        lang = lang,
         nullValues = Option(c.get("null")).map {
           case a if a.isArray => a.elements().asScala.map(_.asText).toSeq
           case v              => Seq(v.asText)

@@ -57,34 +57,14 @@ object EventStream {
     SessState(e.us, st.sessions + (if (newSession) 1 else 0), st.events + 1)
   }
 
-  /** Stateful sessionization (gap > gapSec starts a new session) via
-    * mapGroupsWithState — the custom-state path for streams. Each
-    * micro-batch's per-user slice is sorted before folding into state
-    * (event order within a batch is not guaranteed); memory is bounded
-    * by the per-user BATCH size, not the user's history — the state
-    * itself is three longs. In batch mode each group arrives complete
-    * (one "batch" = everything), so the result matches the lag-window
-    * formulation (Queries.qEventsSessions), which the oracle asserts;
-    * for batch-at-scale use [[sessionizeBatch]], which buffers nothing.
-    */
-  def sessionize(spark: SparkSession, events: DataFrame,
-      gapSec: Long = 1800L): Dataset[UserSessions] = {
-    import spark.implicits._
-    toEvs(events).groupByKey(_.user_id).mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-      (uid: Long, it: Iterator[Ev], state: GroupState[SessState]) =>
-        val sorted = it.toArray.sortBy(e => (e.us, e.event_id))
-        var st = state.getOption.getOrElse(SessState(Long.MinValue, 0L, 0L))
-        for (e <- sorted) st = advance(st, e, gapSec * 1000000L)
-        state.update(st)
-        UserSessions(uid, st.sessions, st.events)
-    }
-  }
-
-  /** flatMapGroupsWithState variant (update mode): emits the running
-    * per-user totals each micro-batch a user appears in — the
-    * streaming-native shape (ADVICE round 1: incremental state instead
-    * of whole-group buffering). Late/duplicate batches fold into the
-    * same three-long state.
+  /** Stateful streaming sessionization (gap > gapSec starts a new
+    * session) via flatMapGroupsWithState in update mode: emits the
+    * running per-user totals each micro-batch a user appears in (ADVICE
+    * round 1: incremental state instead of whole-group buffering). Each
+    * micro-batch's per-user slice is sorted before folding into the
+    * three-long state, so memory is bounded by the per-user BATCH size;
+    * late/duplicate batches fold into the same state. Batch input takes
+    * [[sessionizeBatch]], which buffers nothing.
     */
   def sessionizeUpdates(spark: SparkSession, events: DataFrame,
       gapSec: Long = 1800L): Dataset[UserSessions] = {
@@ -233,8 +213,8 @@ object EventStream {
     * event_id), then stream-fold each user's run in a mapPartitions —
     * the sort is Spark's external (spillable) sort, so a pathological
     * single user never materializes in memory (ADVICE round 1 on
-    * `it.toSeq.sortBy`). Same three-long state machine as the
-    * streaming paths.
+    * `it.toSeq.sortBy`). Same three-long state machine as
+    * [[sessionizeUpdates]]; the `q_stateful_sessions` query runs it.
     */
   def sessionizeBatch(spark: SparkSession, events: DataFrame,
       gapSec: Long = 1800L): Dataset[UserSessions] = {

@@ -94,6 +94,19 @@ class RuleCompilerSpec extends AnyFunSuite {
       ("http://b/s/1", "http://p/b", "literal", "hi", null, "en", "http://g/")))
   }
 
+  test("descriptor lang must be a LANGTAG; the error names the column") {
+    def desc(lang: String) =
+      s"""{ "@base": "http://b/", "aboutUrl": "s/{id}", "graph": "http://g/",
+         |  "columns": [ { "name": "label", "propertyUrl": "http://p/l", "lang": $lang } ]}""".stripMargin
+    assert(TableSpec.fromJson(desc("\"en-GB\"")).columns.head.lang.contains("en-GB"))
+    assert(TableSpec.fromJson(desc("\"x-1a2b\"")).columns.head.lang.contains("x-1a2b"))
+    // a space or a quote would be pasted raw after `@` and into xml:lang
+    for (bad <- Seq("\"en x\"", "\"en\\\"x\"", "\"\"", "\"en-\"", "\"-en\"", "\"e_n\"")) {
+      val e = intercept[IllegalArgumentException](TableSpec.fromJson(desc(bad)))
+      assert(e.getMessage.contains("column 'label'"), bad)
+    }
+  }
+
   test("csvw:value templated literal (C4)") {
     val json =
       """{ "@base": "http://b/", "aboutUrl": "s/{id}", "graph": "http://g/",
@@ -137,7 +150,7 @@ class RuleCompilerSpec extends AnyFunSuite {
   }
 
   test("nq line formatting + escaping") {
-    import graft.emit.TripleEmitter
+    import graft.emit.Serializer
     val df = Seq(
       ("http://s/1", "http://p/1", "iri", "http://o/1", null, null, "http://g/"),
       ("http://s/1", "http://p/2", "literal", "a\"b\\c\nd", null, "en", "http://g/"),
@@ -145,7 +158,7 @@ class RuleCompilerSpec extends AnyFunSuite {
         "http://www.w3.org/2001/XMLSchema#integer", null, "http://g/"),
       ("http://s/1", "http://p/4", "literal", "plain", null, null, "http://g/")
     ).toDF("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang", "g")
-    val got = df.select(TripleEmitter.nqLine.as("l")).as[String].collect().toSet
+    val got = df.select(Serializer.nqLine.as("l")).as[String].collect().toSet
     assert(got == Set(
       "<http://s/1> <http://p/1> <http://o/1> <http://g/> .",
       "<http://s/1> <http://p/2> \"a\\\"b\\\\c\\nd\"@en <http://g/> .",

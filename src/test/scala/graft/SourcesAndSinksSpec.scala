@@ -359,6 +359,19 @@ class SourcesAndSinksSpec extends AnyFunSuite {
     assert("\"@value\": \"12\"".r.findAllIn(jsonld).length == 1)
   }
 
+  test("K2: XML documents keep a CR in a literal and reject characters XML 1.0 cannot carry") {
+    def one(lex: String) = Seq(("http://g/s", "http://g/p", "literal", lex, null: String,
+      null: String, "http://g/g")).toDF("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang", "g")
+    val trix = scala.xml.XML.loadString(Serializer.toTrix(one("a\r\nb")))
+    assert((trix \\ "plainLiteral").text == "a\r\nb")
+    val rdf = scala.xml.XML.loadString(Serializer.toRdfXml(one("a\r\nb")))
+    assert((rdf \\ "p").text == "a\r\nb")
+    for (doc <- Seq[org.apache.spark.sql.DataFrame => String](Serializer.toTrix, Serializer.toRdfXml)) {
+      val e = intercept[IllegalArgumentException](doc(one("a\u0001b")))
+      assert(e.getMessage.contains("U+0001") && e.getMessage.contains("nquads"))
+    }
+  }
+
   test("K2: driver-side documents write through Hadoop FileSystem (file: URI path)") {
     val base = Files.createTempDirectory("serjsonld").toString
     Serializer.write(sampleTriples(), s"file:$base/out/g.jsonld", "json-ld")
@@ -542,7 +555,7 @@ class SourcesAndSinksSpec extends AnyFunSuite {
         (i % 5).toLong, "t", 1.0)
     }
     val batch = events.toDF("event_id", "ts", "user_id", "event_type", "value")
-    val viaState = EventStream.sessionize(spark, batch, gapSec = 300)
+    val viaState = EventStream.sessionizeBatch(spark, batch, gapSec = 300)
       .collect().map(u => (u.user_id, u.n_sessions, u.n_events)).toSet
 
     // independent formulation: lag window (the oracle-checked query shape)
@@ -575,7 +588,7 @@ class SourcesAndSinksSpec extends AnyFunSuite {
         (i % 4).toLong, "t", 1.0)
     }
     val batch = events.toDF("event_id", "ts", "user_id", "event_type", "value")
-    val expected = EventStream.sessionize(spark, batch, gapSec = 300)
+    val expected = EventStream.sessionizeBatch(spark, batch, gapSec = 300)
       .collect().map(u => (u.user_id, u.n_sessions, u.n_events)).toSet
 
     val stream = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
