@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, max}
+
+import graft.fixtures.Fixtures
+import graft.ops.Dedup
 
 /** Extra measurement harness for the optimization rounds (guide §1).
   *
@@ -14,11 +18,15 @@ import org.apache.spark.sql.SparkSession
   *  - optional `.explain("formatted")` dump per query (plan evidence
   *    committed under plans/r06/),
   *  - optional noop-sink timing (`--noop`): computes EVERY column of
-  *    every row (guide §1.4) instead of count()'s pruned plan.
+  *    every row (guide §1.4) instead of count()'s pruned plan,
+  *  - `--dedup-scale`: dedup-stack scale evidence beyond the graded SF
+  *    instead of the queries (see [[dedupScale]]).
   *
   * Usage: sbt "runMain graft.BenchExtra [--reps N] [--noop]
-  *             [--explain DIR] [query ...]"
-  * Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same as Bench).
+  *             [--explain DIR] [--dedup-scale] [query ...]"
+  * Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same as Bench);
+  * `--dedup-scale` also reads SPARK_GRAFT_DEDUP_COPIES,
+  * SPARK_GRAFT_SIMHASH_MAXBUCKET and SPARK_GRAFT_SIMHASH_CAP_RECALL.
   */
 object BenchExtra {
 
@@ -47,15 +55,17 @@ object BenchExtra {
 
     var reps = 1
     var noop = false
+    var dedup = false
     var explainDir: Option[String] = None
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
     while (i < args.length) {
       args(i) match {
-        case "--reps"    => reps = args(i + 1).toInt; i += 2
-        case "--noop"    => noop = true; i += 1
-        case "--explain" => explainDir = Some(args(i + 1)); i += 2
-        case q           => names += q; i += 1
+        case "--reps"        => reps = args(i + 1).toInt; i += 2
+        case "--noop"        => noop = true; i += 1
+        case "--explain"     => explainDir = Some(args(i + 1)); i += 2
+        case "--dedup-scale" => dedup = true; i += 1
+        case q               => names += q; i += 1
       }
     }
     val all = SparkEntry.queries
@@ -65,6 +75,7 @@ object BenchExtra {
 
     val spark = session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    if (dedup) { println(dedupScale(spark, sfDir)); spark.stop(); return }
 
     val results = selected.map { case (name, fn) =>
       spark.sparkContext.setJobDescription(name)
@@ -93,5 +104,69 @@ object BenchExtra {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     println(s"""{"metric":"extra","value":${f"${results.map(_._2).sum}%.3f"},"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"noop":$noop}""")
+  }
+
+  /** Dedup-stack scale evidence (FIXTURES.md F7): runs ngram / minhash /
+    * simhash over [[Fixtures.dedupCorpus]] (`SPARK_GRAFT_DEDUP_COPIES`×
+    * the sf documents table, default 10) and returns ONE JSON line with
+    * wall times, pair counts, and the blocking-structure size
+    * histograms from [[Dedup.ngramDfHistogram]] /
+    * [[Dedup.minhashBucketHistogram]] / [[Dedup.simhashKeyHistogram]].
+    * The corpus's boilerplate shingles reach df = |corpus|, so the line
+    * reports raw vs kept max df; kept must be ≤ maxDf.
+    */
+  private def dedupScale(spark: SparkSession, sfDir: String): String = {
+    val copies = sys.env.getOrElse("SPARK_GRAFT_DEDUP_COPIES", "10").toInt
+    // SimHash hot-bucket cap (VERDICT round 4, item 6): 0 = uncapped
+    // (the 10x legacy mode). When set, the simhash run uses the cap;
+    // SPARK_GRAFT_SIMHASH_CAP_RECALL=1 additionally runs the UNCAPPED
+    // twin and reports what fraction of its pairs the cap keeps
+    // (capped pairs are a strict subset, so recall = capped/uncapped)
+    // - only feasible at scales where the uncapped quadratic hot
+    // bucket is still computable, which is the point of the cap.
+    val simhashCap = sys.env.getOrElse("SPARK_GRAFT_SIMHASH_MAXBUCKET", "0").toLong
+    val capRecall = sys.env.getOrElse("SPARK_GRAFT_SIMHASH_CAP_RECALL", "0") == "1"
+    val maxDf = Dedup.defaultMaxDf
+
+    val docs = Fixtures.dedupCorpus(spark, sfDir, copies)
+    val nDocs = docs.count()
+
+    val (nNgram, tNgram) = time(Dedup.ngramJaccardPairs(docs, tau = 0.5, maxDf = maxDf).count())
+    val (nMinhash, tMinhash) = time(Dedup.minhashLshPairs(docs, tau = 0.5).count())
+    val (nSimhash, tSimhash) = time(Dedup.simhashPairs(docs,
+      maxBucket = if (simhashCap > 0) simhashCap else Long.MaxValue).count())
+    val (nSimhashUncapped, capRecallPct) =
+      if (simhashCap > 0 && capRecall) {
+        val u = Dedup.simhashPairs(docs).count()
+        (u, if (u == 0) 100L else 100L * nSimhash / u)
+      } else (-1L, -1L)
+
+    val dfHist = Dedup.ngramDfHistogram(docs, maxDf = maxDf)
+    val dfRows = dfHist.collect()
+    def stageMax(stage: String): Long =
+      dfRows.filter(_.getString(0) == stage).map(_.getLong(3)).max
+    val mhHist = Dedup.minhashBucketHistogram(docs)
+    val shHist = Dedup.simhashKeyHistogram(docs)
+    val mhMax = mhHist.agg(max(col("max_size"))).collect()(0).getLong(0)
+    val shMax = shHist.agg(max(col("max_size"))).collect()(0).getLong(0)
+    val rawMax = stageMax("raw")
+    val keptMax = stageMax("kept")
+    require(keptMax <= maxDf,
+      s"df guard failed to bound the largest posting bucket: $keptMax > $maxDf")
+
+    def histJson(df: DataFrame): String = df.toJSON.collect().mkString("[", ",", "]")
+
+    s"""{"metric":"dedup_scale","docs":$nDocs,"copies":$copies,"sf":"$sfDir",""" +
+      s""""max_df_cap":$maxDf,"posting_raw_max_df":$rawMax,"posting_kept_max_df":$keptMax,""" +
+      s""""guard_fired":${rawMax > maxDf},""" +
+      s""""ngram_pairs":$nNgram,"ngram_sec":${f"$tNgram%.1f"},""" +
+      s""""minhash_pairs":$nMinhash,"minhash_sec":${f"$tMinhash%.1f"},""" +
+      s""""simhash_pairs":$nSimhash,"simhash_sec":${f"$tSimhash%.1f"},""" +
+      s""""simhash_max_bucket_cap":$simhashCap,""" +
+      s""""simhash_uncapped_pairs":$nSimhashUncapped,"simhash_cap_recall_pct":$capRecallPct,""" +
+      s""""minhash_max_bucket":$mhMax,"simhash_max_bucket":$shMax,""" +
+      s""""df_hist":${histJson(dfHist)},""" +
+      s""""minhash_bucket_hist":${histJson(mhHist)},""" +
+      s""""simhash_key_hist":${histJson(shHist)}}"""
   }
 }

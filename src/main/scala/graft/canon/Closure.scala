@@ -32,18 +32,16 @@ import graft.util.Cut
   * result, then the per-pair min — in that order, because the
   * anti-join's (child, ancestor) clustering already covers the
   * aggregate's grouping, so the min adds no exchange. Rounds =
-  * ⌈depth/2⌉ (taxonomies: tens of hops → a handful of rounds), not
+  * ⌊depth/2⌋ + 1 (taxonomies: tens of hops → a handful of rounds), not
   * graph size; halving the rounds halves the per-round scheduling
   * latency AND the anti-join re-reads of the accumulated cut frames —
   * the dominant costs at both bench and production scale (the
-  * measured round-5 profile was round-latency-bound). Each round's
-  * fresh frontier is lineage-cut ([[graft.util.Cut]]) so round k's
-  * plan never re-runs earlier rounds — the classic iterative-Spark
-  * trap; the result is the union of the materialized rounds, never
-  * re-materialized as a whole. Convergence and the depth guard share
-  * ONE driver-side aggregate per round (`max(dist)` over the
-  * already-materialized cut frame: NULL ⇒ done, > maxIters ⇒ throw) —
-  * round 5's separate isEmpty probe is folded in. AQE re-plans every
+  * measured round-5 profile was round-latency-bound). Rounds run
+  * through [[Fixpoint]]; the result is the union of the cut rounds,
+  * never re-materialized as a whole. The probe is `max(dist)`: NULL ⇒
+  * done, > maxIters ⇒ the depth guard throws (a round r that is not
+  * quiet finds depth ≥ 2r, so it fires before the round bound
+  * ⌊maxIters/2⌋ + 1). AQE re-plans every
   * round over the cut RDDs' true sizes (runtime broadcast of a small
   * edge table, partition coalescing); a MEASURED dead end:
   * pre-partitioning + persisting the edge table to save its per-round
@@ -93,38 +91,27 @@ object Closure {
 
   /** The double-hop semi-naive loop (class doc) both closures run:
     * `seed` is the dist-1 frontier, `key` the columns naming a reached
-    * pair or node, `hop` extends a frontier by one edge. Returns the
-    * union of the materialized per-round frames.
+    * pair or node, `hop` extends a frontier by one edge. The state is
+    * the cut rounds so far, frontier last; the result is their union.
     */
   private def semiNaive(seed: DataFrame, key: Seq[String], maxIters: Int)(
       hop: DataFrame => DataFrame): DataFrame = {
-    var frontier = Cut.cut(seed)
-    val rounds = scala.collection.mutable.ArrayBuffer(frontier)
-    def seen = rounds.reduce(_ unionByName _)
-    var done = false
-    while (!done) {
-      val s1 = hop(frontier)
-      val s2 = hop(s1)
+    val (rounds, _) = Fixpoint.iterate(Vector(Cut.cut(seed)), maxIters / 2 + 1,
+        "transitive closure", max(col("dist"))) { rounds =>
+      val s1 = hop(rounds.last)
       // anti-join first, then min-dist: the anti-join's key clustering
       // already covers the grouping, so the aggregate adds no exchange
-      val fresh = Cut.cut(
-        s1.unionByName(s2)
-          .join(seen, key, "left_anti")
-          .groupBy(key.map(col): _*)
-          .agg(min(col("dist")).as("dist")))
-      // one driver probe per round on the materialized frame:
-      // convergence (NULL max) and the depth guard together
-      val maxd = fresh.agg(max(col("dist"))).first()
-      if (maxd.isNullAt(0)) {
-        done = true
-      } else {
-        if (maxd.getLong(0) > maxIters) throw new IllegalStateException(
-          s"transitive closure did not converge within $maxIters rounds — " +
-            "graph deeper than expected; raise maxIters deliberately")
-        rounds += fresh
-        frontier = fresh
-      }
+      s1.unionByName(hop(s1))
+        .join(rounds.reduce(_ unionByName _), key, "left_anti")
+        .groupBy(key.map(col): _*)
+        .agg(min(col("dist")).as("dist"))
+    } { (rounds, fresh, maxd) =>
+      if (maxd.isNullAt(0)) None
+      else if (maxd.getLong(0) > maxIters) throw new IllegalStateException(
+        s"transitive closure did not converge within $maxIters rounds — " +
+          "graph deeper than expected; raise maxIters deliberately")
+      else Some(rounds :+ fresh)
     }
-    seen
+    rounds.reduce(_ unionByName _)
   }
 }

@@ -2,11 +2,12 @@ package graft.fixtures
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, concat, explode, lit, regexp_replace, sequence}
 
 import graft.model.Page
 
-/** Deterministic synthetic corpora (FIXTURES.md F1/F2/F3).
+/** Deterministic synthetic corpora (FIXTURES.md F1/F2/F3/F7).
   *
   * Everything here is a pure function of the row index — no wall
   * clock, no java.util.Random state threading — so generation is
@@ -208,5 +209,30 @@ object Fixtures {
     val distractors = Seq("Quxland", "Blorptopia").map(c =>
       c -> s"http://kb.example.org/entity/${c.toLowerCase}")
     real ++ distractors
+  }
+
+  /** F7: the boilerplate sentence every [[dedupCorpus]] document ends
+    * with; its shingles reach df = |corpus| and must be cut by the df
+    * guard.
+    */
+  val dedupBoiler = "click here to subscribe to our newsletter for updates today"
+
+  /** F7: `copies`× the sf documents table. Copy c of a document
+    * prefixes every token with `c<c>_`, so copies share NO shingles
+    * (the index scales without manufacturing quadratic near-dup
+    * structure), and every document gets [[dedupBoiler]] appended.
+    */
+  def dedupCorpus(spark: SparkSession, sfDir: String, copies: Int): DataFrame = {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id").cast("long"), col("text"))
+      .withColumn("c", explode(sequence(lit(0), lit(copies - 1))))
+    docs.select(
+      (col("doc_id") * copies + col("c")).as("doc_id"),
+      concat(
+        // prefix every token with the copy tag (disjoint shingle space)
+        concat(lit("c"), col("c"), lit("_")),
+        regexp_replace(col("text"), lit("\\s+"),
+          concat(lit(" c"), col("c"), lit("_"))),
+        lit(" "), lit(dedupBoiler)).as("text"))
   }
 }

@@ -101,7 +101,7 @@ object Dedup {
     // broadcast the round-4 100× run proved fatal: the kept-shingle
     // table grows with the corpus, and AQE's runtime size estimate
     // admitted it as a driver HashedRelation that OOMed
-    // (graft.DedupScale; VERDICT r4 item 6) — same refusal as
+    // (`BenchExtra --dedup-scale`; VERDICT r4 item 6) — same refusal as
     // passageDedup's ownership join. Both aggregate and join key on
     // shingle, so the posting exchange is planned once and reused.
     val keep = posting.groupBy("shingle").agg(count(lit(1)).as("__df"))
@@ -707,8 +707,8 @@ object Dedup {
   // claim 1 (boilerplate shingles), the df guard caps the damage.
   // These diagnostics make both MEASURABLE — log2-bucketed size
   // histograms of every blocking structure, cheap aggregations over
-  // the same tables the operators build (graft.DedupScale runs them on
-  // a 10× corpus; the bound spec pins the cap).
+  // the same tables the operators build (`BenchExtra --dedup-scale`
+  // runs them on a 10× corpus; the bound spec pins the cap).
 
   private def log2Hist(sizes: DataFrame, sizeCol: String, extraKeys: Seq[String] = Nil): DataFrame =
     sizes.groupBy((extraKeys.map(col) :+

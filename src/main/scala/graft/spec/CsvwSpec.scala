@@ -103,6 +103,18 @@ object TableSpec {
   /** N-Quads/Turtle `LANGTAG` without its `@`. */
   private val langTag = "[a-zA-Z]+(-[a-zA-Z0-9]+)*"
 
+  /** Every serializer pastes a descriptor IRI raw between `<` and `>`,
+    * so its static text (everything outside `{…}` references) must hold
+    * no code point an N-Quads `IRIREF` forbids.
+    */
+  private def iri(owner: String)(v: String): String = {
+    val bad = v.replaceAll("\\{[^{}]*\\}", "")
+      .find(c => c <= ' ' || "<>\"{}|^`\\".indexOf(c) >= 0)
+    require(bad.isEmpty,
+      f"$owner: '$v' holds U+${bad.get.toInt}%04X, which an IRI cannot carry")
+    v
+  }
+
   /** Parse a JSON-LD-ish descriptor document. Open vocabulary: unknown
     * keys are ignored rather than rejected (the reference preserves
     * arbitrary extra keys, ruminator.js:358-360).
@@ -112,6 +124,7 @@ object TableSpec {
     val prefixes = defaultPrefixes ++ Option(root.get("prefixes"))
       .map(p => p.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap)
       .getOrElse(Map.empty)
+    prefixes.foreach { case (p, ns) => iri(s"prefix '$p'")(ns) }
     val dialect = Option(root.get("dialect")).map { d =>
       Dialect(
         optStr(d, "delimiter").getOrElse(","),
@@ -137,14 +150,15 @@ object TableSpec {
       // pasted after `@` and into xml:lang="…" by every serializer
       lang.foreach(l => require(l.matches(langTag),
         s"column '$name': lang '$l' is not a language tag ($langTag)"))
+      def iriField(f: String) = optStr(c, f).map(iri(s"column '$name': $f"))
       ColumnSpec(
         name = name,
         virtual = Option(c.get("virtual")).exists(_.asBoolean(false)),
-        aboutUrl = optStr(c, "aboutUrl"),
-        propertyUrl = optStr(c, "propertyUrl"),
-        valueUrl = optStr(c, "valueUrl"),
+        aboutUrl = iriField("aboutUrl"),
+        propertyUrl = iriField("propertyUrl"),
+        valueUrl = iriField("valueUrl"),
         csvwValue = optStr(c, "csvw:value").orElse(optStr(c, "value")),
-        datatype = dtBase,
+        datatype = dtBase.map(iri(s"column '$name': datatype")),
         datatypeFormat = dtFormat,
         lang = lang,
         nullValues = Option(c.get("null")).map {
@@ -158,10 +172,10 @@ object TableSpec {
       )
     }
     TableSpec(
-      base = optStr(root, "@base").orElse(optStr(root, "base")).getOrElse(""),
-      aboutUrl = optStr(root, "aboutUrl").getOrElse("{url}"),
+      base = iri("@base")(optStr(root, "@base").orElse(optStr(root, "base")).getOrElse("")),
+      aboutUrl = iri("aboutUrl")(optStr(root, "aboutUrl").getOrElse("{url}")),
       prefixes = prefixes,
-      graph = optStr(root, "graph").getOrElse("http://graft.local/graph/default"),
+      graph = iri("graph")(optStr(root, "graph").getOrElse("http://graft.local/graph/default")),
       dialect = dialect,
       extractors = extractors,
       columns = columns

@@ -42,12 +42,18 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     sc.setCheckpointDir(dir)
     try {
       val edges = (0 until 40).map(i => (f"n$i%03d", f"n${(i + 3) % 40}%03d"))
-      val out = ConnectedComponents.run(spark, edges.toDF("src", "dst"), localThreshold = 0)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      // held while asserting: the cleaner drops the checkpoint files of
+      // an unreachable result
+      val cc = ConnectedComponents.run(spark, edges.toDF("src", "dst"), localThreshold = 0)
+      val out = cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(out == oracle(edges))
-      // the reliable path actually wrote checkpoint data
-      val written = new java.io.File(dir).listFiles()
-      assert(written != null && written.nonEmpty, "no reliable checkpoint data written")
+      // the reliable path actually wrote checkpoint data: setCheckpointDir
+      // alone creates the UUID directory, only checkpoint() writes rdd-*
+      val rddDirs = new java.io.File(dir).listFiles().toSeq
+        .flatMap(d => Option(d.listFiles()).toSeq.flatten)
+        .filter(_.getName.startsWith("rdd-"))
+      assert(rddDirs.nonEmpty, "no reliable checkpoint data (rdd-*) written")
+      assert(cc.count() == 40)
     } finally {
       // unset so other specs keep exercising the localCheckpoint path
       sc.setCheckpointDir(null)
@@ -64,11 +70,17 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(runCc(edges) == oracle(edges))
   }
 
-  test("long chain converges within O(log n) rounds (pointer jumping)") {
+  test("monotone long chain converges in O(log n) rounds (pointer jumping)") {
+    // labels increase along the chain, so each round's two jumps quarter
+    // the unresolved distance: 4 rounds that change labels + 1 quiet one
     val chain = (0 until 200).map(i => (f"n$i%04d", f"n${i + 1}%04d"))
-    val got = runCc(chain)
+    val (cc, rounds) = ConnectedComponents.runCounted(spark, chain.toDF("src", "dst"),
+      localThreshold = 0)
+    val got = cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == oracle(chain))
     assert(got.values.toSet == Set("n0000"))
     assert(got.size == 201)
+    assert(rounds == 5, s"round count $rounds")
   }
 
   test("property: CC == union-find oracle on seeded random graphs") {

@@ -607,7 +607,7 @@ class OpsSpec extends AnyFunSuite {
     // 40 docs all sharing one boilerplate sentence → its shingles have
     // raw df = 40; with maxDf = 8 the kept index must contain NO
     // bucket above 8 while the raw histogram still shows the 40-bucket
-    val boiler = DedupScale.boiler
+    val boiler = graft.fixtures.Fixtures.dedupBoiler
     val rows = (1L to 40L).map(i => i -> s"u${i}a u${i}b u${i}c u${i}d $boiler") ++
       Seq(41L -> "the quick brown fox jumps tonight", // genuine df=2 shingles so
         42L -> "the quick brown fox jumps today")     // the kept index is non-empty

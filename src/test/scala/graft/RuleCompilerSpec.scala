@@ -107,6 +107,32 @@ class RuleCompilerSpec extends AnyFunSuite {
     }
   }
 
+  test("descriptor IRI constants must be IRIREF-safe outside {refs}; the error names the column or key") {
+    def desc(base: String = "http://b/", about: String = "s/{id}", graph: String = "http://g/",
+        ns: String = "http://e/", col: String = """"propertyUrl": "ex:l""""): String =
+      s"""{ "@base": "$base", "aboutUrl": "$about", "graph": "$graph", "prefixes": { "ex": "$ns" },
+         |  "columns": [ { "name": "label", $col } ]}""".stripMargin
+    // references may hold anything; the static text around them is checked
+    val ok = TableSpec.fromJson(desc(col = """"aboutUrl": "{+url}", "valueUrl": "http://v/{a b}/x",
+        "datatype": "xsd:string""""))
+    assert(ok.columns.head.valueUrl.contains("http://v/{a b}/x"))
+    val bad = Seq(
+      desc(col = """"propertyUrl": "http://p/a b>c"""") -> "column 'label': propertyUrl",
+      desc(col = """"valueUrl": "http://v/{id}|x"""") -> "column 'label': valueUrl",
+      desc(col = """"aboutUrl": "http://s/{id}^"""") -> "column 'label': aboutUrl",
+      desc(col = """"datatype": "xsd:int`eger"""") -> "column 'label': datatype",
+      desc(col = """"valueUrl": "http://v/{id"""") -> "column 'label': valueUrl",
+      desc(graph = "http://g/x y") -> "graph",
+      desc(graph = "http://g/\\u0000") -> "graph",
+      desc(base = "http://b/\\\\") -> "@base",
+      desc(about = "s/{id}\\\"") -> "aboutUrl",
+      desc(ns = "http://e/<x>") -> "prefix 'ex'")
+    for ((json, owner) <- bad) {
+      val e = intercept[IllegalArgumentException](TableSpec.fromJson(json))
+      assert(e.getMessage.startsWith(s"requirement failed: $owner:"), e.getMessage)
+    }
+  }
+
   test("csvw:value templated literal (C4)") {
     val json =
       """{ "@base": "http://b/", "aboutUrl": "s/{id}", "graph": "http://g/",

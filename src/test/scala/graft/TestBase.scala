@@ -12,6 +12,9 @@ object TestSpark {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // fixed at context creation: a spec that sets a checkpoint dir
+      // gets reliable cuts, every other spec keeps localCheckpoint
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
