@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import org.apache.spark.sql.{SparkSession, functions => F}
 
 import graft.emit.TripleEmitter.readString
@@ -60,6 +61,10 @@ object Submit {
     m.toMap
   }
 
+  /** `s` as a JSON string literal (run ids and paths are user text). */
+  private def jsonStr(s: String): String =
+    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
+
   /** Engine + runtime version string (M1 — the reference shells out to
     * `cow_tool --version` and renders it in the UI,
     * /root/reference/src/cattle.py:155-163; never-fails fallback kept).
@@ -108,7 +113,8 @@ object Submit {
       val hash = graft.spec.TableSpec.ruleSetHash(readString(spark, req("descriptor")))
       val removed = Pipeline.delete(spark, req("out"), hash,
         force = o.contains("force"))
-      println(s"""{"deleted":"${req("out")}","rule_set_hash":"$hash","lineage_rows":$removed}""")
+      println(s"""{"deleted":${jsonStr(req("out"))},"rule_set_hash":${jsonStr(hash)},""" +
+        s""""lineage_rows":$removed}""")
       if (existing.isEmpty) spark.stop()
       return
     }
@@ -129,7 +135,7 @@ object Submit {
       val agg = manifest.agg(F.count(F.lit(1)).as("shards"),
         F.sum("n_docs").as("docs"), F.sum("n_tokens").as("tokens")).first()
       println(s"""{"shards":${agg.getLong(0)},"docs":${agg.getLong(1)},""" +
-        s""""tokens":${agg.getLong(2)},"budget":$budget,"out":"${req("out")}"}""")
+        s""""tokens":${agg.getLong(2)},"budget":$budget,"out":${jsonStr(req("out"))}}""")
       if (existing.isEmpty) spark.stop()
       return
     }
@@ -156,7 +162,7 @@ object Submit {
       o.getOrElse("format", "nquads"), gzip = o.contains("gzip"))
 
     println(
-      s"""{"run_id":"${metrics.run_id}","rule_set_hash":"${metrics.rule_set_hash}",""" +
+      s"""{"run_id":${jsonStr(metrics.run_id)},"rule_set_hash":${jsonStr(metrics.rule_set_hash)},""" +
       s""""buckets_done":${metrics.buckets_done},"buckets_skipped":${metrics.buckets_skipped},""" +
       s""""triples_materialized":${metrics.triples_materialized},"subjects":${metrics.subjects},""" +
       s""""edges":${metrics.edges},"triples_out":${metrics.triples_out},""" +

@@ -35,16 +35,18 @@ object ConnectedComponents {
     * one: when the DISTINCT same-as edge set (not the page corpus!)
     * fits on the driver, the iterative shuffle loop's per-round
     * scheduling cost dwarfs the actual work, so the edges are
-    * collected, labelled by [[localCC]], and the labels go back out in
-    * ONE `SparkContext.broadcast`. The returned frame is
-    * `spark.range(n)` reading row `i` from it, so its plan has the same
-    * size for 100 edges or 2M (a `LocalRelation` of the labels would be
-    * carried through every downstream analysis, optimizer pass and AQE
-    * re-plan, row by row on the driver). The broadcast is owned by the
-    * result, like [[graft.util.Cut]]'s blocks: the frame's plan holds
-    * it, and the ContextCleaner drops it once the frame is unreachable.
-    * Real web same-as graphs are sparse relative to the corpus; above
-    * the threshold the distributed loop takes over.
+    * collected and labelled by [[localCC]] ([[components]]). The labels
+    * leave the driver in ONE `SparkContext.broadcast`: [[runCounted]]
+    * returns `spark.range(n)` reading row `i` from it, so its plan has
+    * the same size for 100 edges or 2M (a `LocalRelation` of the labels
+    * would be carried through every downstream analysis, optimizer pass
+    * and AQE re-plan, row by row on the driver), and `Pipeline.stageB`
+    * broadcasts the non-root labels as its rewrite lookup instead. The
+    * broadcast is owned by the result, like [[graft.util.Cut]]'s
+    * blocks: the frame's plan holds it, and the ContextCleaner drops it
+    * once the frame is unreachable. Real web same-as graphs are sparse
+    * relative to the corpus; above the threshold the distributed loop
+    * takes over.
     */
   val localEdgeThreshold: Long = 2000000L
 
@@ -87,7 +89,30 @@ object ConnectedComponents {
     * in round k needs `maxIter >= k + 1`.
     */
   def runCounted(spark: SparkSession, edges: DataFrame, maxIter: Int = 25,
-      localThreshold: Long = localEdgeThreshold): (DataFrame, Int) = {
+      localThreshold: Long = localEdgeThreshold): (DataFrame, Int) =
+    components(spark, edges, maxIter, localThreshold) match {
+      case Left(labels) => (labelFrame(spark, labels), 0)
+      case Right(distributed) => distributed
+    }
+
+  /** (node, comp) as `spark.range(n)` reading row `i` from ONE
+    * broadcast of the driver labels.
+    */
+  private[graft] def labelFrame(spark: SparkSession, labels: Array[(String, String)]): DataFrame = {
+    import spark.implicits._
+    val b = spark.sparkContext.broadcast(labels)
+    spark.range(labels.length)
+      .mapPartitions { ids => val a = b.value; ids.map(i => a(i.toInt)) }
+      .toDF("node", "comp")
+  }
+
+  /** The components as the path that computed them: the driver
+    * union-find's (node, comp) labels when the distinct edge set has at
+    * most `localThreshold` rows, else the distributed loop's frame and
+    * round count.
+    */
+  private[graft] def components(spark: SparkSession, edges: DataFrame, maxIter: Int,
+      localThreshold: Long): Either[Array[(String, String)], (DataFrame, Int)] = {
     import spark.implicits._
     // checkpoint the distinct edge set ONCE: everything downstream
     // re-reads it, and without truncation each action would re-execute
@@ -97,13 +122,8 @@ object ConnectedComponents {
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct())
 
-    if (e0.count() <= localThreshold) {
-      val labels = localCC(e0.as[(String, String)].collect().iterator).toArray
-      val b = spark.sparkContext.broadcast(labels)
-      val cc = spark.range(labels.length)
-        .mapPartitions { ids => val a = b.value; ids.map(i => a(i.toInt)) }
-      return (cc.toDF("node", "comp"), 0)
-    }
+    if (e0.count() <= localThreshold)
+      return Left(localCC(e0.as[(String, String)].collect().iterator).toArray)
 
     val sym = Cut.cut(e0
       .union(e0.select(col("dst").as("src"), col("src").as("dst")))
@@ -135,7 +155,7 @@ object ConnectedComponents {
         .select(col("a.node").as("node"), coalesce(col("jc"), col("a.comp")).as("comp"))
       jump(jump(propagated))
     } { case ((_, prev), jumped, h) => if (h == prev) None else Some((jumped, h)) }
-    (comp, rounds)
+    Right((comp, rounds))
   }
 
   /** Canonical mapping only for nodes whose canonical differs. */

@@ -18,7 +18,10 @@ object TripleEmitter {
   /** Deterministic page/triple bucket — identity from content (url),
     * NEVER from physical row position (SURVEY.md §4.3).
     */
-  def bucketOf(c: Column, n: Int): Column = pmod(xxhash64(c), lit(n)).cast("int")
+  def bucketOf(c: Column, n: Int): Column = {
+    require(n > 0, s"bucket count must be positive, got $n")
+    pmod(xxhash64(c), lit(n)).cast("int")
+  }
 
   /** Materialize triples partitioned by bucket + commit lineage rows.
     * Lineage is the completion signal AND the resume index (replaces

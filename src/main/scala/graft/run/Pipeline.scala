@@ -34,8 +34,10 @@ import graft.spec.TableSpec
   *     page scan, and required for cross-bucket components).
   *   - Skew: min() aggregations in CC and canonical election are
   *     algebraic, so Spark's partial (map-side) aggregation already
-  *     absorbs hot keys; AQE skew-join splitting is enabled in the
-  *     session for the rewrite joins on skewed subjects.
+  *     absorbs hot keys. The canonical rewrite is a broadcast lookup,
+  *     not a join, up to `broadcastCanonLimit` map entries, so a hot
+  *     subject is rewritten where it lies; above it, AQE skew-join
+  *     splitting applies to the shuffle joins on skewed subjects.
   */
 object Pipeline {
 
@@ -99,48 +101,89 @@ object Pipeline {
     (mapped.unionByName(mentionTriples), edges)
   }
 
-  /** Row-count gate for the canonical-map broadcast hint. An explicit
-    * `broadcast()` hint is NOT advisory — it overrides
-    * `autoBroadcastJoinThreshold` unconditionally, so hinting an
-    * unbounded frame is an executor-OOM waiting for a dense same-as
-    * graph (canonical map ∝ non-root nodes). 4M (uri, canonical) string
-    * rows ≈ hundreds of MB serialized — the most we ever want forced
-    * into every executor. Above the gate the rewrite runs as a plain
-    * shuffle join and AQE may still promote it from RUNTIME stats,
-    * which is the decision that's actually safe to leave to Spark.
-    * (VERDICT round 2, "What's wrong" #1.)
+  /** Row-count gate for the canonical-map lookup broadcast: the most
+    * (uri, canonical) entries forced into every executor. A broadcast
+    * is not advisory — every executor holds all of it — so broadcasting
+    * an unbounded map is an executor-OOM waiting for a dense same-as
+    * graph (canonical map ∝ non-root nodes). One entry is a
+    * `java.util.HashMap` node and two strings: `SizeEstimator` on a
+    * 200k-entry map (JDK 17) gave 207, 240 and 365 bytes per entry at
+    * 35, 45 and 85 URI characters, so the default can take about 1 GB
+    * of every executor's heap (and the driver's, while it builds the
+    * map). Above the gate the rewrite runs as a plain shuffle join
+    * and AQE may still promote it from RUNTIME stats, which is the
+    * decision that's actually safe to leave to Spark. (VERDICT round 2,
+    * "What's wrong" #1.) The gate caps what executors hold only on the
+    * distributed CC path: on the driver path the join side above the
+    * gate is itself a broadcast of the non-root labels
+    * (`ConnectedComponents.labelFrame`), so they reach every executor
+    * either way. With the defaults that branch is unreachable: non-root
+    * nodes ≤ distinct edges ≤ `localEdgeThreshold` (2M) < 4M.
     */
   val defaultBroadcastCanonLimit: Long = 4000000L
 
   /** Stage B: canonicalize subjects/objects via CC over same-as edges,
-    * then content dedup.
+    * then content dedup. At most `broadcastCanonLimit` canonical-map
+    * entries are rewritten through one lookup broadcast in a narrow
+    * projection: on the driver CC path the map comes straight from the
+    * union-find labels, on the distributed path it is counted, then
+    * collected once. The plan of the result owns the broadcast, so no
+    * action on it rebuilds or re-collects the map. A larger map is
+    * joined, shuffled, on `s` and on `o_lex`.
     */
   def stageB(spark: SparkSession, triples: DataFrame, edges: DataFrame,
       maxCcIterations: Int = 25,
-      broadcastCanonLimit: Long = defaultBroadcastCanonLimit): DataFrame = {
-    val cc = ConnectedComponents.run(spark, edges.select("src", "dst"), maxCcIterations)
-    val cmap = ConnectedComponents.canonicalMap(cc) // (uri, canonical)
+      broadcastCanonLimit: Long = defaultBroadcastCanonLimit): DataFrame =
+    canonicalize(spark, triples,
+      ConnectedComponents.components(spark, edges.select("src", "dst"),
+        maxCcIterations, ConnectedComponents.localEdgeThreshold),
+      broadcastCanonLimit)
 
-    // cmap derives from CC output that is already checkpointed, or on
-    // the driver path reads the label broadcast through a plan of fixed
-    // size, so this count is one cheap job, not a recompute
-    val hintOn = cmap.count() <= broadcastCanonLimit
-    def hint(df: DataFrame): DataFrame = if (hintOn) broadcast(df) else df
+  /** Stage B after CC: the canonical rewrite of `triples` by the
+    * components `cc` (driver labels or the distributed frame), gated
+    * by `broadcastCanonLimit`, then content dedup.
+    */
+  private[graft] def canonicalize(spark: SparkSession, triples: DataFrame,
+      cc: Either[Array[(String, String)], (DataFrame, Int)],
+      broadcastCanonLimit: Long): DataFrame = {
+    import spark.implicits._
+    // the map as (uri, canonical) entries on the driver, or as a frame
+    val canon: Either[Array[(String, String)], DataFrame] = cc match {
+      case Left(labels) =>
+        val m = labels.filter { case (node, comp) => node != comp }
+        if (m.length <= broadcastCanonLimit) Left(m)
+        else Right(ConnectedComponents.labelFrame(spark, m).toDF("uri", "canonical"))
+      case Right((frame, _)) =>
+        // CC output is already cut, so count and collect re-read it
+        val cmap = ConnectedComponents.canonicalMap(frame)
+        if (cmap.count() <= broadcastCanonLimit) Left(cmap.as[(String, String)].collect())
+        else Right(cmap)
+    }
 
-    val smap = cmap.withColumnRenamed("uri", "s").withColumnRenamed("canonical", "s_canon")
-    val omap = cmap.withColumnRenamed("uri", "o_lex").withColumnRenamed("canonical", "o_canon")
+    val rewritten = canon match {
+      case Left(m) =>
+        val lookup = new java.util.HashMap[String, String](m.length * 4 / 3 + 1)
+        m.foreach { case (uri, canonical) => lookup.put(uri, canonical) }
+        val b = spark.sparkContext.broadcast(lookup)
+        val canonical = udf((uri: String) => b.value.getOrDefault(uri, uri))
+        triples
+          .withColumn("s", canonical(col("s")))
+          .withColumn("o_lex",
+            when(col("o_kind") === "iri", canonical(col("o_lex"))).otherwise(col("o_lex")))
+      case Right(cmap) =>
+        val smap = cmap.withColumnRenamed("uri", "s").withColumnRenamed("canonical", "s_canon")
+        val omap = cmap.withColumnRenamed("uri", "o_lex").withColumnRenamed("canonical", "o_canon")
+        triples
+          .join(smap, Seq("s"), "left")
+          .withColumn("s", coalesce(col("s_canon"), col("s")))
+          .join(omap, Seq("o_lex"), "left")
+          .withColumn("o_lex",
+            when(col("o_kind") === "iri", coalesce(col("o_canon"), col("o_lex")))
+              .otherwise(col("o_lex")))
+    }
 
-    val rewritten = triples
-      .join(hint(smap), Seq("s"), "left")
-      .withColumn("s", coalesce(col("s_canon"), col("s"))).drop("s_canon")
-      .join(hint(omap), Seq("o_lex"), "left")
-      .withColumn("o_lex",
-        when(col("o_kind") === "iri", coalesce(col("o_canon"), col("o_lex")))
-          .otherwise(col("o_lex")))
-      .drop("o_canon")
-      .select("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang", "g")
-
-    TripleEmitter.dedup(rewritten)
+    TripleEmitter.dedup(
+      rewritten.select("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang", "g"))
   }
 
   /** One-shot in-memory run (tests, bench). */

@@ -2,10 +2,15 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftbridge.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.canon.ConnectedComponents
 import graft.emit.TripleEmitter
 import graft.fixtures.Fixtures
 import graft.run.{Descriptors, Pipeline}
@@ -25,6 +30,99 @@ class PipelineSpec extends AnyFunSuite {
       (r.getString(0), r.getString(1), r.getString(2), r.getString(3),
         r.getString(4), r.getString(5), r.getString(6))
     }.toSet
+
+  /** The result of `f` and the job tags of every job it started. */
+  def jobsOf[A](f: => A): (A, Seq[String]) = {
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tags.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    Bus.drain(sc)
+    sc.addSparkListener(l)
+    try { val r = f; Bus.drain(sc); (r, tags.asScala.toSeq) }
+    finally sc.removeSparkListener(l)
+  }
+
+  type Row7 = (String, String, String, String, String, String, String)
+
+  /** Stage B inputs that a rewrite can get wrong, and the rows it must
+    * return: components {a, b, c} -> a, {x, y} -> x, a self-loop z.
+    */
+  def adversarialStageB(): (DataFrame, DataFrame, Set[Row7]) = {
+    val N: String = null
+    val triples = Seq[Row7](
+      ("u:s1", "p:label", "literal", "u:b", N, "en", "g:g"), // literal == merged URI
+      (N, "p:x", "iri", "u:c", N, N, "g:g"),                 // NULL subject
+      ("u:y", "p:knows", "iri", "u:b", N, N, "g:g"),         // merged IRI subject and object
+      ("u:b", "p:same", "iri", "u:y", N, N, "g:g"),          // these two become
+      ("u:c", "p:same", "iri", "u:x", N, N, "g:g"),          // one triple
+      ("u:a", "p:self", "iri", "u:a", N, N, "g:g"),          // its own canonical
+      ("u:z", "p:loop", "iri", "u:z", N, N, "g:g"),          // self-loop component
+      ("u:c", "p:t", "literal", "u:y", "x:string", N, "g:g"),
+      ("u:b", "p:k", N, "u:c", N, N, "g:g"))                 // NULL o_kind: object kept
+      .toDF("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang", "g")
+    val edges = Seq(("u:b", "u:a"), ("u:c", "u:b"), ("u:y", "u:x"), ("u:z", "u:z"), (N, "u:q"))
+      .toDF("src", "dst")
+    val want = Set[Row7](
+      ("u:s1", "p:label", "literal", "u:b", N, "en", "g:g"),
+      (N, "p:x", "iri", "u:a", N, N, "g:g"),
+      ("u:x", "p:knows", "iri", "u:a", N, N, "g:g"),
+      ("u:a", "p:same", "iri", "u:x", N, N, "g:g"),
+      ("u:a", "p:self", "iri", "u:a", N, N, "g:g"),
+      ("u:z", "p:loop", "iri", "u:z", N, N, "g:g"),
+      ("u:a", "p:t", "literal", "u:y", "x:string", N, "g:g"),
+      ("u:a", "p:k", N, "u:c", N, N, "g:g"))
+    (triples, edges, want)
+  }
+
+  test("stageB: the lookup (below the gate) and the shuffle join (above it) return the same rows") {
+    val (triples, edges, want) = adversarialStageB()
+    for (limit <- Seq(Pipeline.defaultBroadcastCanonLimit, 0L)) {
+      val out = Pipeline.stageB(spark, triples, edges, broadcastCanonLimit = limit)
+      assert(out.count() == want.size && toSet(out) == want, s"broadcastCanonLimit = $limit")
+    }
+  }
+
+  test("stageB distributed CC path: the counted, collected lookup and the join above the gate return the same rows") {
+    val (triples, edges, want) = adversarialStageB()
+    for (limit <- Seq(Pipeline.defaultBroadcastCanonLimit, 0L)) {
+      val cc = ConnectedComponents.components(spark, edges, 25, localThreshold = 0L)
+      assert(cc.isRight, "localThreshold = 0 must take the distributed loop")
+      val out = Pipeline.canonicalize(spark, triples, cc, limit)
+      assert(out.count() == want.size && toSet(out) == want, s"broadcastCanonLimit = $limit")
+      val plan = out.queryExecution.executedPlan.toString
+      if (limit > 0) assert(!plan.contains("Join"), s"below the gate the rewrite is the lookup:\n$plan")
+      else assert(plan.contains("Join"), s"above the gate the rewrite is a join:\n$plan")
+    }
+  }
+
+  test("stageB driver path: one lookup, no join or broadcast exchange; a second action across a GC runs no more jobs") {
+    val (triples, edges, want) = adversarialStageB()
+    val out = Pipeline.stageB(spark, triples, edges)
+    val (first, jobs1) = jobsOf(toSet(out))
+    System.gc()
+    Thread.sleep(200) // let the ContextCleaner act on whatever the GC released
+    // a new plan over the same output, as a writer after a count runs
+    val (second, jobs2) = jobsOf(toSet(out.where(lit(true))))
+    assert(first == want && second == want)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"), plan)
+    assert(!(jobs1 ++ jobs2).exists(_.contains("broadcast exchange")),
+      s"an action re-collected the canonical map: ${jobs1 ++ jobs2}")
+    assert(jobs1.nonEmpty && jobs2.size <= jobs1.size, s"${jobs1.size} then ${jobs2.size} jobs")
+  }
+
+  test("bucket count 0 fails at plan time, naming the bucket count, before any job") {
+    val e = intercept[IllegalArgumentException](TripleEmitter.bucketOf(col("url"), 0))
+    assert(e.getMessage.contains("bucket count") && e.getMessage.contains("0"), e.getMessage)
+    val pages = Fixtures.pages(spark, 8, 2)
+    val (thrown, jobs) = jobsOf(scala.util.Try(Pipeline.run(spark, pages, cfg().copy(nBuckets = 0))))
+    assert(thrown.failed.toOption.exists(_.isInstanceOf[IllegalArgumentException]), thrown)
+    assert(jobs.isEmpty, s"${jobs.size} jobs ran before the bucket count was checked")
+  }
 
   test("end-to-end: 64 pages, exact golden set (P=R=1.0, BASELINE.json target)") {
     val pages = Fixtures.pages(spark, 64, 5)
@@ -187,6 +285,22 @@ class PipelineSpec extends AnyFunSuite {
       .orderBy($"wall_ms".desc).filter($"run_id" === "r2").first()
     assert(m2.getAs[Long]("buckets_done") == 0L)
     assert(spark.read.text(s"$base/out/serialized").count() == want)
+  }
+
+  test("spark-submit surface: the metrics line is JSON for any run id") {
+    val base = Files.createTempDirectory("graft-submit-json").toString
+    Fixtures.pages(spark, 16, 2).toDF().write.parquet(s"$base/pages")
+    Files.writeString(java.nio.file.Paths.get(s"$base/desc.json"), Descriptors.imfJson)
+    val runId = "r\"1\\x"
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(buf) {
+      Submit.main(Array("--pages", s"$base/pages", "--out", s"$base/out",
+        "--descriptor", s"$base/desc.json", "--buckets", "4", "--run-id", runId))
+    }
+    val line = buf.toString("UTF-8").linesIterator.filter(_.startsWith("{")).toSeq.last
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.get("run_id").asText() == runId, line)
+    assert(json.get("triples_out").asLong() > 0, line)
   }
 
   test("spark-submit surface: --descriptor and --gazetteer accept file: URIs (run and --delete)") {

@@ -1,0 +1,129 @@
+#!/usr/bin/env python3
+"""A/B the benchmark between two checkouts with alternating pairs.
+
+    python3 tools/ab_bench.py <parentDir> <changeDir> --workload canon_sameas --pairs 10 \
+        [--out ab.json] [--seed0 1] [--trace 0]
+
+Pair i runs `python3 perfbench/run.py --workload W --seed (seed0 + i)
+--seconds 15 --trace T` once in each checkout (15 s is the benchmark's
+run length); the parent runs first for odd seeds and the change for
+even seeds. Each checkout builds into its own `.bench_build/`. Every run (its result line, the PERFBENCH_DIAG line
+from stderr, exit code and wall time) is stored under the workload's key
+in the --out JSON file, which is created or extended. Then, per metric,
+it prints the median [quartiles] of each side and the number of pairs
+the change won, with the direction read from the change's
+BENCHMARK.json (`better` of `end_to_end` and `per_layer`; higher for a
+metric it does not list). Only the command line above touches perfbench/.
+"""
+
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+import time
+
+
+def run_side(root, workload, seed, trace):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+           "--seconds", "15", "--trace", str(trace)]
+    env = {k: v for k, v in os.environ.items() if k != "CARGO_TARGET_DIR"}
+    t0 = time.time()
+    p = subprocess.run(cmd, cwd=root, env=env, stdout=subprocess.PIPE,
+                       stderr=subprocess.PIPE, text=True)
+    wall = time.time() - t0
+    lines = p.stdout.strip().splitlines()
+    result = None
+    if p.returncode == 0 and lines:
+        try:
+            result = json.loads(lines[-1])
+        except ValueError:
+            result = None
+    diag = [l for l in p.stderr.splitlines() if l.startswith("PERFBENCH_DIAG ")]
+    return {"rc": p.returncode, "wall_s": round(wall, 1), "result": result,
+            "diag": diag[-1] if diag else None,
+            "stderr_tail": None if result else p.stderr[-2000:]}
+
+
+def metrics_of(run):
+    r = run.get("result") or {}
+    return {k: v["value"] for k, v in (r.get("metrics") or {}).items()}
+
+
+def quartiles(xs):
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def summarize(runs, better):
+    pairs = {}
+    for r in runs:
+        pairs.setdefault(r["seed"], {})[r["side"]] = r
+    names = sorted({k for r in runs for k in metrics_of(r)})
+    rows = []
+    for name in names:
+        par, chg, won, n = [], [], 0, 0
+        for seed in sorted(pairs):
+            a = metrics_of(pairs[seed].get("parent", {})).get(name)
+            b = metrics_of(pairs[seed].get("change", {})).get(name)
+            if a is None or b is None:
+                continue
+            par.append(a)
+            chg.append(b)
+            n += 1
+            if (b > a) if better.get(name, "higher") == "higher" else (b < a):
+                won += 1
+        if n:
+            rows.append((name, quartiles(par), quartiles(chg), won, n))
+    return rows
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("parent")
+    ap.add_argument("change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, required=True)
+    ap.add_argument("--seed0", type=int, default=1)
+    ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
+    ap.add_argument("--out", default="ab_bench.json")
+    a = ap.parse_args()
+
+    doc = {}
+    if os.path.exists(a.out):
+        with open(a.out) as fh:
+            doc = json.load(fh)
+    key = a.workload if a.trace == 0 else a.workload + "_trace"
+    runs = doc.setdefault(key, [])
+    sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    for i in range(a.pairs):
+        seed = a.seed0 + i
+        order = ["parent", "change"] if seed % 2 else ["change", "parent"]
+        for pos, side in enumerate(order):
+            r = run_side(sides[side], a.workload, seed, a.trace)
+            r.update({"workload": a.workload, "seed": seed, "side": side, "first": pos == 0})
+            runs.append(r)
+            with open(a.out, "w") as fh:
+                json.dump(doc, fh, indent=1)
+            m = metrics_of(r)
+            print("seed %d %-6s rc=%d %s" % (seed, side, r["rc"], " ".join(
+                "%s=%.5g" % kv for kv in sorted(m.items()))), file=sys.stderr, flush=True)
+
+    try:
+        with open(os.path.join(sides["change"], "BENCHMARK.json")) as fh:
+            bench = json.load(fh)
+        better = {m["name"]: m["better"]
+                  for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+    except (OSError, ValueError, KeyError):
+        better = {}
+    print("%s: median [q1-q3], parent -> change, pairs the change won" % key)
+    for name, p, c, won, n in summarize(runs, better):
+        print("  %-24s %.5g [%.5g-%.5g] -> %.5g [%.5g-%.5g]  %d/%d" % (
+            name, p[1], p[0], p[2], c[1], c[0], c[2], won, n))
+
+
+if __name__ == "__main__":
+    main()
