@@ -1,6 +1,6 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.util.Cut
@@ -41,7 +41,8 @@ object ConnectedComponents {
     * the same size for 100 edges or 2M (a `LocalRelation` of the labels
     * would be carried through every downstream analysis, optimizer pass
     * and AQE re-plan, row by row on the driver), and `Pipeline.stageB`
-    * broadcasts the non-root labels as its rewrite lookup instead. The
+    * and `Dedup.clusterAndElect` read the non-root labels through one
+    * lookup broadcast ([[lookup]]) instead. The
     * broadcast is owned by the result, like [[graft.util.Cut]]'s
     * blocks: the frame's plan holds it, and the ContextCleaner drops it
     * once the frame is unreachable. Real web same-as graphs are sparse
@@ -104,6 +105,20 @@ object ConnectedComponents {
     spark.range(labels.length)
       .mapPartitions { ids => val a = b.value; ids.map(i => a(i.toInt)) }
       .toDF("node", "comp")
+  }
+
+  /** The driver labels as ONE lookup broadcast: the returned function
+    * rewrites a node to its component and leaves any other value, roots
+    * and NULL included, as it is. Roots are left out of the map. The
+    * broadcast is owned by the plans of the Columns it builds, like
+    * [[labelFrame]]'s, so no action on them collects or rebuilds it.
+    */
+  private[graft] def lookup(spark: SparkSession, labels: Array[(String, String)]): Column => Column = {
+    val m = new java.util.HashMap[String, String](labels.length * 4 / 3 + 1)
+    labels.foreach { case (node, comp) => if (node != comp) m.put(node, comp) }
+    val b = spark.sparkContext.broadcast(m)
+    val canonical = udf((uri: String) => b.value.getOrDefault(uri, uri))
+    c => canonical(c)
   }
 
   /** The components as the path that computed them: the driver

@@ -485,20 +485,32 @@ object Dedup {
 
   /** Near-dup clustering + canonical election: connected components
     * over the near-dup pair graph (reusing the KG canonicalizer — the
-    * same broadcast-fast-path/distributed-loop machinery), keeping the
+    * same driver-union-find/distributed-loop machinery), keeping the
     * smallest doc_id per cluster. Docs in no pair are their own
-    * canonical. Output: (doc_id, canon_id) for every document.
+    * canonical. Output: (doc_id, canon_id) for every document. On the
+    * driver path every document is looked up in the labels' one
+    * lookup broadcast, as stage B rewrites URIs; on the distributed
+    * path the documents are left-joined with the components.
     */
   def clusterAndElect(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    import graft.canon.ConnectedComponents
     val spark = docs.sparkSession
     // zero-padded labels make lexicographic min == numeric min
     def uri(c: Column) = lpad(c.cast("string"), 12, "0")
     val edges = pairs.select(uri(col("id_a")).as("src"), uri(col("id_b")).as("dst"))
-    val cc = graft.canon.ConnectedComponents.run(spark, edges)
-      .select(col("node").cast("long").as("doc_id"),
-        col("comp").cast("long").as("canon"))
-    docs.select(col("doc_id")).join(cc, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("canon"), col("doc_id")).as("canon_id"))
+    val ids = docs.select(col("doc_id"))
+    ConnectedComponents.components(spark, edges, 25, ConnectedComponents.localEdgeThreshold) match {
+      case Left(labels) =>
+        val u = uri(col("doc_id"))
+        val canon = ConnectedComponents.lookup(spark, labels)(u)
+        ids.select(col("doc_id"),
+          when(canon === u, col("doc_id")).otherwise(canon.cast("long")).as("canon_id"))
+      case Right((frame, _)) =>
+        val cc = frame.select(col("node").cast("long").as("doc_id"),
+          col("comp").cast("long").as("canon"))
+        ids.join(cc, Seq("doc_id"), "left")
+          .select(col("doc_id"), coalesce(col("canon"), col("doc_id")).as("canon_id"))
+    }
   }
 
   // ---------- embedding near-dup ----------

@@ -2,6 +2,7 @@ package graft.run
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Executed
 
 import graft.canon.ConnectedComponents
 import graft.emit.TripleEmitter
@@ -114,22 +115,40 @@ object Pipeline {
     * and AQE may still promote it from RUNTIME stats, which is the
     * decision that's actually safe to leave to Spark. (VERDICT round 2,
     * "What's wrong" #1.) The gate caps what executors hold only on the
-    * distributed CC path: on the driver path the join side above the
-    * gate is itself a broadcast of the non-root labels
-    * (`ConnectedComponents.labelFrame`), so they reach every executor
-    * either way. With the defaults that branch is unreachable: non-root
-    * nodes ≤ distinct edges ≤ `localEdgeThreshold` (2M) < 4M.
+    * distributed CC path, where [[lookupBudget]] caps the map's bytes
+    * too: on the driver path the join side above the gate is itself a
+    * broadcast of the non-root labels (`ConnectedComponents.labelFrame`),
+    * so they reach every executor either way. With the defaults that
+    * branch is unreachable: non-root nodes ≤ distinct edges ≤
+    * `localEdgeThreshold` (2M) < 4M.
     */
   val defaultBroadcastCanonLimit: Long = 4000000L
+
+  /** Estimated heap bytes of a lookup of `entries` (uri, canonical)
+    * entries whose URIs total `chars` characters: 96 bytes per entry
+    * plus 1.6 per character, the line through the `SizeEstimator`
+    * measurements of [[defaultBroadcastCanonLimit]] (208, 240 and 368
+    * bytes at 35, 45 and 85 characters per URI, against 207, 240 and
+    * 365 measured).
+    */
+  private[graft] def lookupBytes(entries: Long, chars: Long): Long = 96L * entries + chars * 8 / 5
+
+  /** The most heap bytes the distributed CC path's lookup may take: a
+    * quarter of `spark.executor.memory` (Spark's default 1g if unset).
+    * Every executor holds the whole deserialized map beside its tasks.
+    */
+  private[graft] def lookupBudget(spark: SparkSession): Long =
+    spark.sparkContext.getConf.getSizeAsBytes("spark.executor.memory", "1g") / 4
 
   /** Stage B: canonicalize subjects/objects via CC over same-as edges,
     * then content dedup. At most `broadcastCanonLimit` canonical-map
     * entries are rewritten through one lookup broadcast in a narrow
     * projection: on the driver CC path the map comes straight from the
-    * union-find labels, on the distributed path it is counted, then
-    * collected once. The plan of the result owns the broadcast, so no
-    * action on it rebuilds or re-collects the map. A larger map is
-    * joined, shuffled, on `s` and on `o_lex`.
+    * union-find labels, on the distributed path one aggregate counts
+    * its entries and their characters, then it is collected once if it
+    * also fits [[lookupBudget]]. The plan of the result owns the
+    * broadcast, so no action on it rebuilds or re-collects the map. A
+    * larger map is joined, shuffled, on `s` and on `o_lex`.
     */
   def stageB(spark: SparkSession, triples: DataFrame, edges: DataFrame,
       maxCcIterations: Int = 25,
@@ -137,15 +156,16 @@ object Pipeline {
     canonicalize(spark, triples,
       ConnectedComponents.components(spark, edges.select("src", "dst"),
         maxCcIterations, ConnectedComponents.localEdgeThreshold),
-      broadcastCanonLimit)
+      broadcastCanonLimit, lookupBudget(spark))
 
   /** Stage B after CC: the canonical rewrite of `triples` by the
     * components `cc` (driver labels or the distributed frame), gated
-    * by `broadcastCanonLimit`, then content dedup.
+    * by `broadcastCanonLimit` and, on the distributed path, by
+    * `lookupBytes` against `budget`, then content dedup.
     */
   private[graft] def canonicalize(spark: SparkSession, triples: DataFrame,
       cc: Either[Array[(String, String)], (DataFrame, Int)],
-      broadcastCanonLimit: Long): DataFrame = {
+      broadcastCanonLimit: Long, budget: Long): DataFrame = {
     import spark.implicits._
     // the map as (uri, canonical) entries on the driver, or as a frame
     val canon: Either[Array[(String, String)], DataFrame] = cc match {
@@ -154,18 +174,19 @@ object Pipeline {
         if (m.length <= broadcastCanonLimit) Left(m)
         else Right(ConnectedComponents.labelFrame(spark, m).toDF("uri", "canonical"))
       case Right((frame, _)) =>
-        // CC output is already cut, so count and collect re-read it
+        // CC output is already cut, so the aggregate and collect re-read it
         val cmap = ConnectedComponents.canonicalMap(frame)
-        if (cmap.count() <= broadcastCanonLimit) Left(cmap.as[(String, String)].collect())
+        val size = cmap.agg(count(lit(1)),
+          coalesce(sum(length(col("uri")) + length(col("canonical"))), lit(0L))).first()
+        if (size.getLong(0) <= broadcastCanonLimit &&
+            lookupBytes(size.getLong(0), size.getLong(1)) <= budget)
+          Left(cmap.as[(String, String)].collect())
         else Right(cmap)
     }
 
     val rewritten = canon match {
       case Left(m) =>
-        val lookup = new java.util.HashMap[String, String](m.length * 4 / 3 + 1)
-        m.foreach { case (uri, canonical) => lookup.put(uri, canonical) }
-        val b = spark.sparkContext.broadcast(lookup)
-        val canonical = udf((uri: String) => b.value.getOrDefault(uri, uri))
+        val canonical = ConnectedComponents.lookup(spark, m)
         triples
           .withColumn("s", canonical(col("s")))
           .withColumn("o_lex",
@@ -212,13 +233,19 @@ object Pipeline {
 
   /** runResumable + a metrics row persisted to `outDir/metrics`
     * (queryable alongside the lineage table — the monitoring story).
+    * Stage B runs once: the count behind `triples_out` executes its
+    * plan, and the returned frame reads that run's result
+    * (`graftbridge.Executed`), so a sink re-reads the dedup shuffle
+    * instead of rescanning the store and shuffling again, and writes
+    * exactly the `triples_out` rows counted. The frame holds the dedup
+    * shuffle files while it is reachable; nothing else is kept.
     */
   def runResumableWithMetrics(spark: SparkSession, pages: Dataset[Page],
       cfg: Config): (DataFrame, RunMetrics) = {
     import spark.implicits._
     val t0 = System.nanoTime()
     val r = resume(spark, pages, cfg)
-    val outCount = r.out.count()
+    val (out, outCount) = Executed.count(r.out)
     val lineage = spark.read.parquet(s"${r.outDir}/lineage")
       .filter(col("rule_set_hash") === lit(r.hash))
       .agg(countDistinct(col("bucket")), sum(col("triples")), sum(col("subjects")))
@@ -232,7 +259,7 @@ object Pipeline {
       triples_out = outCount,
       wall_ms = (System.nanoTime() - t0) / 1000000L)
     Seq(m).toDS().write.mode(SaveMode.Append).parquet(s"${r.outDir}/metrics")
-    (r.out, m)
+    (out, m)
   }
 
   /** Lifecycle delete (M3 — the reference removes a conversion's whole

@@ -5,13 +5,13 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftbridge.Bus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.canon.ConnectedComponents
-import graft.emit.TripleEmitter
+import graft.emit.{Serializer, TripleEmitter}
 import graft.fixtures.Fixtures
 import graft.run.{Descriptors, Pipeline}
 
@@ -31,20 +31,42 @@ class PipelineSpec extends AnyFunSuite {
         r.getString(4), r.getString(5), r.getString(6))
     }.toSet
 
-  /** The result of `f` and the job tags of every job it started. */
-  def jobsOf[A](f: => A): (A, Seq[String]) = {
-    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        tags.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-          .getOrElse(""))
-    }
+  /** The result of `f`, with `l` hearing every event `f` posted. */
+  def listening[A](l: SparkListener)(f: => A): A = {
     val sc = spark.sparkContext
     Bus.drain(sc)
     sc.addSparkListener(l)
-    try { val r = f; Bus.drain(sc); (r, tags.asScala.toSeq) }
+    try { val r = f; Bus.drain(sc); r }
     finally sc.removeSparkListener(l)
   }
+
+  /** The result of `f` and the job tags of every job it started. */
+  def jobsOf[A](f: => A): (A, Seq[String]) = {
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val r = listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tags.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .getOrElse(""))
+    })(f)
+    (r, tags.asScala.toSeq)
+  }
+
+  /** The result of `f` and the shuffle bytes its tasks wrote. */
+  def shuffleWrittenBy[A](f: => A): (A, Long) = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val r = listening(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    })(f)
+    (r, bytes.get)
+  }
+
+  /** What a sink wrote at `path`: a text directory's lines, sorted
+    * (part-file order is not part of a format), or a document's text.
+    */
+  def written(path: String): Seq[String] =
+    if (new java.io.File(path).isDirectory) spark.read.text(path).as[String].collect().toSeq.sorted
+    else Seq(Files.readString(java.nio.file.Paths.get(path)))
 
   type Row7 = (String, String, String, String, String, String, String)
 
@@ -91,11 +113,29 @@ class PipelineSpec extends AnyFunSuite {
     for (limit <- Seq(Pipeline.defaultBroadcastCanonLimit, 0L)) {
       val cc = ConnectedComponents.components(spark, edges, 25, localThreshold = 0L)
       assert(cc.isRight, "localThreshold = 0 must take the distributed loop")
-      val out = Pipeline.canonicalize(spark, triples, cc, limit)
+      val out = Pipeline.canonicalize(spark, triples, cc, limit, Pipeline.lookupBudget(spark))
       assert(out.count() == want.size && toSet(out) == want, s"broadcastCanonLimit = $limit")
       val plan = out.queryExecution.executedPlan.toString
       if (limit > 0) assert(!plan.contains("Join"), s"below the gate the rewrite is the lookup:\n$plan")
       else assert(plan.contains("Join"), s"above the gate the rewrite is a join:\n$plan")
+    }
+  }
+
+  test("stageB distributed CC path: a map over the byte budget is joined, not broadcast") {
+    val (triples, edges, want) = adversarialStageB()
+    // its map: b -> a, c -> a, y -> x, 3 entries of 3-character URIs
+    assert(Pipeline.lookupBytes(3, 18) == 96 * 3 + 28)
+    // the default limit at 45-character URIs is about 1 GB, over the 1g default's quarter
+    assert(Pipeline.lookupBytes(Pipeline.defaultBroadcastCanonLimit, 90L * 4000000L) == 960000000L)
+    assert(Pipeline.lookupBudget(spark) ==
+      spark.sparkContext.getConf.getSizeAsBytes("spark.executor.memory", "1g") / 4)
+    for (budget <- Seq(316L, 315L)) {
+      val cc = ConnectedComponents.components(spark, edges, 25, localThreshold = 0L)
+      val out = Pipeline.canonicalize(spark, triples, cc, Pipeline.defaultBroadcastCanonLimit, budget)
+      assert(toSet(out) == want, s"budget = $budget")
+      val plan = out.queryExecution.executedPlan.toString
+      if (budget == 316L) assert(!plan.contains("Join"), s"within the budget the rewrite is the lookup:\n$plan")
+      else assert(plan.contains("Join"), s"over the budget the rewrite is a join:\n$plan")
     }
   }
 
@@ -244,6 +284,47 @@ class PipelineSpec extends AnyFunSuite {
     val (_, m2) = Pipeline.runResumableWithMetrics(spark, pages, c.copy(runId = "r2"))
     assert(m2.buckets_skipped == m1.buckets_done && m2.buckets_done == 0)
     assert(m1.edges > 0 && m2.edges == m1.edges, "same-as edges read back from the URI store")
+  }
+
+  test("resumable run: the sink re-reads the executed stage B (no shuffle written) and writes triples_out lines") {
+    val dir = Files.createTempDirectory("graft-executed").toString
+    val pages = Fixtures.pages(spark, 40, 4)
+    val c = cfg(Some(dir))
+    val (out, m) = Pipeline.runResumableWithMetrics(spark, pages, c)
+    val (_, shuffled) = shuffleWrittenBy(Serializer.write(out, s"$dir/nq", "nquads"))
+    assert(shuffled == 0L, s"the sink wrote $shuffled shuffle bytes")
+    val lines = written(s"$dir/nq")
+    assert(lines.size.toLong == m.triples_out)
+    Serializer.write(Pipeline.runResumable(spark, pages, c.copy(runId = "r2")), s"$dir/lazy", "nquads")
+    assert(lines == written(s"$dir/lazy"))
+  }
+
+  test("resumable run: every format writes the same from the executed frame as from the lazy one, lookup and join") {
+    val dir = Files.createTempDirectory("graft-formats").toString
+    val pages = Fixtures.pages(spark, 40, 4)
+    val c = cfg(Some(dir))
+    Pipeline.runResumable(spark, pages, c)
+    // every triple again in a second graph: nt drops `g`, so its dedup
+    // needs an exchange that the executed frame's partitioning must not skip
+    Pipeline.runResumable(spark, pages,
+      c.copy(descriptorJson = Descriptors.imfJson.replace(TestOracle.G, TestOracle.G + "2")))
+    // uncoalesced, so the executed frame spans several partitions and a
+    // wrong partitioning claim would show as duplicate or split output
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try for (limit <- Seq(Pipeline.defaultBroadcastCanonLimit, 0L)) {
+      val lc = c.copy(broadcastCanonLimit = limit)
+      val (executed, _) = Pipeline.runResumableWithMetrics(spark, pages, lc)
+      assert(executed.rdd.getNumPartitions > 1)
+      val lazyOut = Pipeline.runResumable(spark, pages, lc)
+      for (f <- Serializer.formats.keys.toSeq.sorted) {
+        Serializer.write(executed, s"$dir/e-$limit-$f", f)
+        Serializer.write(lazyOut, s"$dir/l-$limit-$f", f)
+        val (e, l) = (written(s"$dir/e-$limit-$f"), written(s"$dir/l-$limit-$f"))
+        if (e != l) fail(s"format $f, broadcastCanonLimit = $limit: ${e.size} lines from " +
+          s"the executed frame, ${l.size} from the lazy one, ${e.diff(l).take(2)}")
+      }
+    } finally spark.conf.unset(coalesce)
   }
 
   test("M2 metrics: counters persisted, resume reflected in skip counts") {

@@ -13,7 +13,22 @@ in the --out JSON file, which is created or extended. Then, per metric,
 it prints the median [quartiles] of each side and the number of pairs
 the change won, with the direction read from the change's
 BENCHMARK.json (`better` of `end_to_end` and `per_layer`; higher for a
-metric it does not list). Only the command line above touches perfbench/.
+metric it does not list). Each end-to-end metric also gets a verdict,
+first match wins:
+
+  worse       the change's median is worse than the parent's by more
+              than the metric's BENCHMARK.json bound (a share of the
+              parent's median);
+  gain        the change won at least 9 of every 10 pairs (ties count
+              for neither side) and the medians differ by more than the
+              parent's interquartile range;
+  unresolved  either side's interquartile range, as a share of its
+              median, is wider than the bound, and not every change run
+              reads better than every parent run;
+  held        otherwise.
+
+Last, it prints the failed and attempted ops of each side, and the
+runs that gave no result. Only the command line above touches perfbench/.
 """
 
 import argparse
@@ -77,8 +92,30 @@ def summarize(runs, better):
             if (b > a) if better.get(name, "higher") == "higher" else (b < a):
                 won += 1
         if n:
-            rows.append((name, quartiles(par), quartiles(chg), won, n))
+            rows.append((name, par, chg, won, n))
     return rows
+
+
+def verdict(par, chg, won, n, better, bound):
+    """The end-to-end verdict of the module docstring for one metric."""
+    sign = 1 if better == "higher" else -1
+    p, c = quartiles(par), quartiles(chg)
+    if p[1] and sign * (p[1] - c[1]) / abs(p[1]) > bound:
+        return "worse"
+    if won * 10 >= 9 * n and sign * (c[1] - p[1]) > p[2] - p[0]:
+        return "gain"
+    spread = max((q[2] - q[0]) / abs(q[1]) if q[1] else 0.0 for q in (p, c))
+    if spread > bound and not all(sign * (b - a) > 0 for a in par for b in chg):
+        return "unresolved"
+    return "held"
+
+
+def ops(runs, side):
+    """(failed ops, attempted ops, runs without a result) of one side."""
+    rs = [r for r in runs if r["side"] == side]
+    done = [r["result"] for r in rs if r.get("result")]
+    return (sum(d.get("failed", 0) for d in done), sum(d.get("attempted", 0) for d in done),
+            len(rs) - len(done))
 
 
 def main():
@@ -117,12 +154,19 @@ def main():
             bench = json.load(fh)
         better = {m["name"]: m["better"]
                   for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+        bounds = {m["name"]: m["bound"] for m in bench.get("end_to_end", [])}
     except (OSError, ValueError, KeyError):
-        better = {}
-    print("%s: median [q1-q3], parent -> change, pairs the change won" % key)
-    for name, p, c, won, n in summarize(runs, better):
-        print("  %-24s %.5g [%.5g-%.5g] -> %.5g [%.5g-%.5g]  %d/%d" % (
-            name, p[1], p[0], p[2], c[1], c[0], c[2], won, n))
+        better, bounds = {}, {}
+    print("%s: median [q1-q3], parent -> change, pairs the change won, verdict" % key)
+    for name, par, chg, won, n in summarize(runs, better):
+        p, c = quartiles(par), quartiles(chg)
+        v = (verdict(par, chg, won, n, better.get(name, "higher"), bounds[name])
+             if name in bounds else "")
+        print("  %-24s %.5g [%.5g-%.5g] -> %.5g [%.5g-%.5g]  %d/%d  %s" % (
+            name, p[1], p[0], p[2], c[1], c[0], c[2], won, n, v))
+    for side in ("parent", "change"):
+        print("  %-6s ops failed/attempted %d/%d, runs without a result %d" % (
+            (side,) + ops(runs, side)))
 
 
 if __name__ == "__main__":
