@@ -1,8 +1,11 @@
 package graft.emit
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
+
+import graft.model.{Lineage, Triple}
 
 /** The parquet triple store: content dedup, the bucket function, the
   * bucket-partitioned materialize with per-partition lineage rows
@@ -51,22 +54,42 @@ object TripleEmitter {
       .withColumn("rule_set_hash", lit(ruleSetHash))
       .withColumn("run_id", lit(runId))
       .withColumn("status", lit("ok"))
+      .select(lineageSchema.fieldNames.map(col).toSeq: _*)
     lineage.coalesce(1).write.mode(SaveMode.Append).parquet(s"$outDir/lineage")
     t.unpersist()
   }
 
+  /** The `lineage/` row, [[Lineage]]. */
+  val lineageSchema: StructType = Encoders.product[Lineage].schema
+
+  /** The store's lineage rows, read with [[lineageSchema]]: no schema
+    * inference job before an action.
+    */
+  def readLineage(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.schema(lineageSchema).parquet(s"$outDir/lineage")
+
   /** Buckets already materialized for this rule-set (resume skip).
-    * Collected EAGERLY to the driver (≤ nBuckets ints): a lazy
-    * DataFrame here would re-read lineage after this run's own commits
-    * and silently empty the remaining work; a literal `isin` filter is
-    * also partition-prunable at the scan, which an anti-join is not.
+    * Collected EAGERLY to the driver: a lazy DataFrame here would
+    * re-read lineage after this run's own commits and silently empty
+    * the remaining work; a literal `isin` filter is also
+    * partition-prunable at the scan, which an anti-join is not. The
+    * rows (≤ nBuckets per commit) are made distinct on the driver, not
+    * by a shuffle.
     */
   def doneBuckets(spark: SparkSession, outDir: String, ruleSetHash: String): Set[Int] =
     if (!exists(spark, s"$outDir/lineage")) Set.empty
-    else spark.read.parquet(s"$outDir/lineage")
+    else readLineage(spark, outDir)
       .filter(col("status") === "ok" && col("rule_set_hash") === ruleSetHash)
-      .select("bucket").distinct()
+      .select("bucket")
       .collect().map(_.getInt(0)).toSet
+
+  /** Every materialized triple (`s, p, o_kind, o_lex, o_datatype,
+    * o_lang, g`), read with [[Triple]]'s schema: no schema inference
+    * job before an action.
+    */
+  def readTriples(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.schema(Encoders.product[Triple].schema.add("bucket", IntegerType))
+      .parquet(s"$outDir/triples").drop("bucket")
 
   /** Every materialized same-as edge (`src, dst`), empty when the store
     * has none. The schema is explicit: a gazetteer-less run writes an

@@ -51,17 +51,19 @@ final case class Triple(
     g: String
 )
 
-/** Per-partition lineage row committed alongside the data — the
+/** Per-bucket lineage row committed alongside the data — the
   * engine's resumability + monitoring record (replaces the reference's
   * destructive completion signal, src/cattle_process.py:18-29, and its
-  * absent monitoring, druid.md:27-30).
+  * absent monitoring, druid.md:27-30). This is the row
+  * `TripleEmitter.writeStage` appends to `lineage/`, and its encoder's
+  * schema is the one every lineage reader reads with: `triples` counts
+  * the bucket's rows before dedup, `subjects` its distinct subjects.
   */
 final case class Lineage(
     bucket: Int,
+    triples: Long,
+    subjects: Long,
     rule_set_hash: String,
     run_id: String,
-    pages: Long,
-    triples: Long,
-    wall_ms: Long,
     status: String
 )

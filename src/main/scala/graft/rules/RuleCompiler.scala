@@ -236,14 +236,15 @@ object RuleCompiler {
   /** Lift descriptor-declared fields out of the page text: one
     * `regexp_extract` per extractor over the (already byte-stable)
     * `text` column; empty match → null so suppression semantics apply.
-    * Builtins `url` and `lang` pass through.
+    * Builtins `url` and `lang` pass through, and so do the
+    * `passThrough` columns (e.g. stage A's mention hits).
     */
-  def extractFields(pages: DataFrame, ts: TableSpec): DataFrame = {
+  def extractFields(pages: DataFrame, ts: TableSpec, passThrough: Seq[String] = Nil): DataFrame = {
     val fields = ts.extractors.map { case (name, re) =>
       val e = regexp_extract(col("text"), re, 1)
       when(length(e) > 0, e).as(name)
     }
-    pages.select((Seq(col("url"), col("lang")) ++ fields): _*)
+    pages.select((Seq(col("url"), col("lang")) ++ fields ++ passThrough.map(col)): _*)
   }
 
   /** The subject-URI Column for a table spec (used by the linker to

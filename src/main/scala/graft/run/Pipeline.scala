@@ -12,6 +12,7 @@ import graft.mentions.MentionDetector
 import graft.model.Page
 import graft.rules.RuleCompiler
 import graft.spec.TableSpec
+import graft.util.Cut
 
 /** End-to-end KG construction (the reference's flagship `/convert`
   * path generalized to web pages — SURVEY.md §3.2):
@@ -22,9 +23,15 @@ import graft.spec.TableSpec
   *   (global, deterministic, re-runnable)
   *
   * Scale commitments (SURVEY.md §4.3):
-  *   - Stage A is ONE narrow mega-stage: no shuffle until
-  *     canonicalization. The mapping is pure Column trees (codegen);
-  *     mention detection is a broadcast-trie mapPartitions.
+  *   - Stage A reads each page ONCE: one narrow projection computes
+  *     every page's record fields and mention hits (a broadcast-trie
+  *     Column), and one `Cut` of it feeds the mapping (pure Column
+  *     trees, codegen), the mention triples and the linker. The cut
+  *     holds fields and hits, never text or html, so it is smaller than
+  *     the triples minted from it. No shuffle until the linker's join.
+  *   - The store's own tables (pages, triples, edges, lineage) are read
+  *     with their fixed schemas, and lineage is summed on the driver:
+  *     store metadata starts no job.
   *   - Identity never derives from row position: buckets and URIs are
   *     functions of url/content only, so output is invariant under
   *     partitioning and parallelism (bench relies on this).
@@ -62,39 +69,48 @@ object Pipeline {
     */
   private val extractUdf =
     udf((html: Array[Byte]) => if (html == null) null else HtmlText.extract(html))
+      .withName("html_text")
 
   def ensureText(pages: Dataset[Page], trustText: Boolean): DataFrame =
     if (trustText) pages.toDF()
     else pages.toDF().withColumn("text", coalesce(col("text"), extractUdf(col("html"))))
 
-  /** Stage A on a set of pages: (triples with bucket, sameAs edges with bucket). */
-  def stageA(spark: SparkSession, pages: Dataset[Page], cfg: Config): (DataFrame, DataFrame) = {
-    import spark.implicits._
+  /** Stage A on a set of pages: (triples with bucket, sameAs edges with
+    * bucket), all from ONE cut of [[pageCut]]: the pages are read once.
+    */
+  def stageA(spark: SparkSession, pages: Dataset[Page], cfg: Config): (DataFrame, DataFrame) =
+    stageAOf(spark, Cut.cut(pageCut(spark, pages, cfg)), cfg)
+
+  /** Stage A's one page pass, one narrow projection over the pages
+    * with text: per page `url`, `lang`, the descriptor's extracted
+    * fields, the mention `hits` (`MentionDetector.hits`) and `bucket`.
+    * No `text` and no `html`: the mapping, the mentions and the
+    * linker's subjects all read fields or hits, so this is the cheap
+    * side to keep, smaller than the triples stage A mints from it.
+    */
+  private[graft] def pageCut(spark: SparkSession, pages: Dataset[Page], cfg: Config): DataFrame = {
+    val hits = MentionDetector.hits(spark, cfg.gazetteer)
+    val withText = ensureText(pages, cfg.trustText).withColumn("hits", hits(col("text")))
+    RuleCompiler.extractFields(withText, TableSpec.fromJson(cfg.descriptorJson), Seq("hits"))
+      .withColumn("bucket", TripleEmitter.bucketOf(col("url"), cfg.nBuckets))
+  }
+
+  /** Stage A's outputs over a cut [[pageCut]]: the mapped and mention
+    * triples, and the same-as edges the linker draws between the
+    * mentions and the records' subjects. Every job re-reads the cut.
+    */
+  private def stageAOf(spark: SparkSession, cut: DataFrame, cfg: Config): (DataFrame, DataFrame) = {
     val ts = TableSpec.fromJson(cfg.descriptorJson)
-    val withText = ensureText(pages, cfg.trustText)
-    val bucket = TripleEmitter.bucketOf(col("url"), cfg.nBuckets)
-
-    val records = RuleCompiler.extractFields(withText, ts).withColumn("bucket", bucket)
-    val mapped = RuleCompiler.triples(records, ts, ts.graph, passThrough = Seq("bucket"))
-
-    // cut: mentions feed BOTH the schema:mentions triples and the
-    // same-as edge join, and those run in separate jobs (edges
-    // materialize before stage B's final action) — without this the
-    // Aho-Corasick pass re-scans the full page corpus per consumer.
-    // The mention set is tiny relative to the pages (hits only), so
-    // this is the cheap side to keep; storage is owned by the result
-    // (graft.util.Cut), not left in the session cache.
-    val mentions = graft.util.Cut.cut(
-      MentionDetector.detect(spark, withText.as[Page], cfg.gazetteer).toDF())
-      .as[graft.model.Mention]
-    val mentionTriples = mentions.toDF()
+    val mapped = RuleCompiler.triples(cut, ts, ts.graph, passThrough = Seq("bucket"))
+    val mentions = MentionDetector.explodeHits(cut, col("hits"))
+    val mentionTriples = cut.select(col("url"), explode(col("hits.entity_id")).as("e"), col("bucket"))
       .select(
         col("url").as("s"), lit(MENTIONS_P).as("p"), lit("iri").as("o_kind"),
-        col("entity_id").as("o_lex"),
+        col("e").as("o_lex"),
         lit(null).cast("string").as("o_datatype"), lit(null).cast("string").as("o_lang"),
-        lit(ts.graph).as("g"), TripleEmitter.bucketOf(col("url"), cfg.nBuckets).as("bucket"))
+        lit(ts.graph).as("g"), col("bucket"))
 
-    val subjects = records.select(col("url"),
+    val subjects = cut.select(col("url"),
       RuleCompiler.subjectColumn(ts).as("subj"), col(cfg.anchorField).as("anchor"))
     val edges = Linker.sameAsEdges(spark, mentions, subjects, cfg.linkThreshold)
       .withColumn("bucket", TripleEmitter.bucketOf(col("src"), cfg.nBuckets))
@@ -246,15 +262,16 @@ object Pipeline {
     val t0 = System.nanoTime()
     val r = resume(spark, pages, cfg)
     val (out, outCount) = Executed.count(r.out)
-    val lineage = spark.read.parquet(s"${r.outDir}/lineage")
+    // this hash's lineage rows (≤ nBuckets per commit), summed on the driver
+    val lineage = TripleEmitter.readLineage(spark, r.outDir)
       .filter(col("rule_set_hash") === lit(r.hash))
-      .agg(countDistinct(col("bucket")), sum(col("triples")), sum(col("subjects")))
-      .first()
+      .select("bucket", "triples", "subjects").as[(Int, Long, Long)]
+      .collect()
     val m = RunMetrics(cfg.runId, r.hash,
-      buckets_done = lineage.getLong(0) - r.skipped,
+      buckets_done = lineage.map(_._1).distinct.length - r.skipped,
       buckets_skipped = r.skipped.toLong,
-      triples_materialized = lineage.getLong(1),
-      subjects = lineage.getLong(2),
+      triples_materialized = lineage.map(_._2).sum,
+      subjects = lineage.map(_._3).sum,
       edges = r.edges.count(),
       triples_out = outCount,
       wall_ms = (System.nanoTime() - t0) / 1000000L)
@@ -294,7 +311,7 @@ object Pipeline {
             "table — ownership unverifiable, refusing to delete (force=true overrides)")
         0L
       } else {
-        val lineage = spark.read.parquet(s"$outDir/lineage")
+        val lineage = TripleEmitter.readLineage(spark, outDir)
         val hashes = lineage.select("rule_set_hash").distinct()
           .collect().map(_.getString(0)).toSet
         require(force || hashes.subsetOf(Set(ruleSetHash)),
@@ -332,14 +349,16 @@ object Pipeline {
       (if (done.isEmpty) pages.toDF()
        else pages.toDF().filter(!bucket.isin(done.toSeq: _*))).as[Page]
 
-    if (!todo.isEmpty) {
-      val (triples, edges) = stageA(spark, todo, cfg)
+    // the one page pass; the emptiness test reads the cut, not the pages
+    val cut = Cut.cut(pageCut(spark, todo, cfg))
+    if (!cut.isEmpty) {
+      val (triples, edges) = stageAOf(spark, cut, cfg)
       // edges land before writeStage commits lineage (its scaladoc)
       edges.write.mode(SaveMode.Append).partitionBy("bucket").parquet(s"$outDir/edges")
       TripleEmitter.writeStage(spark, triples, outDir, hash, cfg.runId)
     }
 
-    val allTriples = spark.read.parquet(s"$outDir/triples").drop("bucket")
+    val allTriples = TripleEmitter.readTriples(spark, outDir)
     val allEdges = TripleEmitter.readEdges(spark, outDir)
     Resumed(outDir, hash,
       stageB(spark, allTriples, allEdges, cfg.maxCcIterations, cfg.broadcastCanonLimit),

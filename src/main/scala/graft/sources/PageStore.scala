@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.emit.TripleEmitter
 import graft.model.Page
@@ -17,8 +18,8 @@ import graft.model.Page
   *  - the BINARY `html` column lives in its own parquet column so any
   *    reader that doesn't select it never deserializes it (input_hint:
   *    html dominates page size — PlanAuditSpec pins this);
-  *  - readers get plain DataFrames/Datasets; all pruning/pushdown is
-  *    Catalyst's.
+  *  - readers get plain DataFrames/Datasets with the store's fixed
+  *    schema (no inference job); all pruning/pushdown is Catalyst's.
   */
 object PageStore {
 
@@ -28,9 +29,14 @@ object PageStore {
       .withColumn("bucket", TripleEmitter.bucketOf(col("url"), nBuckets))
       .write.mode(mode).partitionBy("bucket").parquet(path)
 
+  /** The store's columns: [[Page]]'s and the `bucket` partition.
+    * Reads give this schema, so they start no schema inference job.
+    */
+  private val schema = Encoders.product[Page].schema.add("bucket", IntegerType)
+
   def read(spark: SparkSession, path: String): Dataset[Page] = {
     import spark.implicits._
-    spark.read.parquet(path)
+    spark.read.schema(schema).parquet(path)
       .select("url", "warc_ts", "html", "text", "lang").as[Page]
   }
 
@@ -39,7 +45,7 @@ object PageStore {
     */
   def readBuckets(spark: SparkSession, path: String, buckets: Seq[Int]): Dataset[Page] = {
     import spark.implicits._
-    spark.read.parquet(path)
+    spark.read.schema(schema).parquet(path)
       .filter(col("bucket").isin(buckets: _*))
       .select("url", "warc_ts", "html", "text", "lang").as[Page]
   }

@@ -275,6 +275,50 @@ class PipelineSpec extends AnyFunSuite {
     assert(resumed == oneShot)
   }
 
+  test("a page with NULL text yields no mention triples and leaves the rest unchanged, both trustText modes") {
+    val pages = Fixtures.pages(spark, 32, 3)
+    val u0 = pages.first().url
+    val broken = pages.map(p => if (p.url == u0) p.copy(text = null, html = null) else p)
+    val want = toSet(Pipeline.run(spark, pages.filter(_.url != u0), cfg()))
+    for (trust <- Seq(true, false)) {
+      val got = toSet(Pipeline.run(spark, broken, cfg().copy(trustText = trust)))
+      assert(!got.exists(_._1 == u0), s"trustText = $trust: the NULL-text page minted triples")
+      assert(got == want, s"trustText = $trust")
+    }
+  }
+
+  test("resumable run over a half-committed store reads each input page once") {
+    val dir = Files.createTempDirectory("graft-onepass").toString
+    val pages = Fixtures.pages(spark, 80, 7)
+    val c = cfg(Some(dir))
+    val oneShot = toSet(Pipeline.run(spark, pages, c))
+    Pipeline.runResumable(spark,
+      pages.toDF().filter(TripleEmitter.bucketOf(col("url"), 8) < 4).as[graft.model.Page], c)
+    val reads = spark.sparkContext.longAccumulator("page reads")
+    val counted = pages.map { p => reads.add(1); p }
+    val (out, m) = Pipeline.runResumableWithMetrics(spark, counted, c.copy(runId = "r1"))
+    assert(reads.value == 80L, s"${reads.value} page reads for 80 pages")
+    assert(m.buckets_skipped > 0 && m.buckets_done > 0)
+    assert(toSet(out) == oneShot)
+  }
+
+  test("the store's pages, lineage and triples are read without a job; lineage is written as model.Lineage") {
+    val base = Files.createTempDirectory("graft-schemas").toString
+    val pages = Fixtures.pages(spark, 40, 4)
+    graft.sources.PageStore.write(pages, s"$base/pages", nBuckets = 8)
+    Pipeline.runResumable(spark, graft.sources.PageStore.read(spark, s"$base/pages"),
+      cfg(Some(s"$base/out")))
+    val (_, jobs) = jobsOf {
+      graft.sources.PageStore.read(spark, s"$base/pages")
+      TripleEmitter.readLineage(spark, s"$base/out")
+      TripleEmitter.readTriples(spark, s"$base/out")
+    }
+    assert(jobs.isEmpty, s"${jobs.size} jobs before any action")
+    def fields(t: org.apache.spark.sql.types.StructType) = t.fields.toSeq.map(f => (f.name, f.dataType))
+    assert(fields(spark.read.parquet(s"$base/out/lineage").schema) ==
+      fields(org.apache.spark.sql.Encoders.product[graft.model.Lineage].schema))
+  }
+
   test("file: URI store: resumable run equals one-shot, a re-run skips every bucket") {
     val dir = Files.createTempDirectory("graft-uri").toString
     val pages = Fixtures.pages(spark, 40, 4)

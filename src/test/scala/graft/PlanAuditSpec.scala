@@ -34,6 +34,35 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("lang"), "mention detection must not read lang")
   }
 
+  /** The ScalaUDFs named `name` in `df`'s executed plan. */
+  def udfs(df: DataFrame, name: String): Int = {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    df.queryExecution.executedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case u: ScalaUDF if u.udfName.contains(name) => u
+    })).size
+  }
+
+  test("stage A's page cut: one narrow projection, html unread when text is trusted, text and hits computed once") {
+    import graft.run.{Descriptors, Pipeline}
+    val dir = java.nio.file.Files.createTempDirectory("plan-pagecut").toString + "/pages"
+    graft.sources.PageStore.write(graft.fixtures.Fixtures.pages(spark, 16, 2), dir, nBuckets = 4)
+    val pages = graft.sources.PageStore.read(spark, dir)
+    val cfg = Pipeline.Config(Descriptors.imfJson, graft.fixtures.Fixtures.gazetteer, nBuckets = 4)
+    for (trust <- Seq(true, false)) {
+      val cut = Pipeline.pageCut(spark, pages, cfg.copy(trustText = trust))
+      val p = plan(cut)
+      if (trust) assert(p.contains("ReadSchema: struct<url:string,text:string,lang:string>"), p)
+      assert(!p.contains("Exchange"), p)
+      assert(udfs(cut, "html_text") == (if (trust) 0 else 1) && udfs(cut, "mention_hits") == 1, p)
+    }
+  }
+
+  test("mention detection runs the trie once per page (no filters inferred from the explode)") {
+    val mentions = graft.mentions.MentionDetector.detect(spark,
+      graft.fixtures.Fixtures.pages(spark, 16, 2), graft.fixtures.Fixtures.gazetteer)
+    assert(udfs(mentions.toDF(), "mention_hits") == 1, plan(mentions.toDF()))
+  }
+
   test("q_join_agg: tiny dim joins via broadcast, key filter pushed") {
     val p = plan(Queries.qJoinAgg(spark, d))
     assert(p.contains("BroadcastHashJoin"))

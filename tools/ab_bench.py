@@ -27,6 +27,11 @@ first match wins:
               reads better than every parent run;
   held        otherwise.
 
+Each end-to-end metric also shows how many pairs the side that ran first
+in the pair won (ties count for neither): near n/2 when the order does
+not matter, near n when running first is itself an advantage. It does
+not enter the verdict.
+
 Last, it prints the failed and attempted ops of each side, and the
 runs that gave no result. Only the command line above touches perfbench/.
 """
@@ -80,7 +85,7 @@ def summarize(runs, better):
     names = sorted({k for r in runs for k in metrics_of(r)})
     rows = []
     for name in names:
-        par, chg, won, n = [], [], 0, 0
+        par, chg, won, first_won, n = [], [], 0, 0, 0
         for seed in sorted(pairs):
             a = metrics_of(pairs[seed].get("parent", {})).get(name)
             b = metrics_of(pairs[seed].get("change", {})).get(name)
@@ -89,10 +94,14 @@ def summarize(runs, better):
             par.append(a)
             chg.append(b)
             n += 1
-            if (b > a) if better.get(name, "higher") == "higher" else (b < a):
+            higher = better.get(name, "higher") == "higher"
+            if (b > a) if higher else (b < a):
                 won += 1
+            first, second = (b, a) if pairs[seed]["change"].get("first") else (a, b)
+            if (first > second) if higher else (first < second):
+                first_won += 1
         if n:
-            rows.append((name, par, chg, won, n))
+            rows.append((name, par, chg, won, first_won, n))
     return rows
 
 
@@ -157,13 +166,15 @@ def main():
         bounds = {m["name"]: m["bound"] for m in bench.get("end_to_end", [])}
     except (OSError, ValueError, KeyError):
         better, bounds = {}, {}
-    print("%s: median [q1-q3], parent -> change, pairs the change won, verdict" % key)
-    for name, par, chg, won, n in summarize(runs, better):
+    print("%s: median [q1-q3], parent -> change, pairs the change won, verdict, "
+          "pairs the side that ran first won" % key)
+    for name, par, chg, won, first_won, n in summarize(runs, better):
         p, c = quartiles(par), quartiles(chg)
         v = (verdict(par, chg, won, n, better.get(name, "higher"), bounds[name])
              if name in bounds else "")
-        print("  %-24s %.5g [%.5g-%.5g] -> %.5g [%.5g-%.5g]  %d/%d  %s" % (
-            name, p[1], p[0], p[2], c[1], c[0], c[2], won, n, v))
+        bias = "  first won %d/%d" % (first_won, n) if name in bounds else ""
+        print("  %-24s %.5g [%.5g-%.5g] -> %.5g [%.5g-%.5g]  %d/%d  %s%s" % (
+            name, p[1], p[0], p[2], c[1], c[0], c[2], won, n, v, bias))
     for side in ("parent", "change"):
         print("  %-6s ops failed/attempted %d/%d, runs without a result %d" % (
             (side,) + ops(runs, side)))
