@@ -13,9 +13,9 @@ import graft.model.{Mention, Page}
   * [[hits]] is a projection, not a `mapPartitions`: stage A computes a
   * page's hits in the same narrow projection as its record fields, so
   * one page pass feeds the mapping, the mentions and the linker. The
-  * broadcast is owned by the plans of the Columns it builds, like
-  * `ConnectedComponents.lookup`'s. No shuffle, pipelined with the
-  * extraction/mapping stage.
+  * broadcast is owned by the plans of the Columns it builds, like the
+  * lookup of `ConnectedComponents.rewrite`. No shuffle, pipelined with
+  * the extraction/mapping stage.
   */
 object MentionDetector {
 
@@ -24,22 +24,17 @@ object MentionDetector {
 
   /** The trie over `gazetteer` as ONE broadcast: the returned function
     * maps a text Column to its `array<struct<surface, begin, end,
-    * entity_id>>` of hits, in text order, and NULL text to no hits.
+    * entity_id>>` of hits, in text order, and NULL text to no hits. The
+    * hits are word-bounded and non-overlapping
+    * (`AhoCorasick.findNonOverlapping`).
     */
-  def hits(
-      spark: SparkSession,
-      gazetteer: Seq[(String, String)],
-      wordBoundary: Boolean = true,
-      nonOverlapping: Boolean = true): Column => Column = {
+  def hits(spark: SparkSession, gazetteer: Seq[(String, String)]): Column => Column = {
     val bc = spark.sparkContext.broadcast(AhoCorasick.build(gazetteer))
     val find = udf { (text: String) =>
       if (text == null) Nil
       else {
         val ac = bc.value
-        val found =
-          if (nonOverlapping) ac.findNonOverlapping(text, wordBoundary)
-          else ac.findAll(text, wordBoundary)
-        found.map { h =>
+        ac.findNonOverlapping(text).map { h =>
           val (surface, eid) = ac.patterns(h.patternIdx)
           Hit(surface, h.begin, h.end, eid)
         }
@@ -56,15 +51,9 @@ object MentionDetector {
     * `isnotnull(hits)` filters and push them, trie scan and all, below
     * the projection — three scans per page.
     */
-  def detect(
-      spark: SparkSession,
-      pages: Dataset[Page],
-      gazetteer: Seq[(String, String)],
-      wordBoundary: Boolean = true,
-      nonOverlapping: Boolean = true): Dataset[Mention] = {
-    val found = hits(spark, gazetteer, wordBoundary, nonOverlapping)
-    explodeHits(pages.toDF(), found(col("text")))
-  }
+  def detect(spark: SparkSession, pages: Dataset[Page],
+      gazetteer: Seq[(String, String)]): Dataset[Mention] =
+    explodeHits(pages.toDF(), hits(spark, gazetteer)(col("text")))
 
   /** (url, surface, begin, end, entity_id), one row per element of
     * `hits` on each row of `df`.

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.canon.ConnectedComponents
+
 /** Deduplication operators for training-data curation, each designed
   * around its 100 TB shuffle shape:
   *
@@ -487,30 +489,33 @@ object Dedup {
     * over the near-dup pair graph (reusing the KG canonicalizer — the
     * same driver-union-find/distributed-loop machinery), keeping the
     * smallest doc_id per cluster. Docs in no pair are their own
-    * canonical. Output: (doc_id, canon_id) for every document. On the
-    * driver path every document is looked up in the labels' one
-    * lookup broadcast, as stage B rewrites URIs; on the distributed
-    * path the documents are left-joined with the components.
+    * canonical. Output: (doc_id, canon_id) for every document. Each
+    * document's label goes through the components' one canonical
+    * rewrite, as stage B's URIs do (`ConnectedComponents.rewrite`, which
+    * owns the lookup-or-join decision and its gates).
     */
-  def clusterAndElect(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    import graft.canon.ConnectedComponents
+  def clusterAndElect(docs: DataFrame, pairs: DataFrame): DataFrame =
+    clusterAndElect(docs, pairs, ConnectedComponents.localEdgeThreshold,
+      ConnectedComponents.defaultBroadcastCanonLimit)
+
+  /** [[clusterAndElect]] with the CC path's edge threshold and the
+    * rewrite's entry gate set: `localThreshold = 0` forces the
+    * distributed loop.
+    */
+  private[graft] def clusterAndElect(docs: DataFrame, pairs: DataFrame, localThreshold: Long,
+      broadcastCanonLimit: Long): DataFrame = {
     val spark = docs.sparkSession
-    // zero-padded labels make lexicographic min == numeric min
-    def uri(c: Column) = lpad(c.cast("string"), 12, "0")
-    val edges = pairs.select(uri(col("id_a")).as("src"), uri(col("id_b")).as("dst"))
-    val ids = docs.select(col("doc_id"))
-    ConnectedComponents.components(spark, edges, 25, ConnectedComponents.localEdgeThreshold) match {
-      case Left(labels) =>
-        val u = uri(col("doc_id"))
-        val canon = ConnectedComponents.lookup(spark, labels)(u)
-        ids.select(col("doc_id"),
-          when(canon === u, col("doc_id")).otherwise(canon.cast("long")).as("canon_id"))
-      case Right((frame, _)) =>
-        val cc = frame.select(col("node").cast("long").as("doc_id"),
-          col("comp").cast("long").as("canon"))
-        ids.join(cc, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("canon"), col("doc_id")).as("canon_id"))
-    }
+    // doc_id + 2^63 as 20 zero-padded digits: lexicographic order is
+    // numeric order over every long, and no two ids share a label
+    val offset = lit(BigDecimal(2).pow(63))
+    def label(c: Column) = lpad((c.cast("decimal(20,0)") + offset).cast("string"), 20, "0")
+    val edges = pairs.select(label(col("id_a")).as("src"), label(col("id_b")).as("dst"))
+    val canonical = ConnectedComponents.rewrite(spark,
+      ConnectedComponents.components(spark, edges, 25, localThreshold),
+      broadcastCanonLimit, ConnectedComponents.lookupBudget(spark))
+    canonical(docs.select(col("doc_id"), label(col("doc_id")).as("label")), "label", None)
+      .select(col("doc_id"),
+        (col("label").cast("decimal(20,0)") - offset).cast("long").as("canon_id"))
   }
 
   // ---------- embedding near-dup ----------

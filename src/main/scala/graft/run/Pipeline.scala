@@ -59,7 +59,7 @@ object Pipeline {
       trustText: Boolean = true,
       anchorField: String = "country",
       maxCcIterations: Int = 25,
-      broadcastCanonLimit: Long = Pipeline.defaultBroadcastCanonLimit)
+      broadcastCanonLimit: Long = ConnectedComponents.defaultBroadcastCanonLimit)
 
   val MENTIONS_P = "http://schema.org/mentions"
 
@@ -118,107 +118,33 @@ object Pipeline {
     (mapped.unionByName(mentionTriples), edges)
   }
 
-  /** Row-count gate for the canonical-map lookup broadcast: the most
-    * (uri, canonical) entries forced into every executor. A broadcast
-    * is not advisory — every executor holds all of it — so broadcasting
-    * an unbounded map is an executor-OOM waiting for a dense same-as
-    * graph (canonical map ∝ non-root nodes). One entry is a
-    * `java.util.HashMap` node and two strings: `SizeEstimator` on a
-    * 200k-entry map (JDK 17) gave 207, 240 and 365 bytes per entry at
-    * 35, 45 and 85 URI characters, so the default can take about 1 GB
-    * of every executor's heap (and the driver's, while it builds the
-    * map). Above the gate the rewrite runs as a plain shuffle join
-    * and AQE may still promote it from RUNTIME stats, which is the
-    * decision that's actually safe to leave to Spark. (VERDICT round 2,
-    * "What's wrong" #1.) The gate caps what executors hold only on the
-    * distributed CC path, where [[lookupBudget]] caps the map's bytes
-    * too: on the driver path the join side above the gate is itself a
-    * broadcast of the non-root labels (`ConnectedComponents.labelFrame`),
-    * so they reach every executor either way. With the defaults that
-    * branch is unreachable: non-root nodes ≤ distinct edges ≤
-    * `localEdgeThreshold` (2M) < 4M.
-    */
-  val defaultBroadcastCanonLimit: Long = 4000000L
-
-  /** Estimated heap bytes of a lookup of `entries` (uri, canonical)
-    * entries whose URIs total `chars` characters: 96 bytes per entry
-    * plus 1.6 per character, the line through the `SizeEstimator`
-    * measurements of [[defaultBroadcastCanonLimit]] (208, 240 and 368
-    * bytes at 35, 45 and 85 characters per URI, against 207, 240 and
-    * 365 measured).
-    */
-  private[graft] def lookupBytes(entries: Long, chars: Long): Long = 96L * entries + chars * 8 / 5
-
-  /** The most heap bytes the distributed CC path's lookup may take: a
-    * quarter of `spark.executor.memory` (Spark's default 1g if unset).
-    * Every executor holds the whole deserialized map beside its tasks.
-    */
-  private[graft] def lookupBudget(spark: SparkSession): Long =
-    spark.sparkContext.getConf.getSizeAsBytes("spark.executor.memory", "1g") / 4
-
-  /** Stage B: canonicalize subjects/objects via CC over same-as edges,
-    * then content dedup. At most `broadcastCanonLimit` canonical-map
-    * entries are rewritten through one lookup broadcast in a narrow
-    * projection: on the driver CC path the map comes straight from the
-    * union-find labels, on the distributed path one aggregate counts
-    * its entries and their characters, then it is collected once if it
-    * also fits [[lookupBudget]]. The plan of the result owns the
-    * broadcast, so no action on it rebuilds or re-collects the map. A
-    * larger map is joined, shuffled, on `s` and on `o_lex`.
+  /** Stage B: connected components over the same-as edges, then
+    * [[canonicalize]]: one canonical rewrite of subjects and IRI
+    * objects, then content dedup. `broadcastCanonLimit` and the
+    * executor-memory byte budget (`ConnectedComponents.lookupBudget`)
+    * gate the rewrite's lookup broadcast; both gates live in
+    * `ConnectedComponents.rewrite`.
     */
   def stageB(spark: SparkSession, triples: DataFrame, edges: DataFrame,
       maxCcIterations: Int = 25,
-      broadcastCanonLimit: Long = defaultBroadcastCanonLimit): DataFrame =
+      broadcastCanonLimit: Long = ConnectedComponents.defaultBroadcastCanonLimit): DataFrame =
     canonicalize(spark, triples,
       ConnectedComponents.components(spark, edges.select("src", "dst"),
         maxCcIterations, ConnectedComponents.localEdgeThreshold),
-      broadcastCanonLimit, lookupBudget(spark))
+      broadcastCanonLimit, ConnectedComponents.lookupBudget(spark))
 
-  /** Stage B after CC: the canonical rewrite of `triples` by the
-    * components `cc` (driver labels or the distributed frame), gated
-    * by `broadcastCanonLimit` and, on the distributed path, by
-    * `lookupBytes` against `budget`, then content dedup.
+  /** Stage B after CC: `s`, and `o_lex` where `o_kind` is `iri`, go
+    * through the one canonical rewrite of the components `cc`
+    * (`ConnectedComponents.rewrite`, which owns the lookup-or-join
+    * decision and its gates `broadcastCanonLimit` and `budget`), then
+    * content dedup. Both columns share the rewrite's one lookup
+    * broadcast, or its one canonical map.
     */
   private[graft] def canonicalize(spark: SparkSession, triples: DataFrame,
       cc: Either[Array[(String, String)], (DataFrame, Int)],
       broadcastCanonLimit: Long, budget: Long): DataFrame = {
-    import spark.implicits._
-    // the map as (uri, canonical) entries on the driver, or as a frame
-    val canon: Either[Array[(String, String)], DataFrame] = cc match {
-      case Left(labels) =>
-        val m = labels.filter { case (node, comp) => node != comp }
-        if (m.length <= broadcastCanonLimit) Left(m)
-        else Right(ConnectedComponents.labelFrame(spark, m).toDF("uri", "canonical"))
-      case Right((frame, _)) =>
-        // CC output is already cut, so the aggregate and collect re-read it
-        val cmap = ConnectedComponents.canonicalMap(frame)
-        val size = cmap.agg(count(lit(1)),
-          coalesce(sum(length(col("uri")) + length(col("canonical"))), lit(0L))).first()
-        if (size.getLong(0) <= broadcastCanonLimit &&
-            lookupBytes(size.getLong(0), size.getLong(1)) <= budget)
-          Left(cmap.as[(String, String)].collect())
-        else Right(cmap)
-    }
-
-    val rewritten = canon match {
-      case Left(m) =>
-        val canonical = ConnectedComponents.lookup(spark, m)
-        triples
-          .withColumn("s", canonical(col("s")))
-          .withColumn("o_lex",
-            when(col("o_kind") === "iri", canonical(col("o_lex"))).otherwise(col("o_lex")))
-      case Right(cmap) =>
-        val smap = cmap.withColumnRenamed("uri", "s").withColumnRenamed("canonical", "s_canon")
-        val omap = cmap.withColumnRenamed("uri", "o_lex").withColumnRenamed("canonical", "o_canon")
-        triples
-          .join(smap, Seq("s"), "left")
-          .withColumn("s", coalesce(col("s_canon"), col("s")))
-          .join(omap, Seq("o_lex"), "left")
-          .withColumn("o_lex",
-            when(col("o_kind") === "iri", coalesce(col("o_canon"), col("o_lex")))
-              .otherwise(col("o_lex")))
-    }
-
+    val canonical = ConnectedComponents.rewrite(spark, cc, broadcastCanonLimit, budget)
+    val rewritten = canonical(canonical(triples, "s", None), "o_lex", Some(col("o_kind") === "iri"))
     TripleEmitter.dedup(
       rewritten.select("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang", "g"))
   }

@@ -83,6 +83,50 @@ class OpsSpec extends AnyFunSuite {
     assert(run(1) == run(13))
   }
 
+  // ---------- near-dup clustering ----------
+
+  import graft.canon.ConnectedComponents.{defaultBroadcastCanonLimit, localEdgeThreshold}
+
+  /** (doc_id -> canon_id) of `clusterAndElect`; `localThreshold = 0`
+    * forces the distributed CC loop.
+    */
+  def elect(ids: Seq[Long], pairs: Seq[(Long, Long)], localThreshold: Long = localEdgeThreshold,
+      limit: Long = defaultBroadcastCanonLimit) = {
+    val out = Dedup.clusterAndElect(ids.toDF("doc_id"), pairs.toDF("id_a", "id_b"),
+      localThreshold, limit)
+    (out.as[(Long, Long)].collect().toMap, out.queryExecution.executedPlan.toString)
+  }
+
+  test("clusterAndElect: ids of 13+ digits, negative ids and the long extremes keep their own clusters and numeric order") {
+    val ids = Seq(1L, 100000000000L, 1000000000000L, -5L, -3L, Long.MinValue, Long.MaxValue)
+    val pairs = Seq((1L, 1000000000000L), (-5L, -3L), (Long.MinValue, Long.MaxValue))
+    val want = Map(1L -> 1L, 100000000000L -> 100000000000L, 1000000000000L -> 1L,
+      -5L -> -5L, -3L -> -5L, Long.MinValue -> Long.MinValue, Long.MaxValue -> Long.MinValue)
+    assert(Dedup.clusterAndElect(ids.toDF("doc_id"), pairs.toDF("id_a", "id_b"))
+      .as[(Long, Long)].collect().toMap == want)
+    assert(elect(ids, pairs, localThreshold = 0L)._1 == want, "distributed CC path")
+  }
+
+  test("clusterAndElect: both CC paths elect the union-find min per cluster; the rewrite is the lookup at the default limit, a join at 0") {
+    val chain = Seq((7L, 3L), (3L, 9L), (9L, 100L), (100L, 42L))
+    val ring = Seq((205L, 1000L), (1000L, 230L), (230L, 201L), (201L, 205L))
+    val hub = Seq(700L, 60L, 800L, 6000L).map(500L -> _)
+    val pairs = chain ++ ring ++ hub
+    val ids = (pairs.flatMap { case (a, b) => Seq(a, b) } :+ 999L).distinct
+    // union-find oracle: min doc_id per component, a doc in no pair maps to itself
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = { val p = parent.getOrElse(x, x); if (p == x) x else find(p) }
+    pairs.foreach { case (a, b) => val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ra max rb) = ra min rb }
+    val want = ids.map(i => i -> find(i)).toMap
+    assert(want(42L) == 3L && want(205L) == 201L && want(6000L) == 60L && want(999L) == 999L)
+    for (threshold <- Seq(localEdgeThreshold, 0L); limit <- Seq(defaultBroadcastCanonLimit, 0L)) {
+      val (got, plan) = elect(ids, pairs, threshold, limit)
+      assert(got == want, s"localThreshold = $threshold, limit = $limit")
+      if (limit > 0) assert(!plan.contains("Join"), s"below the gate the rewrite is the lookup:\n$plan")
+      else assert(plan.contains("Join"), s"above the gate the rewrite is a join:\n$plan")
+    }
+  }
+
   // ---------- embeddings ----------
 
   test("cosineOf: identity, orthogonality, symmetry") {

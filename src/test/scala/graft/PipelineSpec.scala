@@ -102,7 +102,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("stageB: the lookup (below the gate) and the shuffle join (above it) return the same rows") {
     val (triples, edges, want) = adversarialStageB()
-    for (limit <- Seq(Pipeline.defaultBroadcastCanonLimit, 0L)) {
+    for (limit <- Seq(ConnectedComponents.defaultBroadcastCanonLimit, 0L)) {
       val out = Pipeline.stageB(spark, triples, edges, broadcastCanonLimit = limit)
       assert(out.count() == want.size && toSet(out) == want, s"broadcastCanonLimit = $limit")
     }
@@ -110,10 +110,10 @@ class PipelineSpec extends AnyFunSuite {
 
   test("stageB distributed CC path: the counted, collected lookup and the join above the gate return the same rows") {
     val (triples, edges, want) = adversarialStageB()
-    for (limit <- Seq(Pipeline.defaultBroadcastCanonLimit, 0L)) {
+    for (limit <- Seq(ConnectedComponents.defaultBroadcastCanonLimit, 0L)) {
       val cc = ConnectedComponents.components(spark, edges, 25, localThreshold = 0L)
       assert(cc.isRight, "localThreshold = 0 must take the distributed loop")
-      val out = Pipeline.canonicalize(spark, triples, cc, limit, Pipeline.lookupBudget(spark))
+      val out = Pipeline.canonicalize(spark, triples, cc, limit, ConnectedComponents.lookupBudget(spark))
       assert(out.count() == want.size && toSet(out) == want, s"broadcastCanonLimit = $limit")
       val plan = out.queryExecution.executedPlan.toString
       if (limit > 0) assert(!plan.contains("Join"), s"below the gate the rewrite is the lookup:\n$plan")
@@ -124,14 +124,14 @@ class PipelineSpec extends AnyFunSuite {
   test("stageB distributed CC path: a map over the byte budget is joined, not broadcast") {
     val (triples, edges, want) = adversarialStageB()
     // its map: b -> a, c -> a, y -> x, 3 entries of 3-character URIs
-    assert(Pipeline.lookupBytes(3, 18) == 96 * 3 + 28)
+    assert(ConnectedComponents.lookupBytes(3, 18) == 96 * 3 + 28)
     // the default limit at 45-character URIs is about 1 GB, over the 1g default's quarter
-    assert(Pipeline.lookupBytes(Pipeline.defaultBroadcastCanonLimit, 90L * 4000000L) == 960000000L)
-    assert(Pipeline.lookupBudget(spark) ==
+    assert(ConnectedComponents.lookupBytes(ConnectedComponents.defaultBroadcastCanonLimit, 90L * 4000000L) == 960000000L)
+    assert(ConnectedComponents.lookupBudget(spark) ==
       spark.sparkContext.getConf.getSizeAsBytes("spark.executor.memory", "1g") / 4)
     for (budget <- Seq(316L, 315L)) {
       val cc = ConnectedComponents.components(spark, edges, 25, localThreshold = 0L)
-      val out = Pipeline.canonicalize(spark, triples, cc, Pipeline.defaultBroadcastCanonLimit, budget)
+      val out = Pipeline.canonicalize(spark, triples, cc, ConnectedComponents.defaultBroadcastCanonLimit, budget)
       assert(toSet(out) == want, s"budget = $budget")
       val plan = out.queryExecution.executedPlan.toString
       if (budget == 316L) assert(!plan.contains("Join"), s"within the budget the rewrite is the lookup:\n$plan")
@@ -356,7 +356,7 @@ class PipelineSpec extends AnyFunSuite {
     // wrong partitioning claim would show as duplicate or split output
     val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
     spark.conf.set(coalesce, "false")
-    try for (limit <- Seq(Pipeline.defaultBroadcastCanonLimit, 0L)) {
+    try for (limit <- Seq(ConnectedComponents.defaultBroadcastCanonLimit, 0L)) {
       val lc = c.copy(broadcastCanonLimit = limit)
       val (executed, _) = Pipeline.runResumableWithMetrics(spark, pages, lc)
       assert(executed.rdd.getNumPartitions > 1)
