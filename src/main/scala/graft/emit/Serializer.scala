@@ -243,14 +243,10 @@ object Serializer {
     */
   val driverSideLimit: Long = 5000000L
 
-  private def collectGuarded(triples: DataFrame): Array[Row] = {
-    val rows = TripleEmitter.dedup(triples)
-      .select("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang", "g")
-      .limit((driverSideLimit + 1).toInt).collect()
-    require(rows.length <= driverSideLimit,
-      s"document-format export exceeds $driverSideLimit triples; use nquads/turtle/trig (distributed)")
-    rows
-  }
+  private def collectGuarded(triples: DataFrame): Array[Row] =
+    graft.util.Collect.bounded(TripleEmitter.dedup(triples)
+        .select("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang", "g"),
+      driverSideLimit, "document-format export", "use nquads/turtle/trig (distributed)")
 
   /** XML 1.0 `Char` production. */
   private def isXmlChar(c: Int): Boolean =

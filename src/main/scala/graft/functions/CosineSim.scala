@@ -25,6 +25,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * fold formulation and [[graft.ops.Dedup.cosineOf]], so results are
   * bit-identical, not just close. Element nulls are not tolerated
   * (embeddings are dense); length mismatch scores the common prefix.
+  *
+  * A zero-norm side has no similarity: its cosine is 0/0 = NaN, which
+  * Spark orders above every number (`NaN >= tau` holds, and NaN sorts
+  * first under DESC), so the expression returns NULL there instead.
+  * Filters drop it and rankings skip it; this is the one place the
+  * engine decides it (the executor loops skip the NaN of
+  * [[graft.ops.Dedup.cosineOf]]).
   */
 @ExpressionDescription(
   usage = "_FUNC_(a, b) - cosine similarity of two float arrays.")
@@ -43,14 +50,18 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
   }
 
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   override def prettyName: String = "graft_cosine"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    CosineSim.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val s = CosineSim.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (s.isNaN) null else s
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.CosineSim$$.MODULE$$.cosine($a, $b)")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.functions.CosineSim$$.MODULE$$.cosine($a, $b);
+         |${ev.isNull} = Double.isNaN(${ev.value});""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
@@ -59,7 +70,9 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
 
 object CosineSim {
 
-  /** Single pass, three primitive accumulators, ascending index order. */
+  /** Single pass, three primitive accumulators, ascending index order;
+    * NaN for a zero-norm side.
+    */
   def cosine(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0

@@ -142,24 +142,15 @@ object Linker {
     val spark = contexts.sparkSession
     import spark.implicits._
     val planes = Similarity.hyperplanes(tables, bits, dim)
-    // gazetteer → driver. Bounded by contract (entity tables are the
-    // small side) — and the contract is now ENFORCED (ADVICE round 5):
-    // collecting through limit(cap+1) bounds driver memory to the cap
-    // even on a breached contract, and the breach fails LOUDLY here
-    // instead of as a mid-job driver OOM. Same single collect job.
-    val cap = maxEntityRows
-    // untyped Row collect so the limit stays the TOP operator: that
-    // keeps Spark's CollectLimit incremental-take fast path (a typed
-    // collect would plan the deserializer above the limit and pay a
-    // single-partition exchange)
-    val capped = entities
-      .select(col("entity_id").cast("long"), col("embedding"))
-      .limit(cap + 1)
-      .collect()
-    require(capped.length <= cap,
-      s"annLink entity side exceeds $cap rows — the gazetteer must be " +
-        "the broadcastable small side (raise Linker.maxEntityRows " +
-        "deliberately, or use the bucketed corpus-vs-corpus dedup ops)")
+    // gazetteer → driver: bounded by contract (entity tables are the
+    // small side), and the contract is ENFORCED (ADVICE round 5): a
+    // breach fails at the one bounded collect, not as a driver OOM
+    val capped = graft.util.Collect.bounded(
+      entities.select(col("entity_id").cast("long"), col("embedding")),
+      maxEntityRows, "annLink entity side",
+      "the gazetteer must be the broadcastable small side (raise " +
+        "Linker.maxEntityRows deliberately, or use the bucketed " +
+        "corpus-vs-corpus dedup ops)")
     val ents: Array[(Long, Array[Float])] = capped
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
@@ -187,8 +178,11 @@ object Linker {
               }
               s.toArray
             }
+          // NaN (a zero norm) has no similarity and is never ranked
           cand.iterator
-            .map(i => (es(i)._1, Dedup.round5(Dedup.cosineOf(emb, es(i)._2))))
+            .map(i => (es(i)._1, Dedup.cosineOf(emb, es(i)._2)))
+            .filterNot(_._2.isNaN)
+            .map { case (eid, raw) => (eid, Dedup.round5(raw)) }
             .filter(_._2 >= minSim)
             .toArray.sortBy { case (eid, sim) => (-sim, eid) }
             .take(k).iterator.zipWithIndex

@@ -13,13 +13,23 @@ import graft.canon.ConnectedComponents
   *  - n-gram Jaccard: inverted-index self-join with a document-frequency
   *    cap (`maxDf`) so a stop-shingle ("of the and") can never create an
   *    O(n²) bucket — the cap is the scale knob.
-  *  - MinHash+LSH: signatures are pure Column trees (higher-order
-  *    functions over the shingle array, codegen'd); the only shuffle is
+  *  - MinHash+LSH: signatures come from a typed mapPartitions (see
+  *    minhashLshPairs for why not Column trees); the only shuffle is
   *    the band-bucket self-join, whose bucket sizes LSH bounds with high
   *    probability; candidates are verified with exact Jaccard.
-  *  - SimHash: 64-bit signature, banded into 4×16-bit chunks (any
+  *  - SimHash: 60-bit signature, banded into 4×15-bit chunks (any
   *    near-dup pair within Hamming distance 3 shares ≥1 exact chunk —
   *    pigeonhole), then verified with bit_count(xor).
+  *  - embedding LSH: sign-hash buckets ([[Similarity.signBuckets]]),
+  *    verified with exact cosine.
+  *
+  * Every blocked operator is one pipeline over one block table (the
+  * SparkER shape: blocking, block purging, comparison), and each step
+  * has one implementation: the block self-join (`blockJoin`, where a
+  * pair budget would go), the hot-block drop (`dropHotBlocks`), the
+  * exact Jaccard verify (`jaccardVerify`) and the block-size
+  * histogram (`blockSizeHist`), which reads the same table builder
+  * its operator self-joins.
   *
   * All signatures derive from content only (portable 31-bit hashing of
   * shingle text — graft.ops.Portable), never from row position —
@@ -55,15 +65,6 @@ object Dedup {
         i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))))
   }
 
-  /** Exact n-gram Jaccard near-dup pairs via inverted index.
-    *
-    * Shingles with document frequency 1 can't contribute to any pair
-    * and are dropped before the self-join; shingles with df > maxDf are
-    * treated as stop-shingles (scale guard — at web scale a handful of
-    * boilerplate shingles would otherwise quadratically dominate).
-    * Set sizes are computed BEFORE any df filtering so the Jaccard
-    * denominator is the true |A ∪ B|.
-    */
   /** Default stop-shingle cap: well above any real shingle's df at test
     * scale (sf0.1 max df = 25) so the oracle stays exact, but finite —
     * a boilerplate shingle at web scale can never create a bucket with
@@ -73,16 +74,99 @@ object Dedup {
     */
   val defaultMaxDf: Long = 10000L
 
-  /** Shared inverted-index core: per ordered doc pair, shingle-set
-    * sizes + intersection count — the sufficient statistics for every
-    * set-overlap measure (Jaccard, containment, dice, …).
+  // ---------- blocking: one self-join, one hot-block drop, one verify ----------
+
+  /** The one blocked-candidate self-join: rows of `a` and `b` that share
+    * every `keys` value and whose `id`s pass `cmp` (`<` for self-pairs,
+    * so each pair comes once) become `ids` pairs. Each `carry` column
+    * comes along from both sides as `<c>_a` / `<c>_b`, so a verify that
+    * needs it adds no join. Hints and pre-join steps (a repartition)
+    * stay with the caller. A pair budget belongs here.
     */
-  private def ngramInterCounts(docs: DataFrame, n: Int, maxDf: Long): DataFrame = {
+  private def blockJoin(a: DataFrame, b: DataFrame, keys: Seq[String], id: String,
+      cmp: (Column, Column) => Column, carry: Seq[String] = Nil,
+      ids: (String, String) = ("id_a", "id_b")): DataFrame =
+    a.as("a").join(b.as("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          cmp(col(s"a.$id"), col(s"b.$id")))
+      .select(Seq(col(s"a.$id").as(ids._1), col(s"b.$id").as(ids._2)) ++
+        carry.flatMap(c => Seq(col(s"a.$c").as(s"${c}_a"), col(s"b.$c").as(s"${c}_b"))): _*)
+
+  /** Rows per block, as `__df`: a shingle's document frequency, a
+    * bucket's size.
+    */
+  private def blockSizes(blocks: DataFrame, keys: Seq[String]): DataFrame =
+    blocks.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__df"))
+
+  /** A block that can pair and is not hot: 2 to `maxSize` rows. */
+  private def kept(size: Column, maxSize: Long): Column = size >= 2 && size <= maxSize
+
+  /** The one hot-block drop: keeps the rows of blocks with 2 to `maxSize`
+    * rows (a single-row block pairs nothing; a hot one pairs
+    * quadratically). Spelled as groupBy-count + join (ADVICE round 5):
+    * a WINDOW count funneled a hot block's whole posting list through
+    * ONE window task that AQE cannot split — the skew class
+    * passageDedup documents — and paid a per-partition SORT of the
+    * whole table; the groupBy's map-side partial aggregation absorbs hot
+    * keys instead, and the join back is AQE-skew-splittable.
+    * shuffle_hash pins the join away from the broadcast the round-4
+    * 100× run proved fatal: the kept-key table grows with the corpus,
+    * and AQE's runtime size estimate admitted it as a driver
+    * HashedRelation that OOMed (`BenchExtra --dedup-scale`; VERDICT r4
+    * item 6) — same refusal as passageDedup's ownership join. Aggregate
+    * and join key on the same columns, so the block table's exchange is
+    * planned once and reused.
+    */
+  private def dropHotBlocks(blocks: DataFrame, keys: Seq[String], maxSize: Long): DataFrame =
+    blocks.join(blockSizes(blocks, keys).filter(kept(col("__df"), maxSize))
+      .select(keys.map(col): _*).hint("shuffle_hash"), keys)
+
+  /** The one exact Jaccard verify: candidate pairs (their two id
+    * columns) joined to the shingle sets `sets` (doc_id, sh) of both
+    * sides, kept at jaccard ≥ tau. Blocking only prunes; this asserts.
+    */
+  private def jaccardVerify(cand: DataFrame, sets: DataFrame, tau: Double): DataFrame = {
+    val Array(a, b) = cand.columns
+    cand
+      .join(sets.withColumnRenamed("doc_id", a).withColumnRenamed("sh", "sh_a"), a)
+      .join(sets.withColumnRenamed("doc_id", b).withColumnRenamed("sh", "sh_b"), b)
+      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
+      .withColumn("jaccard", round(col("inter").cast("double") /
+        (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 5))
+      .filter(col("jaccard") >= tau)
+      .select(a, b, "jaccard")
+  }
+
+  /** log2 histogram of block sizes: one row per ⌊log2 size⌋ with the
+    * block count and the largest size. The largest bounds the self-join's
+    * worst key.
+    */
+  private def blockSizeHist(blocks: DataFrame, keys: Seq[String]): DataFrame =
+    log2Hist(blockSizes(blocks, keys))
+
+  private def log2Hist(sizes: DataFrame, extraKeys: Seq[String] = Nil): DataFrame =
+    sizes.groupBy((extraKeys.map(col) :+
+        floor(log2(col("__df"))).cast("long").as("log2_size")): _*)
+      .agg(count(lit(1)).as("n"), max(col("__df")).as("max_size"))
+      .orderBy((extraKeys :+ "log2_size").map(col): _*)
+
+  // ---------- n-gram inverted index ----------
+
+  /** (doc_id, sz, shingle) posting list: one row per distinct shingle of
+    * each document, with its set size taken BEFORE any df filtering, so
+    * the Jaccard denominator is the true |A ∪ B|. `shingles` comes from
+    * `shingleTable`.
+    */
+  private def posting(shingles: DataFrame): DataFrame =
+    shingles.select(col("doc_id"), col("sz"), explode(col("sh")).as("shingle"))
+
+  /** (doc_id, sh, sz) shingle sets of the documents that have any;
+    * typed shingling (see minhashLshPairs for the HOF rationale).
+    */
+  private def shingleTable(docs: DataFrame, n: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // typed shingling, cut once: the shingle sets feed both sides of
-    // the posting self-join (see minhashLshPairs for the HOF rationale)
-    val sh = graft.util.Cut.cut(docs
+    docs
       .select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
@@ -91,38 +175,37 @@ object Dedup {
           if (s.isEmpty) None else Some((id, s, s.length.toLong))
         }
       }
-      .toDF("doc_id", "sh", "sz"))
-    val posting = sh.select(col("doc_id"), col("sz"), explode(col("sh")).as("shingle"))
-    // df guard as groupBy-count + join (ADVICE round 5): the round-5
-    // WINDOW spelling funneled a mega-hot shingle's full posting list
-    // through ONE window task that AQE cannot split — the exact skew
-    // class passageDedup documents — and paid a per-partition SORT of
-    // the whole posting list; the groupBy's map-side partial
-    // aggregation absorbs hot shingles instead, and the join back is
-    // AQE-skew-splittable. shuffle_hash pins the join away from the
-    // broadcast the round-4 100× run proved fatal: the kept-shingle
-    // table grows with the corpus, and AQE's runtime size estimate
-    // admitted it as a driver HashedRelation that OOMed
-    // (`BenchExtra --dedup-scale`; VERDICT r4 item 6) — same refusal as
-    // passageDedup's ownership join. Both aggregate and join key on
-    // shingle, so the posting exchange is planned once and reused.
-    val keep = posting.groupBy("shingle").agg(count(lit(1)).as("__df"))
-      .filter(col("__df") >= 2 && col("__df") <= maxDf)
-      .select("shingle")
-    val p = posting.join(keep.hint("shuffle_hash"), "shingle")
+      .toDF("doc_id", "sh", "sz")
+  }
+
+  /** Shared inverted-index core: per ordered doc pair, shingle-set
+    * sizes + intersection count — the sufficient statistics for every
+    * set-overlap measure (Jaccard, containment, dice, …). The shingle
+    * sets are cut once: they feed both sides of the posting self-join.
+    */
+  private def ngramInterCounts(docs: DataFrame, n: Int, maxDf: Long): DataFrame = {
+    val p = dropHotBlocks(posting(graft.util.Cut.cut(shingleTable(docs, n))),
+      Seq("shingle"), maxDf)
     // the pair SELF-join is left unhinted, exactly as round 5 planned
     // it: at bench scale the planner broadcasts the kept posting side
     // (cheap, safe at these sizes), at production scale real stats
     // push it to a shuffled join AQE can skew-split — forcing
     // shuffle_hash here measured +0.6-1.1 s per consumer at sf0.1 by
     // duplicating the shuffled subtree on both sides.
-    p.as("a").join(p.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
+    blockJoin(p, p, Seq("shingle"), "doc_id", _ < _, carry = Seq("sz"))
+      .groupBy("id_a", "id_b", "sz_a", "sz_b")
       .agg(count(lit(1)).as("inter"))
   }
 
+  /** Exact n-gram Jaccard near-dup pairs via inverted index.
+    *
+    * Shingles with document frequency 1 can't contribute to any pair
+    * and are dropped before the self-join; shingles with df > maxDf are
+    * treated as stop-shingles (scale guard — at web scale a handful of
+    * boilerplate shingles would otherwise quadratically dominate).
+    * Set sizes are computed BEFORE any df filtering so the Jaccard
+    * denominator is the true |A ∪ B|.
+    */
   def ngramJaccardPairs(docs: DataFrame, n: Int = 3, tau: Double = 0.5,
       maxDf: Long = defaultMaxDf): DataFrame =
     ngramInterCounts(docs, n, maxDf)
@@ -187,25 +270,8 @@ object Dedup {
     sig
   }
 
-  /** MinHash/LSH near-dup pairs: band the signature, self-join on
-    * (band, bucket), verify candidates with EXACT Jaccard over the
-    * shingle sets (LSH only prunes; it never asserts).
-    *
-    * Signatures are computed in a typed mapPartitions, NOT as
-    * higher-order Column functions: Spark evaluates HOF lambdas
-    * interpreted (never whole-stage-codegen'd), which measured ~6x
-    * slower than tight JVM loops here — same trade the Aho-Corasick
-    * mention detector makes (SURVEY.md §2.2 UDF row). The signature
-    * frame is persisted: it feeds the band self-join (both sides) and
-    * the verify joins — at production scale this is the materialized
-    * signature table.
-    *
-    * numHashes = bands * rowsPerBand. With (16 bands × 4 rows) the
-    * collision probability at J=0.8 is ~0.9997, at J=0.2 is ~0.025 —
-    * the classic S-curve.
-    */
   /** (doc_id, sh, buckets) signature table — shared by the pair
-    * operator (which lineage-cuts it) and the bucket-size diagnostic.
+    * operators (which lineage-cut it) and the bucket-size diagnostic.
     */
   private def minhashSigTable(docs: DataFrame, n: Int, bands: Int,
       rowsPerBand: Int): DataFrame = {
@@ -232,27 +298,35 @@ object Dedup {
       .toDF("doc_id", "sh", "buckets")
   }
 
+  /** (doc_id, band, bucket) blocks of a signature table. */
+  private def banded(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id"), posexplode(col("buckets")).as(Seq("band", "bucket")))
+
+  private val bandKeys = Seq("band", "bucket")
+
+  /** MinHash/LSH near-dup pairs: band the signature, self-join on
+    * (band, bucket), verify candidates with EXACT Jaccard over the
+    * shingle sets (LSH only prunes; it never asserts).
+    *
+    * Signatures are computed in a typed mapPartitions, NOT as
+    * higher-order Column functions: Spark evaluates HOF lambdas
+    * interpreted (never whole-stage-codegen'd), which measured ~6x
+    * slower than tight JVM loops here — same trade the Aho-Corasick
+    * mention detector makes (SURVEY.md §2.2 UDF row). The signature
+    * frame is cut once: it feeds the band self-join (both sides) and
+    * the verify joins — at production scale this is the materialized
+    * signature table.
+    *
+    * numHashes = bands * rowsPerBand. With (16 bands × 4 rows) the
+    * collision probability at J=0.8 is ~0.9997, at J=0.2 is ~0.025 —
+    * the classic S-curve.
+    */
   def minhashLshPairs(docs: DataFrame, n: Int = 3, tau: Double = 0.5,
       bands: Int = 16, rowsPerBand: Int = 4): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val sh = graft.util.Cut.cut(minhashSigTable(docs, n, bands, rowsPerBand))
-    val banded = sh.select(col("doc_id"),
-        posexplode(col("buckets")).as(Seq("band", "bucket")))
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val sets = sh.select(col("doc_id"), col("sh"))
-    cand
-      .join(sets.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sets.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 5))
-      .filter(col("jaccard") >= tau)
-      .select("id_a", "id_b", "jaccard")
+    val b = banded(sh)
+    jaccardVerify(blockJoin(b, b, bandKeys, "doc_id", _ < _).distinct(),
+      sh.select(col("doc_id"), col("sh")), tau)
   }
 
   /** The MinHash signature table as a MATERIALIZABLE store:
@@ -285,28 +359,12 @@ object Dedup {
       rowsPerBand: Int = 4): DataFrame = {
     val st = graft.util.Cut.cut(store)
     val inc = graft.util.Cut.cut(minhashSigTable(incoming, n, bands, rowsPerBand))
-    def banded(sig: DataFrame) = sig.select(col("doc_id"),
-      posexplode(col("buckets")).as(Seq("band", "bucket")))
-    val bs = banded(st)
     val bi = banded(inc)
-    val candOld = bi.as("a").join(bs.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-        col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("id_new"), col("b.doc_id").as("id_match"))
-    val candNew = bi.as("a").join(bi.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-        col("a.doc_id") > col("b.doc_id"))
-      .select(col("a.doc_id").as("id_new"), col("b.doc_id").as("id_match"))
-    val cand = candOld.union(candNew).distinct()
-    val sets = st.select("doc_id", "sh").union(inc.select("doc_id", "sh"))
-    cand
-      .join(sets.withColumnRenamed("doc_id", "id_new").withColumnRenamed("sh", "sh_a"), "id_new")
-      .join(sets.withColumnRenamed("doc_id", "id_match").withColumnRenamed("sh", "sh_b"), "id_match")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 5))
-      .filter(col("jaccard") >= tau)
-      .select("id_new", "id_match", "jaccard")
+    val ids = ("id_new", "id_match")
+    val candOld = blockJoin(bi, banded(st), bandKeys, "doc_id", _ =!= _, ids = ids)
+    val candNew = blockJoin(bi, bi, bandKeys, "doc_id", _ > _, ids = ids)
+    jaccardVerify(candOld.union(candNew).distinct(),
+      st.select("doc_id", "sh").union(inc.select("doc_id", "sh")), tau)
   }
 
   // ---------- passage-level exact dedup (CCNet-style) ----------
@@ -414,12 +472,6 @@ object Dedup {
     sig
   }
 
-  /** SimHash near-dup pairs within Hamming distance maxHamming (≤ 3
-    * with 4 chunks, by pigeonhole): block on exact 15-bit chunks, then
-    * verify with bit_count(xor). Documents with no tokens are excluded
-    * (they carry no content signal; an all-zero signature would pair
-    * every empty document with every other).
-    */
   /** (doc_id, sig, chunks) signature table — shared by the pair
     * operator (which lineage-cuts it) and the bucket-size diagnostic.
     */
@@ -440,7 +492,13 @@ object Dedup {
       .toDF("doc_id", "sig", "chunks")
   }
 
-  /** `maxBucket` (default unbounded — the exact pigeonhole guarantee)
+  /** SimHash near-dup pairs within Hamming distance maxHamming (≤ 3
+    * with 4 chunks, by pigeonhole): block on exact 15-bit chunks, then
+    * verify with bit_count(xor). Documents with no tokens are excluded
+    * (they carry no content signal; an all-zero signature would pair
+    * every empty document with every other).
+    *
+    * `maxBucket` (default unbounded — the exact pigeonhole guarantee)
     * is the web-scale skew guard this round's own 10×-corpus evidence
     * demanded (BENCH.md): shared boilerplate pulls short documents'
     * signatures together, and the hottest chunk bucket then grows with
@@ -454,36 +512,21 @@ object Dedup {
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
       maxBucket: Long = Long.MaxValue): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     // cut: sig is consumed by both sides of the chunk self-join
-    val sigs = graft.util.Cut.cut(simhashSigTable(docs))
-    val chunked0 = sigs.select(col("doc_id"), col("sig"),
-      posexplode(col("chunks")).as(Seq("chunk", "key")))
-    // same groupBy-count + shuffle_hash spelling as the n-gram df
-    // guard (ADVICE round 5, and for the same reason): the window
-    // variant funneled a hot chunk key's whole posting through one
-    // unsplittable window task; partial aggregation absorbs the hot
-    // key map-side, and shuffle_hash pins the join away from the
-    // corpus-sized broadcast class the round-4 100× run OOMed on
-    val chunked =
-      if (maxBucket == Long.MaxValue) chunked0
-      else {
-        val keep = chunked0.groupBy("chunk", "key")
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") <= maxBucket)
-          .select("chunk", "key")
-        chunked0.join(keep.hint("shuffle_hash"), Seq("chunk", "key"))
-          .select("doc_id", "sig", "chunk", "key")
-      }
-    chunked.as("a").join(chunked.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.key") === col("b.key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast("long").as("hamming"))
+    val all = chunked(graft.util.Cut.cut(simhashSigTable(docs)))
+    val c = if (maxBucket == Long.MaxValue) all else dropHotBlocks(all, chunkKeys, maxBucket)
+    blockJoin(c, c, chunkKeys, "doc_id", _ < _, carry = Seq("sig"))
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
+
+  /** (doc_id, sig, chunk, key) blocks of a SimHash signature table. */
+  private def chunked(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), col("sig"), posexplode(col("chunks")).as(Seq("chunk", "key")))
+
+  private val chunkKeys = Seq("chunk", "key")
 
   /** Near-dup clustering + canonical election: connected components
     * over the near-dup pair graph (reusing the KG canonicalizer — the
@@ -537,7 +580,9 @@ object Dedup {
     graft.functions.CosineSim(a, b)
 
   /** Executor-side cosine — identical accumulation order to [[cosine]]
-    * (sequential double folds) so results agree bitwise.
+    * (sequential double folds) so results agree bitwise. NaN for a
+    * zero-norm side, where [[cosine]] is NULL: every loop that calls
+    * this skips NaN before [[round5]], which throws on it.
     */
   def cosineOf(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -590,8 +635,9 @@ object Dedup {
             else {
               val raw = cosineOf(m(i)._3, m(j)._3)
               // margin 1e-5 = 2x the 5dp rounding radius: everything a
-              // HALF_UP 5dp round could still lift to tau gets rounded
-              if (raw < t - 0.00001) None
+              // HALF_UP 5dp round could still lift to tau gets rounded;
+              // NaN (a zero norm) has no similarity
+              if (raw.isNaN || raw < t - 0.00001) None
               else {
                 val sim = round5(raw)
                 if (sim >= t) Some((m(i)._2, m(j)._2, sim)) else None
@@ -612,34 +658,16 @@ object Dedup {
     * verified by exact cosine ≥ tau. The self-join key is a small
     * integer — shuffle-friendly, AQE-splittable — and the bucket table
     * is narrow (no embedding duplication across tables; vectors are
-    * re-joined once for verification).
+    * re-joined once for verification). A zero-norm vector has no
+    * cosine (NULL), so it is never emitted.
     */
-  /** (vec_id, t, bucket) sign-hash table — shared by the pair operator
-    * (which lineage-cuts it) and the bucket-size diagnostic.
-    */
-  private def embeddingBucketTable(emb: DataFrame, tables: Int, bits: Int,
-      dim: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val planes = Similarity.hyperplanes(tables, bits, dim)
-    emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, v) =>
-          (0 until tables).iterator.map(t => (id, t, Similarity.bucketOf(v, planes(t))))
-        }
-      }
-      .toDF("vec_id", "t", "bucket")
-  }
-
   def embeddingNearDupPairsLsh(emb: DataFrame, tau: Double = 0.95,
       tables: Int = 4, bits: Int = 8, dim: Int = 64): DataFrame = {
     val spark = emb.sparkSession
-    import spark.implicits._
     // cut: both sides of the self-join consume this — without it the
     // tables×bits plane dot products over the corpus run twice (same
     // convention as the minhash/simhash signature tables)
-    val buckets = graft.util.Cut.cut(embeddingBucketTable(emb, tables, bits, dim))
+    val buckets = graft.util.Cut.cut(Similarity.signBuckets(emb, tables, bits, dim))
     // pin the bucket exchange at the configured shuffle parallelism
     // (same rationale as the n-gram posting list): the bucket table is
     // bytes-tiny but the self-join's output is quadratic per bucket,
@@ -647,11 +675,7 @@ object Dedup {
     // 2-3 tasks; the explicit repartition IS the join's exchange.
     val bk = buckets.repartition(
       spark.sessionState.conf.numShufflePartitions, col("t"), col("bucket"))
-    val cand = bk.as("a").join(bk.as("b"),
-        col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket") &&
-        col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
+    val cand = blockJoin(bk, bk, Seq("t", "bucket"), "vec_id", _ < _).distinct()
     val vecs = emb.select(col("vec_id").cast("long"), col("embedding"))
     // verify with the codegen'd CosineSim expression (identical
     // accumulation order to cosineOf — the contract [[cosine]]
@@ -666,6 +690,16 @@ object Dedup {
         round(cosine(col("va"), col("vb")), 5).as("sim"))
       .filter(col("sim") >= tau)
   }
+
+  /** Cap on the distinct benchmark shingle hashes [[decontaminate]]
+    * collects and broadcasts: 2^27 hashes × 8 bytes = 1 GiB as the
+    * broadcast sorted long array, the order of the annLink gazetteer
+    * cap (the collected Rows box each long, so the collect itself
+    * briefly holds several times that). An eval suite of 10^6
+    * documents × a few hundred shingles stays far below it; a corpus
+    * passed as the benchmark fails at the collect.
+    */
+  private val maxBenchmarkHashes: Long = 1L << 27
 
   /** Benchmark DECONTAMINATION — flag training documents that share
     * any word n-gram with an eval/benchmark set: the test-set-leakage
@@ -696,9 +730,13 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     val nn = n
-    val benchHashes: Array[Long] = benchmark.select(col("text")).as[String]
-      .mapPartitions(it => it.flatMap(t => shingleSet(t, nn).iterator.map(Portable.polyhash31)))
-      .distinct().collect().sorted
+    val benchHashes: Array[Long] = graft.util.Collect.bounded(
+        benchmark.select(col("text")).as[String]
+          .mapPartitions(it => it.flatMap(t => shingleSet(t, nn).iterator.map(Portable.polyhash31)))
+          .distinct().toDF(),
+        maxBenchmarkHashes, "decontaminate benchmark side",
+        "the benchmark must be the broadcastable eval set, not a corpus")
+      .map(_.getLong(0)).sorted
     val bc = spark.sparkContext.broadcast(benchHashes)
     docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
@@ -727,12 +765,6 @@ object Dedup {
   // the same tables the operators build (`BenchExtra --dedup-scale`
   // runs them on a 10× corpus; the bound spec pins the cap).
 
-  private def log2Hist(sizes: DataFrame, sizeCol: String, extraKeys: Seq[String] = Nil): DataFrame =
-    sizes.groupBy((extraKeys.map(col) :+
-        floor(log2(col(sizeCol))).cast("long").as("log2_size")): _*)
-      .agg(count(lit(1)).as("n"), max(col(sizeCol)).as("max_size"))
-      .orderBy((extraKeys :+ "log2_size").map(col): _*)
-
   /** Shingle document-frequency histogram of the n-gram inverted
     * index: one row per (stage, ⌊log2 df⌋) with shingle counts and the
     * stage max — `raw` is the unguarded posting list, `kept` is after
@@ -742,35 +774,22 @@ object Dedup {
     */
   def ngramDfHistogram(docs: DataFrame, n: Int = 3,
       maxDf: Long = defaultMaxDf): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val posting = docs.select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(it => it.flatMap { case (id, t) =>
-        shingleSet(t, n).iterator.map(s => (id, s)) })
-      .toDF("doc_id", "shingle")
-    val dfs = posting.groupBy("shingle").agg(count(lit(1)).as("df"))
+    val dfs = blockSizes(posting(shingleTable(docs, n)), Seq("shingle"))
     val staged = dfs.withColumn("stage", lit("raw")).unionByName(
-      dfs.filter(col("df") >= 2 && col("df") <= maxDf).withColumn("stage", lit("kept")))
-    log2Hist(staged, "df", Seq("stage"))
+      dfs.filter(kept(col("__df"), maxDf)).withColumn("stage", lit("kept")))
+    log2Hist(staged, Seq("stage"))
   }
 
   /** MinHash (band, bucket) blocking-key size histogram — the largest
     * bucket bounds the candidate self-join's worst key.
     */
   def minhashBucketHistogram(docs: DataFrame, n: Int = 3, bands: Int = 16,
-      rowsPerBand: Int = 4): DataFrame = {
-    val banded = minhashSigTable(docs, n, bands, rowsPerBand)
-      .select(col("doc_id"), posexplode(col("buckets")).as(Seq("band", "bucket")))
-    log2Hist(banded.groupBy("band", "bucket").agg(count(lit(1)).as("sz")), "sz")
-  }
+      rowsPerBand: Int = 4): DataFrame =
+    blockSizeHist(banded(minhashSigTable(docs, n, bands, rowsPerBand)), bandKeys)
 
   /** SimHash (chunk, key) blocking-key size histogram. */
-  def simhashKeyHistogram(docs: DataFrame): DataFrame = {
-    val chunked = simhashSigTable(docs)
-      .select(col("doc_id"), posexplode(col("chunks")).as(Seq("chunk", "key")))
-    log2Hist(chunked.groupBy("chunk", "key").agg(count(lit(1)).as("sz")), "sz")
-  }
+  def simhashKeyHistogram(docs: DataFrame): DataFrame =
+    blockSizeHist(chunked(simhashSigTable(docs)), chunkKeys)
 
   /** Embedding sign-hash (table, bucket) blocking-key size histogram —
     * same table builder AND same defaults as
@@ -782,6 +801,5 @@ object Dedup {
     */
   def embeddingBucketHistogram(emb: DataFrame, tables: Int = 4, bits: Int = 8,
       dim: Int = 64): DataFrame =
-    log2Hist(embeddingBucketTable(emb, tables, bits, dim)
-      .groupBy("t", "bucket").agg(count(lit(1)).as("sz")), "sz")
+    blockSizeHist(Similarity.signBuckets(emb, tables, bits, dim), Seq("t", "bucket"))
 }

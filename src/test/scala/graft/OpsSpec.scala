@@ -171,12 +171,31 @@ class OpsSpec extends AnyFunSuite {
     val q = emb.filter($"vec_id" < 2)
     val bf = Similarity.bruteForceTopK(emb, q, 3)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val lsh = Similarity.lshTopK(emb, q, 3, tables = 8, bits = 3, dim = 2)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    assert(lsh.nonEmpty && lsh.subsetOf(bf.union(lsh))) // sound candidates
+    val lshRows = Similarity.lshTopK(emb, q, 3, tables = 8, bits = 3, dim = 2)
+    // sound: every row is an exact brute-force pair with its exact sim
+    assertExactSims(lshRows, emb, q, corpusSize = 50)
+    val lsh = lshRows.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     // every returned neighbor really is a top candidate: recall vs bf
     val recall = (bf & lsh).size.toDouble / bf.size
     assert(recall >= 0.5, s"recall $recall too low for 2-D sign LSH with 8 tables")
+  }
+
+  /** Every (query_id, neighbor_id, sim) row of an approximate top-k is a
+    * pair of the exact brute-force ranking over the whole corpus (k ≥
+    * corpus size) with a bit-equal sim: the re-rank scores exactly.
+    */
+  private def assertExactSims(approx: org.apache.spark.sql.DataFrame,
+      emb: org.apache.spark.sql.DataFrame, q: org.apache.spark.sql.DataFrame,
+      corpusSize: Int): Unit = {
+    val exact = Similarity.bruteForceTopK(emb, q, corpusSize)
+      .select("query_id", "neighbor_id", "sim").as[(Long, Long, Double)].collect()
+      .map { case (a, b, sim) => (a, b) -> java.lang.Double.doubleToLongBits(sim) }.toMap
+    val rows = approx.select("query_id", "neighbor_id", "sim").as[(Long, Long, Double)].collect()
+    assert(rows.nonEmpty)
+    rows.foreach { case (a, b, sim) =>
+      assert(exact.get((a, b)).contains(java.lang.Double.doubleToLongBits(sim)),
+        s"($a, $b) sim $sim is not the exact cosine ${exact.get((a, b)).map(java.lang.Double.longBitsToDouble)}")
+    }
   }
 
   test("IVF top-k: sound candidates, decent recall, partitioning-invariant") {
@@ -184,13 +203,63 @@ class OpsSpec extends AnyFunSuite {
     val q = emb.filter($"vec_id" < 5)
     val bf = Similarity.bruteForceTopK(emb, q, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val ivf = Similarity.ivfTopK(emb, q, 5, nLists = 8, nprobe = 4)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    val ivfRows = Similarity.ivfTopK(emb, q, 5, nLists = 8, nprobe = 4)
+    assertExactSims(ivfRows, emb, q, corpusSize = emb.count().toInt)
+    val ivf = ivfRows.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (bf & ivf).size.toDouble / bf.size
     assert(recall >= 0.5, s"IVF recall $recall too low at nprobe=4/8 lists")
     val ivf2 = Similarity.ivfTopK(emb.repartition(13), q, 5, nLists = 8, nprobe = 4)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(ivf == ivf2, "IVF result changed under repartitioning")
+  }
+
+  test("a zero-norm embedding is never ranked or emitted, and no operator throws") {
+    import graft.link.Linker
+    // id 0 is the zero vector: the lowest id, so it also seeds an IVF list
+    val dim = 8
+    val rows = (0 until 21).map { i =>
+      (i.toLong, if (i == 0) Seq.fill(dim)(0f)
+        else Seq.tabulate(dim)(d => math.cos(i * 0.9 + d * (1 + i % 3)).toFloat))
+    }
+    val emb = rows.toDF("vec_id", "embedding")
+    val q = emb.filter($"vec_id" < 4)
+    def check(name: String, df: org.apache.spark.sql.DataFrame, ids: Seq[String],
+        sim: String): Unit = {
+      val out = df.select((ids :+ sim).map(col): _*).collect()
+      assert(out.nonEmpty, s"$name emitted nothing")
+      out.foreach { r =>
+        assert(ids.indices.forall(i => r.getLong(i) != 0L), s"$name emitted the zero vector: $r")
+        assert(!r.isNullAt(ids.length) && !r.getDouble(ids.length).isNaN, s"$name: $r")
+      }
+    }
+    val top = Seq("query_id", "neighbor_id")
+    check("bruteForceTopK", Similarity.bruteForceTopK(emb, q, k = 25), top, "sim")
+    check("lshTopK", Similarity.lshTopK(emb, q, k = 25, tables = 4, bits = 2, dim = dim),
+      top, "sim")
+    check("ivfTopK", Similarity.ivfTopK(emb, q, k = 25, nLists = 4, nprobe = 4, iters = 1),
+      top, "sim")
+    val ctxs = emb.select($"vec_id".as("ctx_id"), $"embedding")
+    val ents = emb.filter($"vec_id" % 3 === 0).select($"vec_id".as("entity_id"), $"embedding")
+    check("annLinkBrute", Linker.annLinkBrute(ctxs, ents, k = 25, dim = dim, minSim = -1.0),
+      Seq("ctx_id", "entity_id"), "sim")
+    check("annLinkCandidates", Linker.annLinkCandidates(ctxs, ents, k = 25, tables = 4,
+      bits = 2, dim = dim, minSim = -1.0), Seq("ctx_id", "entity_id"), "sim")
+    val pairs = Seq("id_a", "id_b")
+    check("embeddingNearDupPairs", Dedup.embeddingNearDupPairs(
+      emb.withColumn("label", lit(0)), tau = -1.0), pairs, "sim")
+    check("embeddingNearDupPairsLsh", Dedup.embeddingNearDupPairsLsh(emb, tau = -1.0,
+      tables = 4, bits = 2, dim = dim), pairs, "sim")
+  }
+
+  test("Collect.bounded: cap rows come back, cap + 1 rows throw naming caller and cap") {
+    import graft.util.Collect
+    val five = spark.range(5).toDF()
+    assert(Collect.bounded(five, 5, "spec", "none").map(_.getLong(0)).toSeq == (0L until 5L))
+    val e = intercept[IllegalArgumentException] {
+      Collect.bounded(five, 4, "the spec's caller", "shrink it")
+    }
+    assert(e.getMessage.contains("the spec's caller") && e.getMessage.contains(" 4 ") &&
+      e.getMessage.contains("shrink it"), e.getMessage)
   }
 
   // ---------- text analysis ----------
