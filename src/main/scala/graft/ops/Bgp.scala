@@ -98,38 +98,65 @@ object Bgp {
     s
   }
 
-  /** One pattern → a filtered projection of the triple table with one
-    * column per variable. A variable repeated WITHIN the pattern
+  /** One pattern → a filtered projection of its table with one column
+    * per variable: the triple table, or for an `iri+` predicate the
+    * path's [[closure]] standing in as an (s, o_lex) table. The terms
+    * are validated here, once. A variable repeated WITHIN the pattern
     * (e.g. `?x :p ?x`) becomes an equality filter and binds once.
     */
-  private def one(triples: DataFrame, pat: Pattern,
-      pathMaxIters: Int): DataFrame = pat.p match {
-    case P(iri) => transitive(triples, pat, iri, pathMaxIters)
-    case _      => direct(triples, pat)
+  private def one(triples: DataFrame, pat: Pattern, pathMaxIters: Int): DataFrame = {
+    def refuse(msg: String) = throw new IllegalArgumentException(msg)
+    (pat.s, pat.p, pat.o) match {
+      case (L(_), _, _) => refuse("subject cannot be a literal")
+      case (P(_), _, _) => refuse("a path term is only valid as predicate")
+      case (_, L(_), _) => refuse("predicate cannot be a literal")
+      case (_, _, P(_)) => refuse("a path term is only valid as predicate")
+      case (_, P(_), L(_)) => refuse("a transitive path chains IRIs; its object cannot be a literal")
+      case _ =>
+    }
+    var df = pat.p match {
+      case P(iri) => closure(triples, pat, iri, pathMaxIters)
+      case _      => triples
+    }
+    pat.s match {
+      case I(x) => df = df.filter(col("s") === lit(x))
+      case _    =>
+    }
+    pat.p match {
+      case I(x) => df = df.filter(col("p") === lit(x))
+      case _    =>
+    }
+    pat.o match {
+      case I(x) => df = df.filter(col("o_kind") === lit("iri") && col("o_lex") === lit(x))
+      case L(x) => df = df.filter(col("o_kind") === lit("literal") && col("o_lex") === lit(x))
+      case _    =>
+    }
+    // bind variables in position order s, p, o; a repeat filters instead
+    val binds = scala.collection.mutable.LinkedHashMap.empty[String, Column]
+    for ((t, c) <- Seq(pat.s -> col("s"), pat.p -> col("p"), pat.o -> col("o_lex"))) t match {
+      case V(n) => binds.get(n) match {
+        case Some(prev) => df = df.filter(prev === c)
+        case None       => binds += n -> c
+      }
+      case _ =>
+    }
+    df.select(binds.map { case (n, c) => c.as(n) }.toSeq: _*)
   }
 
-  /** `iri+` pattern: the predicate's edge closure plays the triple
-    * table, with (child, ancestor) standing in for (s, o_lex). A
+  /** `iri+` path as an (s, o_kind, o_lex) table: the predicate's edge
+    * closure, (child, ancestor) as (s, o_lex), every object an IRI. A
     * constant endpoint SEEDS the closure ([[graft.canon.Closure
     * .reaching]]) — BFS grows from the constant and materializes only
     * the pairs the pattern keeps, instead of the full |V|·depth
     * closure followed by a filter; both ends variable falls back to
     * the full closure.
     */
-  private def transitive(triples: DataFrame, pat: Pattern, iri: String,
+  private def closure(triples: DataFrame, pat: Pattern, iri: String,
       pathMaxIters: Int): DataFrame = {
-    (pat.s, pat.o) match {
-      case (L(_), _) => throw new IllegalArgumentException("subject cannot be a literal")
-      case (_, L(_)) => throw new IllegalArgumentException(
-        "a transitive path chains IRIs; its object cannot be a literal")
-      case (P(_), _) | (_, P(_)) =>
-        throw new IllegalArgumentException("a path term is only valid as predicate")
-      case _ =>
-    }
     val edges = triples
       .filter(col("p") === lit(iri) && col("o_kind") === lit("iri"))
       .select(col("s").as("child"), col("o_lex").as("parent"))
-    var df = (pat.s, pat.o) match {
+    val pairs = (pat.s, pat.o) match {
       case (_, I(x)) => // seed backwards from the object constant
         graft.canon.Closure.reaching(edges, x, pathMaxIters)
           .withColumn("ancestor", lit(x))
@@ -141,58 +168,6 @@ object Bgp {
           .withColumn("child", lit(y))
       case _ => graft.canon.Closure.ancestors(edges, pathMaxIters)
     }
-    pat.s match {
-      case I(x) => df = df.filter(col("child") === lit(x))
-      case _    =>
-    }
-    pat.o match {
-      case I(x) => df = df.filter(col("ancestor") === lit(x))
-      case _    =>
-    }
-    val binds = scala.collection.mutable.LinkedHashMap.empty[String, Column]
-    def bind(t: Term, c: Column): Unit = t match {
-      case V(n) => binds.get(n) match {
-        case Some(prev) => df = df.filter(prev === c)
-        case None       => binds += n -> c
-      }
-      case _ =>
-    }
-    bind(pat.s, col("child"))
-    bind(pat.o, col("ancestor"))
-    df.select(binds.map { case (n, c) => c.as(n) }.toSeq: _*)
-  }
-
-  private def direct(triples: DataFrame, pat: Pattern): DataFrame = {
-    var df = triples
-    pat.s match {
-      case I(x) => df = df.filter(col("s") === lit(x))
-      case L(_) => throw new IllegalArgumentException("subject cannot be a literal")
-      case P(_) => throw new IllegalArgumentException("a path term is only valid as predicate")
-      case V(_) =>
-    }
-    pat.p match {
-      case I(x) => df = df.filter(col("p") === lit(x))
-      case L(_) => throw new IllegalArgumentException("predicate cannot be a literal")
-      case _    =>
-    }
-    pat.o match {
-      case I(x) => df = df.filter(col("o_kind") === lit("iri") && col("o_lex") === lit(x))
-      case L(x) => df = df.filter(col("o_kind") === lit("literal") && col("o_lex") === lit(x))
-      case P(_) => throw new IllegalArgumentException("a path term is only valid as predicate")
-      case V(_) =>
-    }
-    // bind variables in position order s, p, o; a repeat filters instead
-    val binds = scala.collection.mutable.LinkedHashMap.empty[String, Column]
-    def bind(t: Term, c: Column): Unit = t match {
-      case V(n) => binds.get(n) match {
-        case Some(prev) => df = df.filter(prev === c)
-        case None       => binds += n -> c
-      }
-      case _ =>
-    }
-    bind(pat.s, col("s"))
-    bind(pat.p, col("p"))
-    bind(pat.o, col("o_lex"))
-    df.select(binds.map { case (n, c) => c.as(n) }.toSeq: _*)
+    pairs.select(col("child").as("s"), lit("iri").as("o_kind"), col("ancestor").as("o_lex"))
   }
 }

@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video payloads travel as
@@ -11,6 +14,15 @@ import org.apache.spark.sql.functions._
   * marker-segment walk reading SOF0/SOF2 frame headers, RIFF/WAVE
   * chunk walk reading fmt/data — no image/audio library needed
   * (VERDICT round 1, item 5: stub retired).
+  *
+  * The six operators share one private payload scan (`scan`): the
+  * typed `mapPartitions`, the NULL check and the `NonFatal` guard live
+  * there, so every operator only supplies its row function and its
+  * ok=false poison row. The pixel operators share one box filter
+  * ([[boxResample]], which takes the raster's row stride) and one P6
+  * encode → parse → dims check → raster sum round trip
+  * (`roundTripSum`); the two [[ThumbPpm]] operators also share the
+  * fit-box tail and differ only in how they decode the raster.
   *
   * Since the harness corpus has no media column, [[syntheticMedia]]
   * synthesizes REAL container bytes (valid marker/chunk structure)
@@ -179,42 +191,53 @@ object Multimodal {
     Some(PpmInfo(w, h, mv, i))
   }
 
-  /** Decode a (doc_id, media BINARY) frame into metadata rows.
-    * mapPartitions (not a per-row UDF) so a heavyweight decoder would
-    * initialize once per partition; narrow — no shuffle. Container is
-    * sniffed from magic bytes; unparseable payloads yield ok=false
-    * rows, never exceptions (a poison byte string must not kill a
-    * 100 TB job).
+  /** The one payload scan every operator below runs: the payload rides
+    * in its own BINARY column and a typed `mapPartitions` (not a
+    * per-row UDF) decodes it, so a heavyweight decoder would initialize
+    * once per partition; narrow — no shuffle. `row` turns one
+    * (doc_id, non-NULL payload) into the output row. A NULL payload, a
+    * `None` from `row` and any non-fatal throw from it become
+    * `poison(doc_id, n_bytes)` — an ok=false row, never an exception
+    * (a poison byte string must not kill a 100 TB job).
     */
-  def decodeMeta(spark: SparkSession, media: DataFrame): Dataset[MediaMeta] = {
-    import spark.implicits._
+  private def scan[T <: Product : TypeTag](media: DataFrame)(
+      row: (Long, Array[Byte]) => Option[T], poison: (Long, Long) => T): Dataset[T] =
     media.select(col("doc_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
+      .as(Encoders.product[(Long, Array[Byte])])
       .mapPartitions { it =>
         it.map { case (id, bytes) =>
           val n = if (bytes == null) 0L else bytes.length.toLong
-          try {
-          if (bytes != null && n >= 2 && bytes(0) == 0xff.toByte && bytes(1) == 0xd8.toByte) {
-            parseJpeg(bytes) match {
-              case Some((w, h, nc)) =>
-                MediaMeta(id, "jpeg", n, Some(w), Some(h), Some(nc), None, None, ok = true)
-              case None =>
-                MediaMeta(id, "jpeg", n, None, None, None, None, None, ok = false)
-            }
-          } else if (bytes != null && n >= 12 && bytes(0) == 'R' && bytes(1) == 'I') {
-            parseWav(bytes) match {
-              case Some((ch, rate, frames)) =>
-                MediaMeta(id, "wav", n, None, None, Some(ch), Some(rate), Some(frames), ok = true)
-              case None =>
-                MediaMeta(id, "wav", n, None, None, None, None, None, ok = false)
-            }
-          } else MediaMeta(id, "unknown", n, None, None, None, None, None, ok = false)
-          } catch { // the parsers are defensive, but the contract is absolute
-            case scala.util.control.NonFatal(_) =>
-              MediaMeta(id, "unknown", n, None, None, None, None, None, ok = false)
-          }
+          try { Option(bytes).flatMap(row(id, _)).getOrElse(poison(id, n)) }
+          catch { case NonFatal(_) => poison(id, n) }
         }
-      }
+      }(Encoders.product[T])
+
+  /** Decode a (doc_id, media BINARY) frame into metadata rows.
+    * Container is sniffed from magic bytes; a JPEG or WAV payload whose
+    * container does not parse keeps its kind, anything else is
+    * "unknown"; both are ok=false rows.
+    */
+  def decodeMeta(spark: SparkSession, media: DataFrame): Dataset[MediaMeta] = {
+    def unknown(id: Long, n: Long) =
+      MediaMeta(id, "unknown", n, None, None, None, None, None, ok = false)
+    scan(media)((id, bytes) => Some {
+      val n = bytes.length.toLong
+      if (n >= 2 && bytes(0) == 0xff.toByte && bytes(1) == 0xd8.toByte) {
+        parseJpeg(bytes) match {
+          case Some((w, h, nc)) =>
+            MediaMeta(id, "jpeg", n, Some(w), Some(h), Some(nc), None, None, ok = true)
+          case None =>
+            MediaMeta(id, "jpeg", n, None, None, None, None, None, ok = false)
+        }
+      } else if (n >= 12 && bytes(0) == 'R' && bytes(1) == 'I') {
+        parseWav(bytes) match {
+          case Some((ch, rate, frames)) =>
+            MediaMeta(id, "wav", n, None, None, Some(ch), Some(rate), Some(frames), ok = true)
+          case None =>
+            MediaMeta(id, "wav", n, None, None, None, None, None, ok = false)
+        }
+      } else unknown(id, n)
+    }, unknown)
   }
 
   // ---------- transform operators over the parsed containers ----------
@@ -250,58 +273,45 @@ object Multimodal {
     * the pixel-real JPEG route is [[thumbnailJpegPixels]] (JDK ImageIO
     * decode — spec-gated, since codec output is implementation-
     * defined); everything byte-level in this path is real.
-    * Non-JPEG payloads yield ok=false rows (poison tolerance), never
-    * exceptions. Narrow: mapPartitions, no shuffle.
+    * Non-JPEG payloads yield ok=false rows.
     */
-  def thumbnail(spark: SparkSession, media: DataFrame, maxSide: Long = 256L): Dataset[Thumb] = {
-    import spark.implicits._
-    media.select(col("doc_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val jpeg =
-            try { if (bytes == null) None else parseJpeg(bytes) }
-            catch { case scala.util.control.NonFatal(_) => None }
-          jpeg match {
-            case Some((w, h, _)) =>
-              val (tw, th) = fitBox(w, h, maxSide)
-              val out = synthJpeg(tw, th, 0)
-              val ok = parseJpeg(out).contains((tw, th, 3L))
-              Thumb(id, "jpeg", Some(w), Some(h), Some(tw), Some(th),
-                Some(out.length.toLong), ok)
-            case None =>
-              Thumb(id, "other", None, None, None, None, None, ok = false)
-          }
-        }
-      }
-  }
+  def thumbnail(spark: SparkSession, media: DataFrame, maxSide: Long = 256L): Dataset[Thumb] =
+    scan(media)((id, b) => parseJpeg(b).map { case (w, h, _) =>
+      val (tw, th) = fitBox(w, h, maxSide)
+      val out = synthJpeg(tw, th, 0)
+      Thumb(id, "jpeg", Some(w), Some(h), Some(tw), Some(th),
+        Some(out.length.toLong), parseJpeg(out).contains((tw, th, 3L)))
+    }, (id, _) => Thumb(id, "other", None, None, None, None, None, ok = false))
 
-  /** General integer box filter over an RGB raster: output tw×th, each
-    * output pixel (ox, oy) the floor-mean of its
+  /** General integer box filter over an RGB raster whose rows are
+    * `stride` pixels apart: output tw×th, each output pixel (ox, oy)
+    * the floor-mean of its
     * [⌊ox·w/tw⌋, ⌊(ox+1)·w/tw⌋) × [⌊oy·h/th⌋, ⌊(oy+1)·h/th⌋) input
-    * block per channel — the arbitrary-ratio generalization of
-    * [[resamplePpm]]'s factor-k filter (VERDICT round 3, next #5).
-    * The floor-division boundaries tile the raster exactly (every input
-    * pixel lands in exactly one block), so the arithmetic is integer-
-    * exact and SQL-re-derivable. Requires tw ≤ w and th ≤ h (what
-    * [[fitBox]] guarantees).
+    * block per channel. The floor-division boundaries tile the w×h
+    * block exactly (every input pixel lands in exactly one block), so
+    * the arithmetic is integer-exact and SQL-re-derivable. With
+    * w = k·tw and h = k·th over a wider raster (`stride` > w) it is
+    * [[resamplePpm]]'s factor-k filter over the top-left block.
+    * Requires tw ≤ w ≤ stride and th ≤ h (what [[fitBox]] guarantees).
     */
-  def boxResample(bytes: Array[Byte], dataOff: Int, w: Int, h: Int,
+  def boxResample(bytes: Array[Byte], dataOff: Int, stride: Int, w: Int, h: Int,
       tw: Int, th: Int): Array[Byte] = {
     val out = new Array[Byte](tw * th * 3)
     var oy = 0
     while (oy < th) {
-      val y0 = oy * h / th; val y1 = (oy + 1) * h / th
+      // Long products: with stride = w = k·tw (resamplePpm), ox·w
+      // passes 2³¹ once the output is ~46k px wide at k = 1
+      val y0 = (oy.toLong * h / th).toInt; val y1 = ((oy + 1).toLong * h / th).toInt
       var ox = 0
       while (ox < tw) {
-        val x0 = ox * w / tw; val x1 = (ox + 1) * w / tw
+        val x0 = (ox.toLong * w / tw).toInt; val x1 = ((ox + 1).toLong * w / tw).toInt
         var c = 0
         while (c < 3) {
           var sum = 0L
           var y = y0
           while (y < y1) {
             var x = x0
-            while (x < x1) { sum += bytes(dataOff + (y * w + x) * 3 + c) & 0xff; x += 1 }
+            while (x < x1) { sum += bytes(dataOff + (y * stride + x) * 3 + c) & 0xff; x += 1 }
             y += 1
           }
           out((oy * tw + ox) * 3 + c) = (sum / ((x1 - x0).toLong * (y1 - y0))).toByte
@@ -312,6 +322,21 @@ object Multimodal {
       oy += 1
     }
     out
+  }
+
+  /** The P6 round trip every pixel operator ends in: re-encode the
+    * w×h output raster as a real P6 container, re-parse it, check the
+    * dims and sum the round-tripped raster bytes. None when the
+    * re-parse does not give back w×h.
+    */
+  private def roundTripSum(w: Int, h: Int, px: Array[Byte]): Option[Long] = {
+    val enc = encodePpm(w, h, px)
+    parsePpm(enc).filter(p => p.width == w && p.height == h).map { p =>
+      var s = 0L
+      var k = p.dataOff
+      while (k < enc.length) { s += enc(k) & 0xff; k += 1 }
+      s
+    }
   }
 
   /** One pixel-real PPM thumbnail record: parsed dims, fit-box target
@@ -327,6 +352,22 @@ object Multimodal {
       out_sum: Option[Long],
       ok: Boolean)
 
+  /** The two [[ThumbPpm]] operators: `decode` yields an RGB raster
+    * (bytes, offset, w, h); the tail is shared — [[fitBox]] target
+    * dims → [[boxResample]] → [[roundTripSum]].
+    */
+  private def thumbRaster(media: DataFrame, kind: String, maxSide: Long)(
+      decode: Array[Byte] => Option[(Array[Byte], Int, Int, Int)]): Dataset[ThumbPpm] =
+    scan(media)((id, b) => decode(b).map { case (px, off, w, h) =>
+      val (tw, th) = fitBox(w, h, maxSide)
+      roundTripSum(tw.toInt, th.toInt, boxResample(px, off, w, w, h, tw.toInt, th.toInt)) match {
+        case Some(s) =>
+          ThumbPpm(id, kind, Some(w.toLong), Some(h.toLong), Some(tw), Some(th), Some(s), ok = true)
+        case None =>
+          ThumbPpm(id, kind, Some(w.toLong), Some(h.toLong), None, None, None, ok = false)
+      }
+    }, (id, _) => ThumbPpm(id, "other", None, None, None, None, None, ok = false))
+
   /** Pixel-real thumbnails for uncompressed P6 payloads: parse →
     * [[fitBox]] target dims → arbitrary-ratio [[boxResample]] →
     * re-encode a real P6 container → re-parse and sum its raster bytes
@@ -334,42 +375,14 @@ object Multimodal {
     * closing the loop [[thumbnail]] leaves open for JPEG (whose pixel
     * step stays metadata-only: no codec in this environment,
     * documented there). Non-PPM/junk payloads yield ok=false rows.
-    * Narrow: mapPartitions, no shuffle — scan-speed work bounded by
-    * the raster bytes.
+    * Scan-speed work bounded by the raster bytes.
     */
   def thumbnailPpm(spark: SparkSession, media: DataFrame,
-      maxSide: Long = 16L): Dataset[ThumbPpm] = {
-    import spark.implicits._
-    media.select(col("doc_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val info =
-            try { if (bytes == null) None else parsePpm(bytes) }
-            catch { case scala.util.control.NonFatal(_) => None }
-          info match {
-            case Some(p) if p.maxval == 255 && p.width >= 1 && p.height >= 1 =>
-              val w = p.width.toInt; val h = p.height.toInt
-              val (tw, th) = fitBox(w, h, maxSide)
-              val outPx = boxResample(bytes, p.dataOff, w, h, tw.toInt, th.toInt)
-              val enc = encodePpm(tw.toInt, th.toInt, outPx)
-              parsePpm(enc) match {
-                case Some(o2) if o2.width == tw && o2.height == th =>
-                  var s = 0L
-                  var k = o2.dataOff
-                  while (k < enc.length) { s += enc(k) & 0xff; k += 1 }
-                  ThumbPpm(id, "ppm", Some(p.width), Some(p.height),
-                    Some(tw), Some(th), Some(s), ok = true)
-                case _ =>
-                  ThumbPpm(id, "ppm", Some(p.width), Some(p.height),
-                    None, None, None, ok = false)
-              }
-            case _ =>
-              ThumbPpm(id, "other", None, None, None, None, None, ok = false)
-          }
-        }
-      }
-  }
+      maxSide: Long = 16L): Dataset[ThumbPpm] =
+    thumbRaster(media, "ppm", maxSide) { b =>
+      parsePpm(b).filter(_.maxval == 255)
+        .map(p => (b, p.dataOff, p.width.toInt, p.height.toInt))
+    }
 
   /** Pixel-REAL JPEG thumbnails via the JDK's bundled ImageIO JPEG
     * reader — no external dependency (VERDICT round 4, item 8): decode
@@ -384,61 +397,36 @@ object Multimodal {
     * cross-engine hash-exact contract would be dishonest — the honest
     * gate is the spec's encode→decode→resample round trip with a pixel
     * tolerance against the pre-encode raster. Undecodable or non-image
-    * payloads yield ok=false rows, never exceptions. Narrow:
-    * mapPartitions, no shuffle, work bounded by the decoded raster.
+    * payloads yield ok=false rows. Work bounded by the decoded raster.
     */
   def thumbnailJpegPixels(spark: SparkSession, media: DataFrame,
-      maxSide: Long = 16L): Dataset[ThumbPpm] = {
-    import spark.implicits._
-    media.select(col("doc_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val img =
-            try {
-              // only enter ImageIO for payloads that carry the JPEG
-              // SOI magic — ImageIO.read would happily decode PNGs
-              // etc., and this operator's contract is JPEG
-              if (bytes == null || bytes.length < 3 ||
-                (bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8) null
-              else javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            } catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null || img.getWidth < 1 || img.getHeight < 1)
-            ThumbPpm(id, "other", None, None, None, None, None, ok = false)
-          else {
-            val w = img.getWidth; val h = img.getHeight
-            val px = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val rgb = img.getRGB(x, y)
-                val o = (y * w + x) * 3
-                px(o) = ((rgb >> 16) & 0xff).toByte
-                px(o + 1) = ((rgb >> 8) & 0xff).toByte
-                px(o + 2) = (rgb & 0xff).toByte
-                x += 1
-              }
-              y += 1
+      maxSide: Long = 16L): Dataset[ThumbPpm] =
+    thumbRaster(media, "jpeg", maxSide) { b =>
+      // only enter ImageIO for payloads that carry the JPEG SOI magic —
+      // ImageIO.read would happily decode PNGs etc., and this
+      // operator's contract is JPEG
+      if (b.length < 3 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) None
+      else Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b)))
+        .filter(img => img.getWidth >= 1 && img.getHeight >= 1)
+        .map { img =>
+          val w = img.getWidth; val h = img.getHeight
+          val px = new Array[Byte](w * h * 3)
+          var y = 0
+          while (y < h) {
+            var x = 0
+            while (x < w) {
+              val rgb = img.getRGB(x, y)
+              val o = (y * w + x) * 3
+              px(o) = ((rgb >> 16) & 0xff).toByte
+              px(o + 1) = ((rgb >> 8) & 0xff).toByte
+              px(o + 2) = (rgb & 0xff).toByte
+              x += 1
             }
-            val (tw, th) = fitBox(w, h, maxSide)
-            val outPx = boxResample(px, 0, w, h, tw.toInt, th.toInt)
-            val enc = encodePpm(tw.toInt, th.toInt, outPx)
-            parsePpm(enc) match {
-              case Some(o2) if o2.width == tw && o2.height == th =>
-                var s = 0L
-                var k = o2.dataOff
-                while (k < enc.length) { s += enc(k) & 0xff; k += 1 }
-                ThumbPpm(id, "jpeg", Some(w.toLong), Some(h.toLong),
-                  Some(tw), Some(th), Some(s), ok = true)
-              case _ =>
-                ThumbPpm(id, "jpeg", Some(w.toLong), Some(h.toLong),
-                  None, None, None, ok = false)
-            }
+            y += 1
           }
+          (px, 0, w, h)
         }
-      }
-  }
+    }
 
   /** One frame-sample record: real PCM bytes read back from the data
     * chunk at every `every`-th frame, summed across channels.
@@ -455,43 +443,30 @@ object Multimodal {
     * read the interleaved 16-bit LE samples of frames 0, every,
     * 2·every, …, and fold them into an exact integer sum — the shape of
     * a keyframe/audio-feature extraction where only the per-frame
-    * decode is stubbed. Non-WAV payloads yield ok=false rows. Narrow.
+    * decode is stubbed. Non-WAV payloads yield ok=false rows.
     */
   def frameSample(spark: SparkSession, media: DataFrame, every: Long = 4L): Dataset[FrameStats] = {
     // caller-code error, not data poison: every <= 0 would never
     // advance the frame cursor — an infinite loop on an executor
     require(every > 0, s"frameSample every must be positive, got $every")
-    import spark.implicits._
-    media.select(col("doc_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val wav =
-            try { if (bytes == null) None else parseWavInfo(bytes) }
-            catch { case scala.util.control.NonFatal(_) => None }
-          wav match {
-            case Some(w) if w.bits == 16 =>
-              var f = 0L
-              var sampled = 0L
-              var sum = 0L
-              while (f < w.frames) {
-                var c = 0L
-                while (c < w.channels) {
-                  val off = (w.dataOff + (f * w.channels + c) * 2).toInt
-                  // sign-extend: real PCM is signed 16-bit (an unsigned
-                  // read would be off by 65536 per negative sample)
-                  sum += ((bytes(off) & 0xff) | (bytes(off + 1) << 8)).toShort.toLong
-                  c += 1
-                }
-                sampled += 1
-                f += every
-              }
-              FrameStats(id, "wav", Some(w.frames), Some(sampled), Some(sum), ok = true)
-            case _ =>
-              FrameStats(id, "other", None, None, None, ok = false)
-          }
+    scan(media)((id, bytes) => parseWavInfo(bytes).filter(_.bits == 16).map { w =>
+      var f = 0L
+      var sampled = 0L
+      var sum = 0L
+      while (f < w.frames) {
+        var c = 0L
+        while (c < w.channels) {
+          val off = (w.dataOff + (f * w.channels + c) * 2).toInt
+          // sign-extend: real PCM is signed 16-bit (an unsigned
+          // read would be off by 65536 per negative sample)
+          sum += ((bytes(off) & 0xff) | (bytes(off + 1) << 8)).toShort.toLong
+          c += 1
         }
+        sampled += 1
+        f += every
       }
+      FrameStats(id, "wav", Some(w.frames), Some(sampled), Some(sum), ok = true)
+    }, (id, _) => FrameStats(id, "other", None, None, None, ok = false))
   }
 
   /** One resample record: parsed source dims, downsampled dims, and
@@ -511,71 +486,27 @@ object Multimodal {
 
   /** Exact integer box-filter downsample over P6 rasters: each output
     * pixel is floor(mean) of its factor×factor input block per
-    * channel — REAL pixel arithmetic (the thumbnail operator's one
-    * stubbed step, now implemented for the uncompressed format). The
-    * result raster is re-encoded as a real P6 container and re-parsed;
-    * `out_sum` is summed from the round-tripped bytes. Inputs smaller
-    * than the factor, non-PPM payloads, or junk yield ok=false rows —
-    * poison tolerance, never exceptions. Narrow: mapPartitions, no
-    * shuffle; at 100 TB this is scan-speed work bounded by the raster
-    * bytes themselves.
+    * channel — [[boxResample]] over the top-left
+    * (w/factor·factor)×(h/factor·factor) block, so trailing rows and
+    * columns that fill no block are dropped. The result raster goes
+    * through [[roundTripSum]]; `out_sum` is summed from the
+    * round-tripped bytes. Inputs smaller than the factor, non-PPM
+    * payloads, or junk yield ok=false rows. At 100 TB this is
+    * scan-speed work bounded by the raster bytes themselves.
     */
   def resamplePpm(spark: SparkSession, media: DataFrame, factor: Int = 2): Dataset[Resample] = {
     require(factor > 0, s"resample factor must be positive, got $factor")
-    import spark.implicits._
-    media.select(col("doc_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val info =
-            try { if (bytes == null) None else parsePpm(bytes) }
-            catch { case scala.util.control.NonFatal(_) => None }
-          info match {
-            case Some(p) if p.maxval == 255 && p.width >= factor && p.height >= factor =>
-              val w = p.width.toInt; val h = p.height.toInt
-              val ow = w / factor; val oh = h / factor
-              val outPx = new Array[Byte](ow * oh * 3)
-              var oy = 0
-              while (oy < oh) {
-                var ox = 0
-                while (ox < ow) {
-                  var c = 0
-                  while (c < 3) {
-                    var sum = 0L
-                    var dy = 0
-                    while (dy < factor) {
-                      var dx = 0
-                      while (dx < factor) {
-                        val x = ox * factor + dx; val y = oy * factor + dy
-                        sum += bytes(p.dataOff + (y * w + x) * 3 + c) & 0xff
-                        dx += 1
-                      }
-                      dy += 1
-                    }
-                    outPx((oy * ow + ox) * 3 + c) = (sum / (factor * factor)).toByte
-                    c += 1
-                  }
-                  ox += 1
-                }
-                oy += 1
-              }
-              val enc = encodePpm(ow, oh, outPx)
-              parsePpm(enc) match {
-                case Some(o2) if o2.width == ow && o2.height == oh =>
-                  var s = 0L
-                  var k = o2.dataOff
-                  while (k < enc.length) { s += enc(k) & 0xff; k += 1 }
-                  Resample(id, "ppm", Some(p.width), Some(p.height),
-                    Some(ow.toLong), Some(oh.toLong), Some(s), ok = true)
-                case _ =>
-                  Resample(id, "ppm", Some(p.width), Some(p.height),
-                    None, None, None, ok = false)
-              }
-            case _ =>
-              Resample(id, "other", None, None, None, None, None, ok = false)
-          }
-        }
+    scan(media)((id, bytes) => parsePpm(bytes)
+      .filter(p => p.maxval == 255 && p.width >= factor && p.height >= factor).map { p =>
+      val w = p.width.toInt; val h = p.height.toInt
+      val ow = w / factor; val oh = h / factor
+      roundTripSum(ow, oh, boxResample(bytes, p.dataOff, w, ow * factor, oh * factor, ow, oh)) match {
+        case Some(s) => Resample(id, "ppm", Some(p.width), Some(p.height),
+          Some(ow.toLong), Some(oh.toLong), Some(s), ok = true)
+        case None => Resample(id, "ppm", Some(p.width), Some(p.height),
+          None, None, None, ok = false)
       }
+    }, (id, _) => Resample(id, "other", None, None, None, None, None, ok = false))
   }
 
   // ---------- deterministic synthetic container fixtures ----------

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DateType, IntegerType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, ShortType, TimestampNTZType, TimestampType}
 
 /** Optimizer rule rewriting a naive point-in-interval join into the
   * bin-bucketed equi join of [[graft.ops.RangeJoin]] — the one place
@@ -62,7 +62,8 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
     * the column family's epoch unit: raw integers / µs / days.
     */
   private def binnable(e: Expression): Boolean = e.dataType match {
-    case LongType | IntegerType | TimestampType | TimestampNTZType | DateType => true
+    case LongType | IntegerType | ShortType | ByteType |
+        TimestampType | TimestampNTZType | DateType => true
     case _ => false
   }
 
@@ -73,7 +74,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
     */
   private def toEpochLong(x: Expression): Expression = x.dataType match {
     case LongType         => x
-    case IntegerType      => Cast(x, LongType)
+    case IntegerType | ShortType | ByteType => Cast(x, LongType)
     case TimestampType    => UnixMicros(x)
     case TimestampNTZType =>
       // Cast is TimeZoneAwareExpression — post-analysis nothing fills

@@ -1195,14 +1195,22 @@ object Queries {
     * row from the naive global-window cumsum. A fresh temp store per
     * call: the RESUME path (manifest-committed skip, crash rewrite) is
     * pinned by its own spec; the harness row checks the artifacts'
-    * bookkeeping against independent SQL.
+    * bookkeeping against independent SQL. The returned manifest reads
+    * the store lazily, so the store is deleted when the JVM exits
+    * (Hadoop `FileSystem.deleteOnExit`), not when this call returns.
     */
   def textShardsManifest(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents").select(
       col("doc_id").cast("long").as("doc_id"), col("text"),
       size(graft.ops.TextOps.tokens(col("text"))).cast("long").as("n_tokens"))
-    val store = java.nio.file.Files.createTempDirectory("graft-shard-store").toString
-    graft.ops.Shards.packAndWrite(docs, "doc_id", "n_tokens", budget = 5000L, store)
+    // a file: URI, so the store lands in the local temp directory
+    // whatever the default file system is
+    val store = "file:" + java.nio.file.Files.createTempDirectory("graft-shard-store")
+    val manifest = graft.ops.Shards.packAndWrite(docs, "doc_id", "n_tokens", budget = 5000L, store)
+    val storePath = new org.apache.hadoop.fs.Path(store)
+    require(storePath.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(storePath),
+      s"shard store $store was not registered for deletion")
+    manifest
   }
 
   /** Stateful sessionization: the streaming path's three-long state

@@ -37,7 +37,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("reliable checkpointing: distributed loop correct with a checkpoint dir set") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
+    val dir = TestSpark.tempDir("graft-cc-ckpt")
     val sc = spark.sparkContext
     sc.setCheckpointDir(dir)
     try {

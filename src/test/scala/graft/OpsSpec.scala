@@ -393,7 +393,7 @@ class OpsSpec extends AnyFunSuite {
     // within a per-pixel codec budget of the exact resample of the
     // pre-encode raster (±4/channel is generous for q=1.0 on a smooth
     // gradient; a shuffled/garbage decode would miss by far more)
-    val exact = Multimodal.boxResample(raw, 0, w, h, 16, 12)
+    val exact = Multimodal.boxResample(raw, 0, w, w, h, 16, 12)
     val exactSum = exact.foldLeft(0L)((a, b) => a + (b & 0xff))
     val budget = 16L * 12L * 3L * 4L
     assert(math.abs(out(0L).out_sum.get - exactSum) <= budget,
@@ -451,6 +451,21 @@ class OpsSpec extends AnyFunSuite {
       out(3L).n_sampled.contains(fs.size.toLong) &&
       out(3L).sum_sampled.contains(expected))
     assert(!out(0L).ok && out(0L).kind == "other")
+  }
+
+  test("media poison: NULL, empty and junk payloads give one ok=false row each from all six operators") {
+    val media = Seq((1L, null: Array[Byte]), (2L, Array.emptyByteArray), (3L, Array[Byte](1, 2, 3)))
+      .toDF("doc_id", "media")
+    val rows = Seq(
+      "decodeMeta" -> Multimodal.decodeMeta(spark, media).collect().map(r => (r.doc_id, r.ok)),
+      "thumbnail" -> Multimodal.thumbnail(spark, media).collect().map(r => (r.doc_id, r.ok)),
+      "thumbnailPpm" -> Multimodal.thumbnailPpm(spark, media).collect().map(r => (r.doc_id, r.ok)),
+      "thumbnailJpegPixels" ->
+        Multimodal.thumbnailJpegPixels(spark, media).collect().map(r => (r.doc_id, r.ok)),
+      "frameSample" -> Multimodal.frameSample(spark, media).collect().map(r => (r.doc_id, r.ok)),
+      "resamplePpm" -> Multimodal.resamplePpm(spark, media).collect().map(r => (r.doc_id, r.ok)))
+    for ((op, got) <- rows)
+      assert(got.sorted.toSeq == Seq((1L, false), (2L, false), (3L, false)), op)
   }
 
   test("containment flags doc-inside-doc inclusion that Jaccard under-scores") {
@@ -622,7 +637,7 @@ class OpsSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "n_tokens")
 
     // one-shot: manifest == independent aggregation of the pack
-    val dir1 = Files.createTempDirectory("graft-shards-1").toString
+    val dir1 = TestSpark.tempDir("graft-shards-1")
     val m1 = Shards.packAndWrite(docs, "doc_id", "n_tokens", budget = 600L, dir1)
       .orderBy("shard").collect().map(_.toSeq).toList
     val expected = Shards.packByBudget(docs, "doc_id", "n_tokens", budget = 600L)
@@ -638,7 +653,7 @@ class OpsSpec extends AnyFunSuite {
     // crash between data write and manifest commit: shard files exist,
     // no manifest -> the next call must REWRITE and then commit,
     // converging to the one-shot manifest (not trust the partial store)
-    val dir2 = Files.createTempDirectory("graft-shards-2").toString
+    val dir2 = TestSpark.tempDir("graft-shards-2")
     val half = docs.filter($"doc_id" < 200L)
     half.withColumn("shard", lit(0L)).write.partitionBy("shard")
       .parquet(s"$dir2/shards") // partial, even wrongly-packed, data
@@ -952,6 +967,25 @@ class OpsSpec extends AnyFunSuite {
     assert(!r2.ok && r2.kind == "other")
   }
 
+  test("PPM resample: a 70000-px-wide raster keeps exact block bounds (ox·w past 2^31)") {
+    val (w, h, k) = (70000, 2, 2)
+    val in = Multimodal.synthPpm(w, h, 5)
+    val off = Multimodal.parsePpm(in).get.dataOff
+    // direct factor-k loop: output (ox, oy) averages input block
+    // [ox·k, ox·k+k) × [oy·k, oy·k+k)
+    var want = 0L
+    for (oy <- 0 until h / k; ox <- 0 until w / k; c <- 0 until 3) {
+      var s = 0L
+      for (dy <- 0 until k; dx <- 0 until k)
+        s += in(off + ((oy * k + dy) * w + ox * k + dx) * 3 + c) & 0xff
+      want += s / (k * k)
+    }
+    val r = Multimodal.resamplePpm(spark, Seq((1L, in)).toDF("doc_id", "media"), factor = k)
+      .collect().head
+    assert(r.ok && r.out_w.contains((w / k).toLong) && r.out_h.contains((h / k).toLong) &&
+      r.out_sum.contains(want), s"got $r, want out_sum $want")
+  }
+
   test("PPM thumbnail: arbitrary-ratio box filter — hand-computed 3→2, identity, poison") {
     // 3x1 -> 2x1 (maxSide 2): blocks tile by floor division —
     // ox=0 covers x∈[0,1), ox=1 covers x∈[1,3) (floor-mean of 2 px)
@@ -997,7 +1031,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("doclen quantiles: p50 AND p90 rows both present when a tiny lang collapses the indexes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-quant").toString
+    val dir = TestSpark.tempDir("graft-quant")
     Seq((1L, "xx", "one two"), (2L, "xx", "one two three"), (3L, "yy", "a b c d"))
       .toDF("doc_id", "lang", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

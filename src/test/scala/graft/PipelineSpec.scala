@@ -191,7 +191,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("resume-from-checkpoint ≡ single-shot (north rule resumability)") {
-    val dir = Files.createTempDirectory("graft-resume").toString
+    val dir = TestSpark.tempDir("graft-resume")
     val pages = Fixtures.pages(spark, 80, 7)
     val oneShot = toSet(Pipeline.run(spark, pages, cfg()))
 
@@ -217,7 +217,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("mid-write crash: triples landed, lineage not committed -> re-run converges to the identical set") {
-    val dir = Files.createTempDirectory("graft-crash").toString
+    val dir = TestSpark.tempDir("graft-crash")
     val pages = Fixtures.pages(spark, 60, 5)
     val c = cfg(Some(dir))
     val oneShot = toSet(Pipeline.run(spark, pages, c))
@@ -254,7 +254,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("edge append fails mid-run: no lineage for its buckets, resume equals one-shot") {
-    val dir = Files.createTempDirectory("graft-edgekill").toString
+    val dir = TestSpark.tempDir("graft-edgekill")
     val pages = Fixtures.pages(spark, 60, 5)
     val c = cfg(Some(dir))
     val oneShot = toSet(Pipeline.run(spark, pages, c))
@@ -288,7 +288,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("resumable run over a half-committed store reads each input page once") {
-    val dir = Files.createTempDirectory("graft-onepass").toString
+    val dir = TestSpark.tempDir("graft-onepass")
     val pages = Fixtures.pages(spark, 80, 7)
     val c = cfg(Some(dir))
     val oneShot = toSet(Pipeline.run(spark, pages, c))
@@ -303,7 +303,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("the store's pages, lineage and triples are read without a job; lineage is written as model.Lineage") {
-    val base = Files.createTempDirectory("graft-schemas").toString
+    val base = TestSpark.tempDir("graft-schemas")
     val pages = Fixtures.pages(spark, 40, 4)
     graft.sources.PageStore.write(pages, s"$base/pages", nBuckets = 8)
     Pipeline.runResumable(spark, graft.sources.PageStore.read(spark, s"$base/pages"),
@@ -320,7 +320,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("file: URI store: resumable run equals one-shot, a re-run skips every bucket") {
-    val dir = Files.createTempDirectory("graft-uri").toString
+    val dir = TestSpark.tempDir("graft-uri")
     val pages = Fixtures.pages(spark, 40, 4)
     val c = cfg(Some(s"file:$dir"))
     val (out1, m1) = Pipeline.runResumableWithMetrics(spark, pages, c)
@@ -331,7 +331,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("resumable run: the sink re-reads the executed stage B (no shuffle written) and writes triples_out lines") {
-    val dir = Files.createTempDirectory("graft-executed").toString
+    val dir = TestSpark.tempDir("graft-executed")
     val pages = Fixtures.pages(spark, 40, 4)
     val c = cfg(Some(dir))
     val (out, m) = Pipeline.runResumableWithMetrics(spark, pages, c)
@@ -344,7 +344,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("resumable run: every format writes the same from the executed frame as from the lazy one, lookup and join") {
-    val dir = Files.createTempDirectory("graft-formats").toString
+    val dir = TestSpark.tempDir("graft-formats")
     val pages = Fixtures.pages(spark, 40, 4)
     val c = cfg(Some(dir))
     Pipeline.runResumable(spark, pages, c)
@@ -372,7 +372,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("M2 metrics: counters persisted, resume reflected in skip counts") {
-    val dir = Files.createTempDirectory("graft-metrics").toString
+    val dir = TestSpark.tempDir("graft-metrics")
     val pages = Fixtures.pages(spark, 40, 4)
     val c = cfg(Some(dir))
     val (out1, m1) = Pipeline.runResumableWithMetrics(spark, pages, c)
@@ -386,7 +386,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("spark-submit surface: Submit.main runs end-to-end, resubmit resumes and converges") {
-    val base = Files.createTempDirectory("graft-submit").toString
+    val base = TestSpark.tempDir("graft-submit")
     val pages = Fixtures.pages(spark, 40, 4)
     pages.toDF().write.parquet(s"$base/pages")
     Files.writeString(java.nio.file.Paths.get(s"$base/desc.json"), Descriptors.imfJson)
@@ -413,7 +413,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("spark-submit surface: the metrics line is JSON for any run id") {
-    val base = Files.createTempDirectory("graft-submit-json").toString
+    val base = TestSpark.tempDir("graft-submit-json")
     Fixtures.pages(spark, 16, 2).toDF().write.parquet(s"$base/pages")
     Files.writeString(java.nio.file.Paths.get(s"$base/desc.json"), Descriptors.imfJson)
     val runId = "r\"1\\x"
@@ -429,7 +429,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("spark-submit surface: --descriptor and --gazetteer accept file: URIs (run and --delete)") {
-    val base = Files.createTempDirectory("graft-submit-uri").toString
+    val base = TestSpark.tempDir("graft-submit-uri")
     Fixtures.pages(spark, 40, 4).toDF().write.parquet(s"$base/pages")
     Files.writeString(java.nio.file.Paths.get(s"$base/desc.json"), Descriptors.imfJson)
     Files.writeString(java.nio.file.Paths.get(s"$base/gaz.csv"),
@@ -450,7 +450,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("spark-submit surface: --pack-shards lands the shard store; resubmit is a no-op") {
-    val base = Files.createTempDirectory("graft-packcli").toString
+    val base = TestSpark.tempDir("graft-packcli")
     (0L until 300L).map(i => (i, ("tok " * (1 + (i % 40).toInt)).trim))
       .toDF("doc_id", "text") // no n_tokens column -> Submit derives it
       .write.parquet(s"$base/docs")
@@ -472,7 +472,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("gazetteer-less resumable run: empty edge store reads back (schema inference regression)") {
-    val dir = Files.createTempDirectory("graft-noedges").toString
+    val dir = TestSpark.tempDir("graft-noedges")
     val c = cfg(Some(dir)).copy(gazetteer = Nil)
     val pages = Fixtures.pages(spark, 20, 2)
     // first run writes an edge-FREE edges/ dir (just _SUCCESS); both the
@@ -484,7 +484,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("M3 lifecycle delete: removes the owned store, refuses foreign hashes, idempotent") {
-    val base = Files.createTempDirectory("graft-delete").toString
+    val base = TestSpark.tempDir("graft-delete")
     val pages = Fixtures.pages(spark, 30, 3)
     val c = cfg(Some(s"$base/out"))
     Pipeline.runResumable(spark, pages, c).count()

@@ -44,7 +44,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("stage A's page cut: one narrow projection, html unread when text is trusted, text and hits computed once") {
     import graft.run.{Descriptors, Pipeline}
-    val dir = java.nio.file.Files.createTempDirectory("plan-pagecut").toString + "/pages"
+    val dir = TestSpark.tempDir("plan-pagecut") + "/pages"
     graft.sources.PageStore.write(graft.fixtures.Fixtures.pages(spark, 16, 2), dir, nBuckets = 4)
     val pages = graft.sources.PageStore.read(spark, dir)
     val cfg = Pipeline.Config(Descriptors.imfJson, graft.fixtures.Fixtures.gazetteer, nBuckets = 4)
@@ -273,6 +273,35 @@ class PlanAuditSpec extends AnyFunSuite {
     } finally {
       spark.experimental.extraOptimizations = saved
       spark.conf.unset(graft.plans.RangeJoinRewrite.BIN_WIDTH_KEY)
+    }
+  }
+
+  test("RangeJoinRewrite: fires on SHORT and BYTE columns, rows equal the nested loop") {
+    import spark.implicits._
+    val pts = (0 until 200).map(i => (i.toLong, (i * 37 % 120).toLong)).toDF("pid", "ts0")
+    val ivs = (0 until 40).map { i =>
+      val s = (i * 53 % 100).toLong; (s, s + i % 20)
+    }.toDF("s0", "e0")
+    for (t <- Seq("short", "byte")) {
+      val p = pts.select($"pid", $"ts0".cast(t).as("ts"))
+      val iv = ivs.select($"s0".cast(t).as("s"), $"e0".cast(t).as("e"))
+      def q = p.join(iv, $"ts" >= $"s" && $"ts" <= $"e")
+      val saved = spark.experimental.extraOptimizations
+      try {
+        val expected = q.collect().map(_.toSeq).toSet
+        assert(expected.nonEmpty)
+        assert(q.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
+
+        spark.experimental.extraOptimizations = saved :+ graft.plans.RangeJoinRewrite
+        spark.conf.set(graft.plans.RangeJoinRewrite.BIN_WIDTH_KEY, "16")
+        val plan = q.queryExecution.executedPlan.toString
+        assert(!plan.contains("BroadcastNestedLoopJoin") && plan.contains("__graft"),
+          s"rewrite must fire on $t columns:\n$plan")
+        assert(q.collect().map(_.toSeq).toSet == expected, t)
+      } finally {
+        spark.experimental.extraOptimizations = saved
+        spark.conf.unset(graft.plans.RangeJoinRewrite.BIN_WIDTH_KEY)
+      }
     }
   }
 

@@ -30,7 +30,7 @@ class SourcesAndSinksSpec extends AnyFunSuite {
     val lines = "Rank;Country;Int" +: Fixtures.imf.map { case (r, c, g) =>
       s"$r;$c;${Fixtures.grouped(g)}"
     }
-    val f = Files.createTempFile("imf", ".csv")
+    val f = java.nio.file.Paths.get(TestSpark.tempDir("imf"), "imf.csv")
     Files.writeString(f, lines.mkString("\n"))
     f.toString
   }
@@ -79,7 +79,7 @@ class SourcesAndSinksSpec extends AnyFunSuite {
   }
 
   test("S1 web: PageStore bucketed round-trip + bucket-pruned read") {
-    val dir = Files.createTempDirectory("pagestore").toString + "/pages"
+    val dir = TestSpark.tempDir("pagestore") + "/pages"
     val pages = Fixtures.pages(spark, 40, 4)
     graft.sources.PageStore.write(pages, dir, nBuckets = 8)
     val back = graft.sources.PageStore.read(spark, dir)
@@ -106,7 +106,7 @@ class SourcesAndSinksSpec extends AnyFunSuite {
     spark.read.text(dir).as[String].collect().toSeq
 
   test("K2: distributed sinks — nt, turtle, trig group and escape correctly") {
-    val base = Files.createTempDirectory("ser").toString
+    val base = TestSpark.tempDir("ser")
     Serializer.write(sampleTriples(), s"$base/nt", "nt")
     val nt = readText(s"$base/nt")
     assert(nt.length == 3) // deduped, graph dropped
@@ -139,7 +139,7 @@ class SourcesAndSinksSpec extends AnyFunSuite {
   ).toDF("s", "p", "o_kind", "o_lex", "o_datatype", "o_lang", "g"))
 
   test("K2: golden bytes of every format (distributed parts as sorted lines, documents whole)") {
-    val base = Files.createTempDirectory("sergolden").toString
+    val base = TestSpark.tempDir("sergolden")
     val pfx = Map("g" -> "http://g/", "xsd" -> "http://www.w3.org/2001/XMLSchema#")
     val ttl = Seq(
       "    <http://g/p1> \"12\"^^<http://www.w3.org/2001/XMLSchema#integer> .",
@@ -312,7 +312,7 @@ class SourcesAndSinksSpec extends AnyFunSuite {
   }
 
   test("K2: turtle/trig @prefix compaction — directives per part, safe PN_LOCAL fallback") {
-    val base = Files.createTempDirectory("serp").toString
+    val base = TestSpark.tempDir("serp")
     val pfx = Map("g" -> "http://g/", "xsd" -> "http://www.w3.org/2001/XMLSchema#")
     Serializer.writeTurtle(sampleTriples(), s"$base/ttl", prefixes = pfx)
     val ttl = readText(s"$base/ttl").mkString("\n")
@@ -373,14 +373,14 @@ class SourcesAndSinksSpec extends AnyFunSuite {
   }
 
   test("K2: driver-side documents write through Hadoop FileSystem (file: URI path)") {
-    val base = Files.createTempDirectory("serjsonld").toString
+    val base = TestSpark.tempDir("serjsonld")
     Serializer.write(sampleTriples(), s"file:$base/out/g.jsonld", "json-ld")
     assert(Files.readString(java.nio.file.Paths.get(s"$base/out/g.jsonld")) ==
       Serializer.toJsonLd(sampleTriples()))
   }
 
   test("K2: a driver-side document overwrites an earlier distributed output at the same path") {
-    val base = Files.createTempDirectory("seroverwrite").toString
+    val base = TestSpark.tempDir("seroverwrite")
     val out = s"$base/serialized"
     Serializer.write(sampleTriples(), out, "nquads")
     assert(new java.io.File(out).isDirectory)
@@ -390,7 +390,7 @@ class SourcesAndSinksSpec extends AnyFunSuite {
   }
 
   test("K3/K4: gzip sink + content negotiation table") {
-    val base = Files.createTempDirectory("sergz").toString
+    val base = TestSpark.tempDir("sergz")
     Serializer.write(sampleTriples(), s"$base/nq", "nquads", gzip = true)
     val files = new java.io.File(s"$base/nq").listFiles().map(_.getName)
     assert(files.exists(_.endsWith(".gz")))
@@ -417,7 +417,7 @@ class SourcesAndSinksSpec extends AnyFunSuite {
     assert(Serializer.formatFor("application/rdf+xml").contains("xml"))
     assert(Serializer.formatFor("application/xml").contains("trix"))
     // the alias also serializes
-    val base = Files.createTempDirectory("serrdfxml").toString
+    val base = TestSpark.tempDir("serrdfxml")
     Serializer.write(sampleTriples(), s"$base/g.rdf", "rdfxml")
     assert(new java.io.File(s"$base/g.rdf").exists())
   }
@@ -716,7 +716,7 @@ class SourcesAndSinksSpec extends AnyFunSuite {
   }
 
   test("streaming: checkpointed file pipe resumes exactly-once across restarts") {
-    val base = Files.createTempDirectory("filepipe").toString
+    val base = TestSpark.tempDir("filepipe")
     val inDir = s"$base/in"; val outDir = s"$base/out"; val ckDir = s"$base/ck"
     def events(r: Range) = r.map { i =>
       (i.toLong, new java.sql.Timestamp(1700000000000L + i * 1000L),
@@ -771,7 +771,7 @@ class SourcesAndSinksSpec extends AnyFunSuite {
   }
 
   test("streaming: checkpointed TRIPLE pipe is exactly-once across restarts") {
-    val base = Files.createTempDirectory("triplepipe").toString
+    val base = TestSpark.tempDir("triplepipe")
     val inDir = s"$base/in"; val outDir = s"$base/out"; val ckDir = s"$base/ck"
     def recs(r: Range) = r.map(i => (s"N$i", i.toLong, (i % 5).toLong))
       .toDF("name", "nationkey", "regionkey")

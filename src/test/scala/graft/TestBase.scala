@@ -19,6 +19,18 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A fresh local temp directory, deleted recursively when the test
+    * JVM exits (the local Hadoop `FileSystem.deleteOnExit`) rather
+    * than when the spec ends: a frame a spec returns may still read it
+    * lazily.
+    */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    require(local.deleteOnExit(new org.apache.hadoop.fs.Path(dir)), s"$dir was not registered for deletion")
+    dir
+  }
 }
 
 /** Independent re-implementation of the imf descriptor semantics —

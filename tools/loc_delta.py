@@ -13,8 +13,9 @@ Paths (default src/main) limit the files compared, as in `git diff`.
 """
 import subprocess, sys
 
-# (from, to, code, all): two recorded deltas this rule reproduces
-KNOWN = [("dc9c624", "c743b20", 44, 92), ("c743b20", "3c822de", 21, 85)]
+# (from, to, code, all): recorded deltas this rule reproduces
+KNOWN = [("dc9c624", "c743b20", 44, 92), ("c743b20", "3c822de", 21, 85),
+         ("3c822de", "068780b", -18, 7), ("eafe15c", "8f92068", -57, 70)]
 
 
 def git(*args):
